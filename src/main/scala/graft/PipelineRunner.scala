@@ -21,6 +21,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * stage's parquet, not a 40-stage logical plan, so Catalyst planning
   * cost and recovery cost stay constant as pipelines grow.
   *
+  * Read contract: a resumed stage and every stage's read-back go through
+  * [[Tables.parquet]] — one footer read on the driver and no Spark job,
+  * so a fully resumed run launches no job at all. Stage outputs are flat
+  * directories; a partitioned layout would keep Spark's partition
+  * discovery (`spark.read.parquet`).
+  *
   * A half-written stage directory (failure before commit) has no
   * `_SUCCESS`; the next run's `SaveMode.Overwrite` clears the partial
   * files before rewriting — the same convention the derived-source
@@ -65,11 +71,11 @@ object PipelineRunner {
         val fs = marker.getFileSystem(hadoopConf)
         if (fs.exists(marker)) {
           loaded += name
-          cur = spark.read.parquet(dir)
+          cur = Tables.parquet(spark, dir)
         } else {
           f(cur).write.mode(SaveMode.Overwrite).parquet(dir)
           computed += name
-          cur = spark.read.parquet(dir)
+          cur = Tables.parquet(spark, dir)
         }
       }
       (cur, Report(computed.result(), loaded.result()))

@@ -22,9 +22,9 @@ object Smoke {
   private def topIds(spark: SparkSession, dir: String, q: String): Set[Long] =
     SparkEntry.queries(q)(spark, dir).select("vec_id").collect().map(_.getLong(0)).toSet
 
-  /** Build (or reuse) the derived ×M corpus under /tmp — shared with
-    * [[GraphSmoke]] so every smoke main measures the same artifacts. */
-  private[graft] def ensureCorpus(spark: SparkSession, sfDir: String, dir: String,
+  /** Build (or reuse) the derived ×M corpus under /tmp, keyed by its
+    * multipliers so reruns measure the same artifacts. */
+  private def ensureCorpus(spark: SparkSession, sfDir: String, dir: String,
       docMult: Int, vecMult: Int): Unit = {
     if (!new java.io.File(s"$dir/documents.parquet", "_SUCCESS").exists()) {
       val docs = Tables.df(spark, sfDir, "documents")
@@ -72,9 +72,9 @@ object Smoke {
     val spark = Engine.session(master = s"local[$cpus]", appName = "graft-smoke")
     val dir = s"/tmp/graft_smoke/${new java.io.File(sfDir).getName}_d${docMult}_v$vecMult"
     ensureCorpus(spark, sfDir, dir, docMult, vecMult)
-    val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
-    val nVecs = spark.read.parquet(s"$dir/embeddings.parquet").count()
-    val nEvents = spark.read.parquet(s"$dir/events.parquet").count()
+    val nDocs = Tables.parquet(spark, s"$dir/documents.parquet").count()
+    val nVecs = Tables.parquet(spark, s"$dir/embeddings.parquet").count()
+    val nEvents = Tables.parquet(spark, s"$dir/events.parquet").count()
     println(s"SMOKE corpus: $nDocs docs, $nVecs vectors, $nEvents events at $dir")
 
     // --- ANN recall at scale (vs brute force on the same corpus) -------

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetShims
 
 /** Access to the driver-provided parquet tables (TESTDATA.md).
   *
@@ -8,8 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`CREATE EXTERNAL TABLE ... STORED AS PARQUET LOCATION ...`,
   * reference README.md:34, datafusion.proto:99-115): a table is a
   * file-backed parquet relation registered under a bare name. Schemas are
-  * self-described by parquet footers; Catalyst gets filter/column pushdown
-  * and partition pruning for free on these scans.
+  * self-described by parquet footers, read once on the driver by
+  * [[parquet]] and pinned into the read, so opening a table launches no
+  * Spark job; Catalyst gets filter/column pushdown and partition pruning
+  * for free on these scans.
   */
 object Tables {
   val tpch: Seq[String] =
@@ -19,9 +22,23 @@ object Tables {
   val extra: Seq[String] = Seq("events", "documents", "embeddings")
   val all: Seq[String] = tpch ++ extra
 
+  /** The engine's parquet read path for a file or a flat directory.
+    *
+    * The schema comes from one footer read on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.ParquetShims.schemaOf]]),
+    * not from the Spark job `spark.read.parquet` launches to infer it —
+    * like the reference, which pins each table's schema in the plan
+    * instead of running distributed work to learn it
+    * (datafusion.proto:104). No cache: every call re-reads the footer,
+    * so a rewritten directory is seen as it is. Hive-partitioned layouts
+    * (subdirectories) are rejected; they keep `spark.read.parquet` for
+    * its partition discovery. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ParquetShims.schemaOf(spark, path)).parquet(path)
+
   /** Read one table. Single parquet file today; at 100 TB this would be a
-    * directory of many files — `spark.read.parquet` handles both, splitting
-    * by `spark.sql.files.maxPartitionBytes`, so no code change at scale.
+    * directory of many files — [[parquet]] handles both, splitting by
+    * `spark.sql.files.maxPartitionBytes`, so no code change at scale.
     *
     * `events.ts` has shipped as both parquet TIMESTAMP(NANOS) — which
     * Spark's vectorized reader rejects, so we read it as raw nanos via
@@ -32,7 +49,7 @@ object Tables {
   def df(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = parquet(spark, s"$dir/$name.parquet")
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -53,7 +70,7 @@ object Tables {
           throw new IllegalStateException(
             s"events.ts: expected INT64 nanos or a parquet timestamp, got $other")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else parquet(spark, s"$dir/$name.parquet")
 
   /** Register every table as a temp view (idempotent), so both the
     * DataFrame API and `spark.sql` can address them by bare name. */

@@ -139,7 +139,7 @@ object IvfIndex {
   /** Load the (tiny) centroid table back — k rows to the driver, the
     * same thing a real IVF index keeps in RAM. */
   def loadCentroids(spark: org.apache.spark.sql.SparkSession, dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$dir/centroids").orderBy("cell")
+    graft.Tables.parquet(spark, s"$dir/centroids").orderBy("cell")
       .select("v").collect().map(_.getSeq[Double](0).toArray)
 
   /** Column: index of the nearest centroid (max cosine ≈ min L2 on

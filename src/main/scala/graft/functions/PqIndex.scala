@@ -60,7 +60,7 @@ object PqIndex {
   /** Load the codebook back (m·k rows to the driver — the same thing a
     * real PQ index keeps in RAM). */
   def loadCodebook(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(s"$dir/codebook").orderBy("s", "c").collect()
+    graft.Tables.parquet(spark, s"$dir/codebook").orderBy("s", "c").collect()
       .groupBy(_.getInt(0)).toArray.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
 

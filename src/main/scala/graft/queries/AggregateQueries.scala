@@ -462,25 +462,35 @@ object AggregateQueries {
         .groupBy("l_returnflag", "l_extendedprice")
         .agg(sum("w").as("w"), count(lit(1)).as("cnt"))
       coll.persist()
+      // The sketch job runs on its own single-use thread: a fresh thread
+      // inherits THIS query's SparkContext local properties (job group,
+      // tags), where a pooled global-executor thread would carry whatever
+      // query created it. It is awaited on every path — also when the
+      // exact chain throws — before `coll` is unpersisted under it.
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
       try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
+        import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
         val skF = Future {
           coll.groupBy("l_returnflag")
             .agg(wmedian(col("l_extendedprice"), col("w").cast("double")).as("wm"),
               sum("cnt").as("n"))
             .localCheckpoint(eager = true)
-        }
-        val exact = weightedMedianExactFrom(
-          coll.select("l_returnflag", "l_extendedprice", "w"), pin = true)
-        val sk = Await.result(skF, Duration.Inf)
+        }(ExecutionContext.fromExecutor(pool))
+        val exact =
+          try weightedMedianExactFrom(
+            coll.select("l_returnflag", "l_extendedprice", "w"), pin = true)
+          finally Await.ready(skF, Duration.Inf)
+        val sk = skF.value.get.get // rethrows the sketch job's failure
         sk.join(exact, "l_returnflag")
           .select(col("l_returnflag"), col("w_median_price"), col("n"),
             (abs(col("wm") - col("w_median_price")) <=
               abs(col("w_median_price")) * 0.01).as("wp_ok"))
           .orderBy("l_returnflag")
-      } finally coll.unpersist()
+      } finally {
+        pool.shutdown()
+        coll.unpersist()
+      }
     },
 
     // Exact weighted median as a full oracle row: the discrete weighted
@@ -637,7 +647,7 @@ object AggregateQueries {
       }
       val delta = partials(
         t(s, d, "lineitem").filter(col("l_shipdate") >= to_timestamp(lit(split))))
-      s.read.parquet(stateDir).unionByName(delta)
+      Tables.parquet(s, stateDir).unionByName(delta)
         .groupBy("l_suppkey").agg(
           sum(col("cnt")).as("n_items"),
           sum(col("sq")).cast("double").as("sum_qty"),

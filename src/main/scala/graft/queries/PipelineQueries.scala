@@ -255,6 +255,7 @@ object PipelineQueries {
       .head().getSeq[Double](0).toArray
     val probes = IvfIndex.probeCells(centers, qv, nProbe = 4)
     val qCol = array(qv.map(lit): _*)
+    // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
     s.read.parquet(s"$dir/cells")
       .filter(col("cell").isin(probes: _*))
       .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
@@ -297,6 +298,7 @@ object PipelineQueries {
       .head().getSeq[Double](0).toArray
     val probes = IvfIndex.probeCells(centers, qv, nProbe = 6)
     val qCol = array(qv.map(lit): _*)
+    // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
     s.read.parquet(s"$dir/cells")
       .filter(col("cell").isin(probes: _*))
       .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
@@ -323,7 +325,7 @@ object PipelineQueries {
     val qv = vecs(s, d).filter(col("vec_id") === 0).select("v")
       .head().getSeq[Double](0).toArray
     val lt = PqIndex.lookupTable(cb, qv)
-    val shortlist = s.read.parquet(s"$dir/encoded")
+    val shortlist = Tables.parquet(s, s"$dir/encoded")
       .select(col("vec_id"), PqIndex.adcScore(lt, col("codes")).as("approx"))
       .orderBy(col("approx").desc, col("vec_id"))
       .limit(100)
@@ -354,6 +356,7 @@ object PipelineQueries {
       .head().getSeq[Double](0).toArray
     val probes = IvfIndex.probeCells(centers, qv, nProbe = 4)
     val lt = PqIndex.lookupTable(cb, qv)
+    // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
     val shortlist = s.read.parquet(s"$dir/cells")
       .filter(col("cell").isin(probes: _*))
       .select(col("vec_id"), PqIndex.adcScore(lt, col("codes")).as("approx"))
@@ -397,6 +400,7 @@ object PipelineQueries {
       .head().getSeq[Double](0).toArray
     val probes = IvfIndex.probeCells(centers, qv, nProbe = 6)
     val lt = PqIndex.lookupTable(cb, qv)
+    // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
     val shortlist = s.read.parquet(s"$dir/cells")
       .filter(col("cell").isin(probes: _*))
       .select(col("vec_id"), PqIndex.adcScore(lt, col("codes")).as("approx"))
@@ -1041,7 +1045,7 @@ object PipelineQueries {
     * rebuilt the pipeline from scratch (~1 s × 8 at gate SF; flagged on
     * q_cur_leakage_audit in the round-10 verdict). */
   private[queries] def minhashPairsShared(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensureLshIndex(s, d)}/pairs")
+    Tables.parquet(s, s"${ensureLshIndex(s, d)}/pairs")
 
   /** Build-once-then-probe against the persisted LSH index: ensure the
     * two index artifacts exist under one commit marker (banded bucket
@@ -1285,7 +1289,7 @@ object PipelineQueries {
       .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
     val deltaSh = shingleDf(delta)
     val cand = bandKeys(deltaSh).withColumnRenamed("doc_id", "delta_id")
-      .join(s.read.parquet(s"$base/bands"), Seq("band", "h1", "h2"))
+      .join(Tables.parquet(s, s"$base/bands"), Seq("band", "h1", "h2"))
       .select(col("delta_id"), col("doc_id").as("corpus_id"))
       .distinct()
     // the delta batch is shingled once for both its consumers (band
@@ -1294,7 +1298,7 @@ object PipelineQueries {
     Qh.materializedWith(deltaSh)(
       cand
         .join(deltaSh.select(col("doc_id").as("delta_id"), col("sh").as("sha")), "delta_id")
-        .join(s.read.parquet(s"$base/shingles")
+        .join(Tables.parquet(s, s"$base/shingles")
             .select(col("doc_id").as("corpus_id"), col("sh").as("shb")),
           "corpus_id")
         .select(col("delta_id"), col("corpus_id"),
@@ -3361,7 +3365,7 @@ object PipelineQueries {
       val probes = lshDeltaProbe(s, d).select(col("delta_id"), col("corpus_id"))
       // existing edges come from the index's persisted PAIR artifact —
       // a columnar read, not a corpus re-shingle/re-band/re-verify
-      val pairs = s.read.parquet(s"${ensureLshIndex(s, d)}/pairs")
+      val pairs = Tables.parquet(s, s"${ensureLshIndex(s, d)}/pairs")
         .select(col("i"), col("j"))
       val edges = pairs.select(col("i").as("src"), col("j").as("dst"))
         .union(pairs.select(col("j").as("src"), col("i").as("dst")))
@@ -3407,7 +3411,7 @@ object PipelineQueries {
       // three probe recomputations. Exact integer counts; delta
       // vertices that acquired edges but close no triangles report 0.
       val probes = lshDeltaProbe(s, d).select(col("delta_id"), col("corpus_id"))
-      val p = s.read.parquet(s"${ensureLshIndex(s, d)}/pairs")
+      val p = Tables.parquet(s, s"${ensureLshIndex(s, d)}/pairs")
         .select(col("i"), col("j"))
       val nt = probes.as("a")
         .join(probes.as("b"),
@@ -5311,7 +5315,7 @@ object PipelineQueries {
       // is a columnar aggregate of the same artifact (the nightly
       // corpus-health read).
       val base = ensureBoilerIndex(s, d)
-      val art = s.read.parquet(s"$base/df")
+      val art = Tables.parquet(s, s"$base/df")
       val delta = t(s, d, "documents").filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 1000000).as("doc_id"), col("source"), col("text"))
       val dk = boilerplateSegs(delta)
@@ -7577,7 +7581,7 @@ object PipelineQueries {
       val mx = ud.agg(max("d")).collect()(0).getLong(0) // driver scalar: today
       val deltaSk = ud.filter(col("d") === mx)
         .groupBy("d").agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
-      val all = s.read.parquet(s"$base/sketches").unionAll(deltaSk)
+      val all = Tables.parquet(s, s"$base/sketches").unionAll(deltaSk)
       def est(n: Int, name: String) = all
         .filter(col("d") >= mx - (n - 1))
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as(name))

@@ -179,7 +179,7 @@ object SourceQueries {
         t(s, d, "customer").repartition(4).write.mode(SaveMode.Overwrite)
           .parquet(s"${cacheDir(d)}/customer_multi")
       }
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
         .orderBy("c_mktsegment")
     },
@@ -198,6 +198,7 @@ object SourceQueries {
         t(s, d, "orders").write.mode(SaveMode.Overwrite)
           .partitionBy("o_orderpriority").parquet(s"${cacheDir(d)}/orders_part")
       }
+      // Hive-partitioned: Spark's partition discovery, not Tables.parquet
       s.read.parquet(path)
         .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         .groupBy("o_orderpriority")
@@ -365,6 +366,8 @@ object SourceQueries {
         // materialize() checks for a root _SUCCESS marker
         java.nio.file.Files.createFile(java.nio.file.Paths.get(base, "_SUCCESS")): Unit
       }
+      // batch=N/ partitions with merged schemas: Spark's partition
+      // discovery and schema merge, not Tables.parquet
       s.read.option("mergeSchema", "true").parquet(path)
         .groupBy(coalesce(col("o_orderpriority"), lit("<legacy>")).as("priority"))
         .agg(count(lit(1)).as("n"), Qh.dsum(col("o_totalprice")).as("total"))
@@ -394,7 +397,7 @@ object SourceQueries {
             col("o_orderdate").as("odate")).as("fin"))
           .write.mode(SaveMode.Overwrite).parquet(base)
       }
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .groupBy(col("cust.priority").as("priority"))
         .agg(count(lit(1)).as("n"), Qh.dsum(col("fin.price")).as("total"))
         .orderBy("priority")
@@ -419,7 +422,7 @@ object SourceQueries {
       // this layout vs the time-sorted strawman; the oracle reads the
       // ORIGINAL events table — layout must never change results.
       val path = zorderedEvents(s, d)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("user_id").between(10, 19) &&
           col("ts") >= expr("timestamp'2024-01-10 00:00:00'") &&
           col("ts") < expr("timestamp'2024-01-12 00:00:00'"))

@@ -4,12 +4,13 @@ bench's >2x flags (round-16 verdict item #3: the REAL?-flag loop ran
 by hand three times in round 16 — once for an 8.8x phantom — and works;
 this automates it).
 
-Usage: tools/adjudicate.py BENCH_rNN.json SOLO_BENCH_OUTPUT [--threshold 2.0]
+Usage: tools/adjudicate.py BENCH_rNN.json SOLO_DUMP [--threshold 2.0]
 
-SOLO_BENCH_OUTPUT is the stdout of the flagged-queries-only run:
+SOLO_DUMP is the bench_scratch.json dump of the flagged-queries-only run
   SPARK_GRAFT_BENCH_ONLY=<names> SPARK_GRAFT_SF_DIR=... \
       tools/run_verify.sh graft.Bench
-(the last line holding a JSON object is taken, so log noise is fine).
+(a subset run writes its full record, per-query map included, there;
+its stdout carries only the contract scalars).
 
 Each flagged query's verdict, written into the bench JSON under
 "adjudication" and printed:
@@ -19,7 +20,6 @@ Each flagged query's verdict, written into the bench JSON under
                   regression; exit 1 so round_close fails loudly.
 """
 import json
-import re
 import sys
 
 from bench_flags import baseline_walls
@@ -30,13 +30,9 @@ def main():
     thr = 2.0
     if "--threshold" in sys.argv:
         thr = float(sys.argv[sys.argv.index("--threshold") + 1])
-    solo = None
-    for line in open(solo_path):
-        line = line.strip()
-        if line.startswith("{") and '"queries"' in line:
-            solo = json.loads(line)
-    if solo is None:
-        sys.exit(f"{solo_path}: no bench JSON line found")
+    solo = json.load(open(solo_path))
+    if "queries" not in solo:
+        sys.exit(f"{solo_path}: no per-query map in the bench dump")
     walls = baseline_walls()
     verdicts = {}
     regressed = 0

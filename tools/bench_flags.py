@@ -62,8 +62,8 @@ def main():
     bench = json.load(open(path))
     if "queries" not in bench and "parsed" in bench:
         bench = bench["parsed"]  # driver-written BENCH_rNN.json wrapper
-        if bench is None:
-            sys.exit(f"{path}: driver tail was truncated (parsed: null) — "
+        if bench is None or "queries" not in bench:
+            sys.exit(f"{path}: the parsed stdout line has no per-query map — "
                      "run this on the committed bench_last.json instead")
     walls = baseline_walls()
     queries = bench["queries"]

@@ -33,8 +33,9 @@ fi
 # bench JSON. A confirmed (still->2x-when-quiet) regression fails the
 # close.
 BENCH_LATEST=$(ls BENCH_r*.json 2>/dev/null | sort -V | tail -1)
-# the driver-written wrapper can carry a truncated tail (parsed: null);
-# the committed bench_last.json holds the same run's full JSON line
+# the driver-written wrapper carries only the stdout line's contract
+# scalars (or parsed: null for older, truncated tails); the committed
+# bench_last.json holds the same run's per-query record
 if [ -n "$BENCH_LATEST" ] && \
    ! python3 -c "import json, sys; d = json.load(open('$BENCH_LATEST')); sys.exit(0 if (d.get('queries') or (d.get('parsed') or {}).get('queries')) else 1)" 2>/dev/null; then
   echo "note: $BENCH_LATEST has no parsed queries — adjudicating bench_last.json instead"
@@ -50,11 +51,15 @@ if [ -n "$BENCH_LATEST" ] && [ -f "$BENCH_LATEST" ]; then
   else
     FLAGGED=$(python3 -c "import json; d = json.load(open('/tmp/graft_flags.json')); print(','.join(d['real'] + d['load'] + d['errored']))")
     echo "bench flags on $BENCH_LATEST: $FLAGGED — solo quiet re-bench..."
+    # the subset run writes its full record to bench_scratch.json (the
+    # stdout line is contract scalars only); clear it so a failed run
+    # cannot be adjudicated from a stale dump
+    rm -f bench_scratch.json
     SPARK_GRAFT_BENCH_ONLY="$FLAGGED" \
       SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
       RUNS="${RUNS:-1}" tools/run_verify.sh graft.Bench \
       > /tmp/graft_adjudicate.out 2>/tmp/graft_adjudicate.err
-    if ! python3 tools/adjudicate.py "$BENCH_LATEST" /tmp/graft_adjudicate.out; then
+    if ! python3 tools/adjudicate.py "$BENCH_LATEST" bench_scratch.json; then
       echo "round-close: CONFIRMED regression(s) — fix or re-record before closing"
       DIRTY=1
     fi
