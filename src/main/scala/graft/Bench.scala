@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every catalog query on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line for the driver.
   *
@@ -14,27 +12,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Graft's TypedImperativeAggregates (bounded_min_pairs/set, the
-      // sketches) all carry BOUNDED per-group state by design (the caps
-      // convention) — with Spark's default 128-key limit their partial
-      // aggregation falls back to SORT-based after the first 128 groups,
-      // turning a map-side k-reduction into a sort of the whole input
-      // stream (the mutual-NN sf10 candidate stream: ~1.4G rows, the
-      // round-15 decade wall). 2^17 keys x the designed worst ~600 B
-      // state is ~75 MB per task — inside the execution budget — while
-      // genuinely unbounded-cardinality groupings (gram postings) still
-      // fall back past the threshold as they should.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftMetrics.register(spark) // graft_* drop counters go to stderr, not the JSON line
 
     // Per-query progress to stderr (SPARK_GRAFT_BENCH_PROGRESS=1): decade
     // runs at 100× SF hang SILENTLY on a scale wall otherwise — the

@@ -318,11 +318,14 @@ class Engine(val spark: SparkSession) {
 }
 
 object Engine {
-  /** Build a session configured for the reference's execution semantics:
-    * AQE on (= the reference's stage-boundary re-optimization,
-    * execution_stage.rs:240-261), UTC, shuffle partitions sized to the
-    * machine rather than Spark's default 200. On a real cluster the same
-    * settings hold; only master/memory change. */
+  /** The one session builder: every main, the benchmark and the shared
+    * test session get their session here, so the engine that is
+    * verified, benchmarked and shipped is one configuration. Spark's
+    * defaults already give AQE with partition coalescing (= the
+    * reference's stage-boundary re-optimization,
+    * execution_stage.rs:240-261); on top: UTC, shuffle partitions sized
+    * to the machine rather than Spark's default 200. On a real cluster
+    * the same settings hold; only master/memory change. */
   def session(
       master: String = "local[*]",
       shufflePartitions: Int = 32,
@@ -332,11 +335,17 @@ object Engine {
       .appName(appName)
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded-state custom aggregates must hash, not sort-fall-back at
-      // 128 groups — see the Bench session builder note
+      // Graft's TypedImperativeAggregates (bounded_min_pairs/set, the
+      // sketches) all carry BOUNDED per-group state by design (the caps
+      // convention) — with Spark's default 128-key limit their partial
+      // aggregation falls back to SORT-based after the first 128 groups,
+      // turning a map-side k-reduction into a sort of the whole input
+      // stream (the mutual-NN sf10 candidate stream: ~1.4G rows, the
+      // round-15 decade wall). 2^17 keys x the designed worst ~600 B
+      // state is ~75 MB per task — inside the execution budget — while
+      // genuinely unbounded-cardinality groupings (gram postings) still
+      // fall back past the threshold as they should.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // CBO on engine-wide: ANALYZE'd tables get stats-driven join
       // strategy AND join order (q_join_stats_broadcast /
       // q_join_cbo_reorder prove both flips in PlanShapeSpec); tables

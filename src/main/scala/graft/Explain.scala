@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import graft.queries.Qh
 
 /** Plan-audit utility: prints the formatted physical plan of catalog
   * queries. Usage: Explain <sfDir> [queryName ...] (default: a headline
@@ -17,12 +17,7 @@ object Explain {
     val names = if (rest.length > 1) rest.drop(1).toSeq
       else Seq("q1_pricing_summary", "q_join_inner_agg", "q_dedup_minhash",
         "q_ann_bruteforce", "q_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session("local[4]", 4, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     // Inner-plan probes (the *PlanProbe convention): several catalog
     // queries eagerly checkpoint, so their PUBLIC plan is a checkpoint
@@ -36,8 +31,7 @@ object Explain {
       "probe_weighted_median" -> graft.queries.AggregateQueries.weightedMedianPlanProbe,
       "probe_mad_outliers" -> graft.queries.CurationQueries.madOutliersPlanProbe,
       "probe_bloom_decontam" -> ((s: SparkSession, d: String) =>
-        graft.queries.CurationQueries.bloomDecontam(s, d, materialize = false)
-          .queryExecution.explainString(ExplainMode.fromString("formatted"))),
+        Qh.formattedPlan(graft.queries.CurationQueries.bloomDecontam(s, d, materialize = false))),
       "probe_mutual_nn" -> graft.queries.PipelineQueries.mutualNnPlanProbe)
     names.foreach { n =>
       println(s"\n========== $n ==========")
@@ -53,7 +47,7 @@ object Explain {
           // THIS plan without materializing the frame on the driver
           // (OOM-safe, the Engine.explainAnalyze discipline).
           if (exec) df.queryExecution.toRdd.foreach(_ => ())
-          println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+          println(Qh.formattedPlan(df))
       }
     }
     spark.stop()

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
 
 /** Stage-level profiler for local iteration: runs the named catalog
-  * queries once (same session shape as [[Bench]]) with a listener that
+  * queries once (on [[Engine.session]], like [[Bench]]) with a listener that
   * aggregates, per query, the stage-metric axes that separate the three
   * failure modes a wall clock conflates —
   *
@@ -37,26 +36,7 @@ object Profile {
     val names = args.headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.catalog.map(_.name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Graft's TypedImperativeAggregates (bounded_min_pairs/set, the
-      // sketches) all carry BOUNDED per-group state by design (the caps
-      // convention) — with Spark's default 128-key limit their partial
-      // aggregation falls back to SORT-based after the first 128 groups,
-      // turning a map-side k-reduction into a sort of the whole input
-      // stream (the mutual-NN sf10 candidate stream: ~1.4G rows, the
-      // round-15 decade wall). 2^17 keys x the designed worst ~600 B
-      // state is ~75 MB per task — inside the execution budget — while
-      // genuinely unbounded-cardinality groupings (gram postings) still
-      // fall back past the threshold as they should.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_PROFILE_INITIAL_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt, "graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     // Written on the listener-bus thread, read/cleared on main: a plain

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Derive an N× corpus from a driver-provided scale factor — the 10×
@@ -80,14 +80,8 @@ object ScaleUp {
     val reps = if (args.length > 2) args(2).toInt else 10
     val off = if (args.length > 3) args(3).toLong else Off
     val signSeed = if (args.length > 4) Some(args(4).toInt) else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Engine.session(s"local[$cpus]", cpus, "graft-scaleup")
 
     def write(name: String)(build: Int => DataFrame): Unit = {
       val out = (0 until reps).map(build).reduce(_ unionAll _)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Graft's TypedImperativeAggregates (bounded_min_pairs/set, the
-      // sketches) all carry BOUNDED per-group state by design (the caps
-      // convention) — with Spark's default 128-key limit their partial
-      // aggregation falls back to SORT-based after the first 128 groups,
-      // turning a map-side k-reduction into a sort of the whole input
-      // stream (the mutual-NN sf10 candidate stream: ~1.4G rows, the
-      // round-15 decade wall). 2^17 keys x the designed worst ~600 B
-      // state is ~75 MB per task — inside the execution budget — while
-      // genuinely unbounded-cardinality groupings (gram postings) still
-      // fall back past the threshold as they should.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftMetrics.register(spark) // surface graft_* drop counters in the log
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Optional subset for fast local iteration (tools/check.py --only).
     val onlyFilter: String => Boolean =

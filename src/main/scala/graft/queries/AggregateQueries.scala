@@ -181,8 +181,7 @@ object AggregateQueries {
     * quantile path (round-16 rework: pid is value-derived from the
     * broadcast equi-depth bounds). */
   private[graft] def weightedMedianPlanProbe(s: SparkSession, d: String): String =
-    weightedMedianExact(s, d, pin = false).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    Qh.formattedPlan(weightedMedianExact(s, d, pin = false))
 
   val all: Seq[Q] = Seq(
 

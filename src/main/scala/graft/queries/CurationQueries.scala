@@ -176,10 +176,8 @@ object CurationQueries {
     * plan is a block scan). */
   private[graft] def dsirScoringPlan(s: SparkSession, d: String): String = {
     val toks = dsirHashedTokens(t(s, d, "documents"))
-    toks.join(broadcast(dsirLogRatios(toks)), "b")
-      .groupBy("doc_id").agg(sum(col("lrf")).as("wfp"))
-      .queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    Qh.formattedPlan(toks.join(broadcast(dsirLogRatios(toks)), "b")
+      .groupBy("doc_id").agg(sum(col("lrf")).as("wfp")))
   }
 
   /** The tokenize + sequential-prefix-sum CTEs shared by BOTH packing
@@ -235,8 +233,7 @@ object CurationQueries {
     * doc_id and that the corpus-scale window partitions on pid (the only
     * unpartitioned window is the ≤|partitions|-row offset frame). */
   private[graft] def packPlanProbe(s: SparkSession, d: String): String =
-    packMap(s, d)._2.queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    Qh.formattedPlan(packMap(s, d)._2)
 
   /** doc_id, quality, n_tokens — shared scoring projection. */
   private def scored(s: SparkSession, d: String): DataFrame =
@@ -2412,8 +2409,7 @@ object CurationQueries {
     * convention; since round 18 the catalog path is lazy, so this IS
     * the public plan). */
   private[graft] def madOutliersPlanProbe(s: SparkSession, d: String): String =
-    madOutliers(s, d).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    Qh.formattedPlan(madOutliers(s, d))
 
   /** The q_cur_bloom_decontam pipeline. `materialize = false` hands
     * PlanShapeSpec the raw plan (the catalog path localCheckpoints the

@@ -729,9 +729,7 @@ object PipelineQueries {
     * is a checkpoint scan, so the assertion lives on this inner frame,
     * the *PlanProbe convention). */
   private[graft] def mutualNnPlanProbe(s: SparkSession, d: String): String =
-    withMutualNnDist(s, d)((kx, ky) => kx.unionByName(ky).queryExecution
-      .explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+    withMutualNnDist(s, d)((kx, ky) => Qh.formattedPlan(kx.unionByName(ky)))
 
   /** Last-touch attribution — the marketing-analytics staple: each
     * purchase's revenue is credited to the LATEST non-purchase event by
@@ -1318,10 +1316,8 @@ object PipelineQueries {
     * is a scan of the checkpointed RDD): asserts live on the inner plan,
     * where the three shingle consumers must all read InMemoryTableScan. */
   private[graft] def minhashPlanProbe(s: SparkSession, d: String): String = {
-    val sh = shingled(s, d).persist()
-    try minhashPairsFrom(sh, LshBucketCap).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    finally sh.unpersist()
+    val sh = shingled(s, d)
+    Qh.planWith(sh)(minhashPairsFrom(sh, LshBucketCap))
   }
 
   /** Pass 1 + pass 2 of the heavy-hitters shape as a LAZY frame (the
@@ -1405,8 +1401,7 @@ object PipelineQueries {
     val pairs = minhashPairsShared(s, d).select("i", "j")
     val edges = pairs.select(col("i").as("src"), col("j").as("dst"))
       .union(pairs.select(col("j").as("src"), col("i").as("dst")))
-    pageRankScaled(edges, 3, pin = false).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    Qh.formattedPlan(pageRankScaled(edges, 3, pin = false))
   }
 
   private[graft] def pageRankScaled(
@@ -1584,10 +1579,8 @@ object PipelineQueries {
   /** Plan probe over a persisted shingle frame — see [[minhashPlanProbe]]. */
   private[graft] def ngramPlanProbe(s: SparkSession, d: String): String = {
     val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp).persist()
-    try ngramPairsFrom(shStr, sp, NgramDfCap).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    finally shStr.unpersist()
+    val shStr = shingled(s, d, sp)
+    Qh.planWith(shStr)(ngramPairsFrom(shStr, sp, NgramDfCap))
   }
 
   private def ngramPairsFrom(shStr: DataFrame, sp: Int, cap: Int): DataFrame = {
@@ -1737,20 +1730,16 @@ object PipelineQueries {
   /** Formatted plan of the boilerplate pipeline over a persisted segment
     * frame — for PlanShapeSpec (see [[minhashPlanProbe]]). */
   private[graft] def boilerplatePlanProbe(s: SparkSession, d: String): String = {
-    val seg = boilerplateSegs(t(s, d, "documents")).persist()
-    try boilerplateFrom(seg).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    finally seg.unpersist()
+    val seg = boilerplateSegs(t(s, d, "documents"))
+    Qh.planWith(seg)(boilerplateFrom(seg))
   }
 
   /** Formatted plan of the containment ssjoin over a persisted shingle
     * frame — for PlanShapeSpec. */
   private[graft] def containmentPlanProbe(s: SparkSession, d: String): String = {
     val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp).persist()
-    try containmentPairsFrom(shStr, sp, NgramDfCap).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    finally shStr.unpersist()
+    val shStr = shingled(s, d, sp)
+    Qh.planWith(shStr)(containmentPairsFrom(shStr, sp, NgramDfCap))
   }
 
   /** Ensure the persisted per-(source, segment-hash) document-frequency
@@ -2038,11 +2027,8 @@ object PipelineQueries {
     * frame — for PlanShapeSpec. */
   private[graft] def editDistPlanProbe(s: SparkSession, d: String): String = {
     val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val titles = editDistTitles(
-      t(s, d, "documents").select(col("doc_id"), col("text"))).persist()
-    try editDistFrom(titles, sp, 64).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    finally titles.unpersist()
+    val titles = editDistTitles(t(s, d, "documents").select(col("doc_id"), col("text")))
+    Qh.planWith(titles)(editDistFrom(titles, sp, 64))
   }
 
   /** Jaccard-decile pair histogram down to t = 0.5 — see the
@@ -2061,10 +2047,8 @@ object PipelineQueries {
     * stay pinned here, not only on the jaccard sibling). */
   private[graft] def sweepPlanProbe(s: SparkSession, d: String): String = {
     val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp).persist()
-    try sweepPairsFrom(shStr, sp, NgramDfCap).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    finally shStr.unpersist()
+    val shStr = shingled(s, d, sp)
+    Qh.planWith(shStr)(sweepPairsFrom(shStr, sp, NgramDfCap))
   }
 
   private def sweepPairsFrom(shStr: DataFrame, sp: Int, cap: Int): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -91,6 +92,19 @@ object Qh {
   def materializedWith(inputs: DataFrame*)(result: DataFrame): DataFrame = {
     inputs.foreach(_.persist())
     try result.localCheckpoint(eager = true)
+    finally inputs.foreach(_.unpersist())
+  }
+
+  /** The formatted physical plan of `df` (what PlanShapeSpec asserts on). */
+  def formattedPlan(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** The explain twin of [[materializedWith]]: persist `inputs`, return
+    * the formatted plan of `result` (built after the persist, so its
+    * consumers read InMemoryTableScan), then unpersist the inputs. */
+  def planWith(inputs: DataFrame*)(result: => DataFrame): String = {
+    inputs.foreach(_.persist())
+    try formattedPlan(result)
     finally inputs.foreach(_.unpersist())
   }
 

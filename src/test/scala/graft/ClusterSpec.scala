@@ -145,28 +145,17 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
     // the executor-command builder resolves the Scala version from a
     // build-layout marker dir when SPARK_SCALA_VERSION isn't set
     new java.io.File(home, "launcher/target/scala-2.13").mkdirs()
-    // Worker reads (spark.testing, spark.test.home) at construction; the
-    // props come off again in afterAll so later suites' sessions never
-    // see them.
+    // Worker reads (spark.testing, spark.test.home) at construction and
+    // the executor launch reads the spark.executor.extra* keys from the
+    // SparkConf, which loads spark.* system properties; the props come
+    // off again in afterAll so later suites' sessions never see them.
     sys.props("spark.testing") = "true"
     sys.props("spark.test.home") = home.getAbsolutePath
+    sys.props("spark.executor.extraClassPath") = sys.props("java.class.path")
+    sys.props("spark.executor.extraJavaOptions") =
+      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()
 
-    cs = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .appName("graft-cluster")
-      .withExtensions(new GraftExtensions)
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
-        org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded-state custom aggregates must hash, not sort-fall-back at
-      // 128 groups — see the Bench session builder note
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    cs.sparkContext.setLogLevel("WARN")
+    cs = Engine.session("local-cluster[2,2,1024]", 8, "graft-cluster")
   }
 
   override def afterAll(): Unit = {
@@ -174,6 +163,8 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
       if (cs != null) cs.stop()
       sys.props -= "spark.testing"
       sys.props -= "spark.test.home"
+      sys.props -= "spark.executor.extraClassPath"
+      sys.props -= "spark.executor.extraJavaOptions"
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       SparkTestBase.reset()

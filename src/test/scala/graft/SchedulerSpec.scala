@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.{SparkContext, TaskContext}
-import org.apache.spark.sql.SparkSession
 
 /** Scheduler-behavior parity (SURVEY.md §5 item d): the reference fails
   * the WHOLE job on any task failure (execution_graph.rs:292-293); Spark
@@ -14,11 +13,8 @@ class SchedulerSpec extends GraftSuite {
     // needs its own SparkContext (special master) — one context per JVM,
     // so park the shared one; it rebuilds lazily for later suites
     SparkTestBase.reset()
-    val s2 = SparkSession.builder()
-      .master("local[2, 2]") // 2 threads, maxFailures=2 → one retry
-      .appName("graft-retry")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 2 threads, maxFailures=2 → one retry
+    val s2 = Engine.session("local[2, 2]", 2, "graft-retry")
     assert(s2.sparkContext.master == "local[2, 2]",
       s"expected a fresh local[2,2] context, got ${s2.sparkContext.master}")
     try {

@@ -1,0 +1,40 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** One engine configuration: `Engine.session` is the only session
+  * builder in `src/main`, so the engine that is verified (Verify), the
+  * one that is benchmarked (Bench, perfbench) and the one that ships are
+  * the same, and the shared test session runs it too. */
+class SessionSpec extends GraftSuite {
+
+  test("Engine.scala holds the only SparkSession.builder in src/main") {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => Files.readString(p).contains("SparkSession.builder"))
+        .map((p: Path) => root.relativize(p).toString).toSeq.sorted
+      finally walk.close()
+    assert(hits == Seq("graft/Engine.scala"))
+  }
+
+  test("the shared test session carries Engine.session's policy") {
+    val conf = spark.sessionState.conf
+    def get(k: String): String = spark.conf.get(k)
+    assert(get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "131072")
+    assert(conf.cboEnabled && conf.joinReorderEnabled)
+    assert(conf.sessionLocalTimeZone == "UTC")
+    assert(get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
+    assert(conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled)
+    // GROUPS frames only parse through GraftExtensions' injected parser
+    val rows = spark.sql(
+      """SELECT k, count(*) OVER (ORDER BY k
+        |  GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) AS c
+        |FROM VALUES (1), (2), (2), (3) AS t(k) ORDER BY k, c""".stripMargin)
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(rows == Seq(1 -> 1L, 2 -> 3L, 2 -> 3L, 3 -> 3L))
+  }
+}

@@ -29,27 +29,7 @@ object SparkTestBase {
   }
 
   private def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Graft's TypedImperativeAggregates (bounded_min_pairs/set, the
-      // sketches) all carry BOUNDED per-group state by design (the caps
-      // convention) — with Spark's default 128-key limit their partial
-      // aggregation falls back to SORT-based after the first 128 groups,
-      // turning a map-side k-reduction into a sort of the whole input
-      // stream (the mutual-NN sf10 candidate stream: ~1.4G rows, the
-      // round-15 decade wall). 2^17 keys x the designed worst ~600 B
-      // state is ~75 MB per task — inside the execution budget — while
-      // genuinely unbounded-cardinality groupings (gram postings) still
-      // fall back past the threshold as they should.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Engine.session("local[4]", 4, "graft-test")
     // Targeted test-log hygiene (round-12 ADVICE #8): two categories of
     // EXPECTED warnings drowned real ones in `sbt test` stderr (round-12
     // count: 934 WindowExec "no partition defined" lines on the
@@ -63,7 +43,6 @@ object SparkTestBase {
     Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream", Level.ERROR)
-    GraftMetrics.register(s)
     s
   }
 

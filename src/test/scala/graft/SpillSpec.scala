@@ -37,6 +37,7 @@ class SpillSpec extends GraftSuite {
 
   private def freshSession(app: String): SparkSession = {
     SparkTestBase.reset() // own context: the spill knobs are env-level
+    // own builder, not Engine.session: it needs static memory + force-spill confs
     val s2 = SparkSession.builder()
       .master("local[2]")
       .appName(app)
@@ -116,16 +117,9 @@ class SpillSpec extends GraftSuite {
     // node — i.e. the graceful-degradation path still engages — and
     // (b) aggregate exactly.
     SparkTestBase.reset()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-objagg-fallback")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shipped session: the threshold under test is Engine.session's
+    val s2 = Engine.session("local[2]", 2, "graft-objagg-fallback")
     try {
-      s2.sparkContext.setLogLevel("WARN")
       val engine = new Engine(s2)
       // 2 input tasks x 300k distinct groups per task (id % 300000 hits
       // every group once per 300k-id half, so each task's partial map

@@ -20,7 +20,5 @@ exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-16g}" \
   -Dspark.local.dir="$LOCAL_DIR" \
   -Dspark.shuffle.sort.bypassMergeThreshold=1 \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
   "$MAIN" "$@"
