@@ -28,6 +28,9 @@ object Explain {
       "probe_minhash" -> graft.queries.PipelineQueries.minhashPlanProbe,
       "probe_ngram" -> graft.queries.PipelineQueries.ngramPlanProbe,
       "probe_sweep" -> graft.queries.PipelineQueries.sweepPlanProbe,
+      "probe_containment" -> graft.queries.PipelineQueries.containmentPlanProbe,
+      "probe_editdist" -> graft.queries.PipelineQueries.editDistPlanProbe,
+      "probe_boilerplate" -> graft.queries.PipelineQueries.boilerplatePlanProbe,
       "probe_weighted_median" -> graft.queries.AggregateQueries.weightedMedianPlanProbe,
       "probe_mad_outliers" -> graft.queries.CurationQueries.madOutliersPlanProbe,
       "probe_bloom_decontam" -> ((s: SparkSession, d: String) =>

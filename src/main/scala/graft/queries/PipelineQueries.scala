@@ -67,20 +67,19 @@ object PipelineQueries {
       .select(col("doc_id"),
         graft.functions.WordNgrams.word_ngrams(col("w"), lit(3)).as("sh"))
 
+  /** (doc_id, s0..s31): the 32 per-seed min-hashes behind [[bandKeys]],
+    * exposed so q_dedup_sig_estimate can certify the raw estimator. */
+  private def minhashSignatures(sh: DataFrame): DataFrame = {
+    val (_, hs) = SimJoin.hashed(sh)
+    hs.groupBy("doc_id")
+      .agg(min(xxhash64(col("g"), lit(0))).as("s0"),
+        (1 until 32).map(k => min(xxhash64(col("g"), lit(k))).as(s"s$k")): _*)
+  }
+
   /** (doc_id, band, h1, h2) LSH band keys of a shingled frame: 32
     * per-seed min-hashes (hash-once-then-per-seed — the 10× HOF trap
     * documented at q_dedup_minhash), paired into 16 two-row bands. Any
     * frame hashed with THIS function probes any index built with it. */
-  /** (doc_id, s0..s31): the 32 per-seed min-hashes behind [[bandKeys]],
-    * exposed so q_dedup_sig_estimate can certify the raw estimator. */
-  private def minhashSignatures(sh: DataFrame): DataFrame = {
-    val hs = sh.select(col("doc_id"),
-      explode(graft.functions.XxHash64Array.xxhash64_array(col("sh"))).as("h"))
-    hs.groupBy("doc_id")
-      .agg(min(xxhash64(col("h"), lit(0))).as("s0"),
-        (1 until 32).map(k => min(xxhash64(col("h"), lit(k))).as(s"s$k")): _*)
-  }
-
   private def bandKeys(sh: DataFrame): DataFrame = {
     val sig = minhashSignatures(sh)
     sig.select(col("doc_id"), explode(array(
@@ -172,10 +171,33 @@ object PipelineQueries {
       .orderBy(col("cs").desc, col("vec_id"))
   }
 
-  /** The raw index-path top-10 frames behind the certified ANN rows.
-    * `private[graft]` so the ScalaTest recall pins keep measuring the
-    * REAL index output (the catalog queries emit the certification
-    * frame, whose rows are the exact top-10 by construction). */
+  /** The shared ANN query vector (vec 0) of an embeddings frame — 64
+    * doubles of driver model state. */
+  private def queryVec(e: DataFrame): Array[Double] =
+    e.filter(col("vec_id") === 0).select("v").head().getSeq[Double](0).toArray
+
+  /** Exact cosine re-rank of candidate (vec_id, label, v) rows against
+    * `qv`: the top-10 by (cs desc, vec_id) — the tail every index path
+    * ends in. */
+  private def rerankTop10(cands: DataFrame, qv: Array[Double]): DataFrame =
+    cands.select(col("vec_id"), col("label"), cosine(col("v"), array(qv.map(lit): _*)).as("cs"))
+      .orderBy(col("cs").desc, col("vec_id"))
+      .limit(10)
+
+  /** PQ probe tail: one scan of `codes` (vec_id, codes) computing the ADC
+    * approximation against `qv`'s lookup table, a top-100 shortlist, and
+    * the exact re-rank of the shortlist's raw vectors from `e`, fetched
+    * by broadcast semi join. */
+  private def adcRerankTop10(codes: DataFrame, cb: Array[Array[Array[Double]]],
+      e: DataFrame, qv: Array[Double]): DataFrame = {
+    import graft.functions.PqIndex
+    val lt = PqIndex.lookupTable(cb, qv)
+    val shortlist = codes
+      .select(col("vec_id"), PqIndex.adcScore(lt, col("codes")).as("approx"))
+      .orderBy(col("approx").desc, col("vec_id"))
+      .limit(100)
+    rerankTop10(e.join(broadcast(shortlist.select("vec_id")), "vec_id"), qv)
+  }
 
   /** Random-hyperplane LSH: L=8 tables × 6 sign bits, multi-probe
     * radius 1 (the query probes its own bucket plus the 6 buckets one
@@ -226,15 +248,10 @@ object PipelineQueries {
     import graft.functions.IvfIndex
     val e = vecs(s, d)
     val centers = IvfIndex.trainCentroids(e.select(col("vec_id"), col("v")), k = 16)
-    val qv = e.filter(col("vec_id") === 0).select("v")
-      .head().getSeq[Double](0).toArray
+    val qv = queryVec(e)
     val probes = IvfIndex.probeCells(centers, qv, nProbe = 4)
-    val qCol = array(qv.map(lit): _*)
-    e.withColumn("cell", IvfIndex.cellCol(centers, col("v")))
-      .filter(col("cell").isin(probes: _*))
-      .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
-      .orderBy(col("cs").desc, col("vec_id"))
-      .limit(10)
+    rerankTop10(e.withColumn("cell", IvfIndex.cellCol(centers, col("v")))
+      .filter(col("cell").isin(probes: _*)), qv)
   }
 
   /** PERSISTED IVF index — the lifecycle a production ANN deployment
@@ -251,16 +268,10 @@ object PipelineQueries {
       IvfIndex.buildIndex(vecs(s, d), k = 16, dir)
     }
     val centers = IvfIndex.loadCentroids(s, dir)
-    val qv = vecs(s, d).filter(col("vec_id") === 0).select("v")
-      .head().getSeq[Double](0).toArray
+    val qv = queryVec(vecs(s, d))
     val probes = IvfIndex.probeCells(centers, qv, nProbe = 4)
-    val qCol = array(qv.map(lit): _*)
     // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
-    s.read.parquet(s"$dir/cells")
-      .filter(col("cell").isin(probes: _*))
-      .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
-      .orderBy(col("cs").desc, col("vec_id"))
-      .limit(10)
+    rerankTop10(s.read.parquet(s"$dir/cells").filter(col("cell").isin(probes: _*)), qv)
   }
 
   /** Incremental IVF upsert — the ingest lifecycle a production vector
@@ -294,16 +305,10 @@ object PipelineQueries {
         .parquet(s"$dir/commit")
     }
     val centers = IvfIndex.loadCentroids(s, dir)
-    val qv = e.filter(col("vec_id") === 0).select("v")
-      .head().getSeq[Double](0).toArray
+    val qv = queryVec(e)
     val probes = IvfIndex.probeCells(centers, qv, nProbe = 6)
-    val qCol = array(qv.map(lit): _*)
     // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
-    s.read.parquet(s"$dir/cells")
-      .filter(col("cell").isin(probes: _*))
-      .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
-      .orderBy(col("cs").desc, col("vec_id"))
-      .limit(10)
+    rerankTop10(s.read.parquet(s"$dir/cells").filter(col("cell").isin(probes: _*)), qv)
   }
 
   /** PQ: the memory half of the production ANN stack (IVF = where to
@@ -321,20 +326,9 @@ object PipelineQueries {
     SourceQueries.materialize(s"$dir/encoded") {
       PqIndex.buildIndex(vecs(s, d), m = 16, k = 32, dir)
     }
-    val cb = PqIndex.loadCodebook(s, dir)
-    val qv = vecs(s, d).filter(col("vec_id") === 0).select("v")
-      .head().getSeq[Double](0).toArray
-    val lt = PqIndex.lookupTable(cb, qv)
-    val shortlist = Tables.parquet(s, s"$dir/encoded")
-      .select(col("vec_id"), PqIndex.adcScore(lt, col("codes")).as("approx"))
-      .orderBy(col("approx").desc, col("vec_id"))
-      .limit(100)
-    val qCol = array(qv.map(lit): _*)
-    vecs(s, d)
-      .join(broadcast(shortlist.select("vec_id")), "vec_id")
-      .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
-      .orderBy(col("cs").desc, col("vec_id"))
-      .limit(10)
+    val e = vecs(s, d)
+    adcRerankTop10(Tables.parquet(s, s"$dir/encoded"), PqIndex.loadCodebook(s, dir),
+      e, queryVec(e))
   }
 
   /** IVF+PQ — the combined production index: IVF cells answer WHERE to
@@ -350,24 +344,12 @@ object PipelineQueries {
     SourceQueries.materialize(s"$dir/cells") {
       PqIndex.buildIvfPqIndex(vecs(s, d), kCells = 16, m = 16, k = 32, dir)
     }
-    val centers = IvfIndex.loadCentroids(s, dir)
-    val cb = PqIndex.loadCodebook(s, dir)
-    val qv = vecs(s, d).filter(col("vec_id") === 0).select("v")
-      .head().getSeq[Double](0).toArray
-    val probes = IvfIndex.probeCells(centers, qv, nProbe = 4)
-    val lt = PqIndex.lookupTable(cb, qv)
+    val e = vecs(s, d)
+    val qv = queryVec(e)
+    val probes = IvfIndex.probeCells(IvfIndex.loadCentroids(s, dir), qv, nProbe = 4)
     // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
-    val shortlist = s.read.parquet(s"$dir/cells")
-      .filter(col("cell").isin(probes: _*))
-      .select(col("vec_id"), PqIndex.adcScore(lt, col("codes")).as("approx"))
-      .orderBy(col("approx").desc, col("vec_id"))
-      .limit(100)
-    val qCol = array(qv.map(lit): _*)
-    vecs(s, d)
-      .join(broadcast(shortlist.select("vec_id")), "vec_id")
-      .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
-      .orderBy(col("cs").desc, col("vec_id"))
-      .limit(10)
+    adcRerankTop10(s.read.parquet(s"$dir/cells").filter(col("cell").isin(probes: _*)),
+      PqIndex.loadCodebook(s, dir), e, qv)
   }
 
   /** Incremental IVF+PQ upsert — the ingest path of the combined index:
@@ -394,23 +376,11 @@ object PipelineQueries {
       s.range(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$dir/commit")
     }
-    val centers = IvfIndex.loadCentroids(s, dir)
-    val cb = PqIndex.loadCodebook(s, dir)
-    val qv = e.filter(col("vec_id") === 0).select("v")
-      .head().getSeq[Double](0).toArray
-    val probes = IvfIndex.probeCells(centers, qv, nProbe = 6)
-    val lt = PqIndex.lookupTable(cb, qv)
+    val qv = queryVec(e)
+    val probes = IvfIndex.probeCells(IvfIndex.loadCentroids(s, dir), qv, nProbe = 6)
     // cells/ is partitioned by cell: Spark's partition discovery, not Tables.parquet
-    val shortlist = s.read.parquet(s"$dir/cells")
-      .filter(col("cell").isin(probes: _*))
-      .select(col("vec_id"), PqIndex.adcScore(lt, col("codes")).as("approx"))
-      .orderBy(col("approx").desc, col("vec_id"))
-      .limit(100)
-    val qCol = array(qv.map(lit): _*)
-    e.join(broadcast(shortlist.select("vec_id")), "vec_id")
-      .select(col("vec_id"), col("label"), cosine(col("v"), qCol).as("cs"))
-      .orderBy(col("cs").desc, col("vec_id"))
-      .limit(10)
+    adcRerankTop10(s.read.parquet(s"$dir/cells").filter(col("cell").isin(probes: _*)),
+      PqIndex.loadCodebook(s, dir), e, qv)
   }
 
   /** Exact IVF-refined cross-label candidate distances for
@@ -986,9 +956,10 @@ object PipelineQueries {
     * found, not all O(n²) pairs of it. */
   private[graft] val LshBucketCap = 64
 
-  /** Max document frequency for a shingle to participate in
-    * q_dedup_ngram_jaccard's inverted-index blocking (see the query for
-    * the recall argument and drop accounting). */
+  /** Posting cap (max ids kept per shingle) of the inverted-index
+    * blocking behind q_dedup_ngram_jaccard, q_dedup_containment and
+    * q_dedup_threshold_sweep (see [[SimJoin.cappedIds]] for the recall
+    * argument and drop accounting). */
   private[graft] val NgramDfCap = 50
 
   /** DuckDB CTE chain ending in `jpairs` = the exact near-dup pairs
@@ -1045,16 +1016,6 @@ object PipelineQueries {
   private[queries] def minhashPairsShared(s: SparkSession, d: String): DataFrame =
     Tables.parquet(s, s"${ensureLshIndex(s, d)}/pairs")
 
-  /** Build-once-then-probe against the persisted LSH index: ensure the
-    * two index artifacts exist under one commit marker (banded bucket
-    * table = probe keys; corpus shingle sets = verify payload), shingle
-    * the standard delta batch (every 10th doc re-ingested under
-    * +1000000 ids) with the SAME hash family, probe by (band, h1, h2)
-    * equi join, and exact-jaccard-verify only the candidates. Returns
-    * verified (delta_id, corpus_id, jac ≥ 0.8). Per-batch cost is
-    * O(delta) + bucket-key lookups, NOT O(corpus) — the index-probe
-    * core shared by q_dedup_incremental (the pairs themselves) and
-    * q_graph_incremental (centrality maintenance over the grown graph). */
   /** Filesystem-level fingerprint of the corpus behind `d`'s documents
     * table: (name, size, mtime) of every data file, digested. Keys the
     * LSH artifact directory so a corpus REWRITTEN IN PLACE (regenerated
@@ -1281,6 +1242,16 @@ object PipelineQueries {
     ensureLshIndex(s, d)
   }
 
+  /** Build-once-then-probe against the persisted LSH index: ensure the
+    * two index artifacts exist under one commit marker (banded bucket
+    * table = probe keys; corpus shingle sets = verify payload), shingle
+    * the standard delta batch (every 10th doc re-ingested under
+    * +1000000 ids) with the SAME hash family, probe by (band, h1, h2)
+    * equi join, and exact-jaccard-verify only the candidates. Returns
+    * verified (delta_id, corpus_id, jac ≥ 0.8). Per-batch cost is
+    * O(delta) + bucket-key lookups, NOT O(corpus) — the index-probe
+    * core shared by q_dedup_incremental (the pairs themselves) and
+    * q_graph_incremental (centrality maintenance over the grown graph). */
   private[queries] def lshDeltaProbe(s: SparkSession, d: String): DataFrame = {
     val base = ensureLshIndex(s, d)
     val delta = t(s, d, "documents").filter(col("doc_id") % 10 === 0)
@@ -1320,16 +1291,6 @@ object PipelineQueries {
     Qh.planWith(sh)(minhashPairsFrom(sh, LshBucketCap))
   }
 
-  /** Pass 1 + pass 2 of the heavy-hitters shape as a LAZY frame (the
-    * catalog query checkpoints it): the MG sketch aggregate nominates
-    * ≤m candidates (n_total rides the same aggregate — a second
-    * consumer would re-run the corpus pass) and the recount joins the
-    * exploded tokens against that broadcast candidate set. Exposed for
-    * PlanShapeSpec: broadcast join, never a token-keyed shuffle. */
-  /** Retention rollup over a distinct (user_id, wk) activity frame —
-    * the lazy inner form of q_events_retention (its public plan is a
-    * checkpoint scan; PlanShapeSpec probes this frame to pin that both
-    * consumers of `ev` read the cache, not a second events scan). */
   /** Winnowing fingerprint selection over a (doc_id, text) frame —
     * the lazy inner form of q_text_winnow, exposed so PipelineSpec can
     * drive adversarial frames (known shared passages) through it. */
@@ -1344,11 +1305,6 @@ object PipelineQueries {
         graft.functions.WinnowFps.winnow_fps(col("w")).as("fps"))
       .select(col("doc_id"), size(col("fps")).cast("bigint").as("n_fp"), col("fps"))
 
-  /** Fixed-point PageRank over a (src, dst) edge frame — the iteration
-    * core of q_graph_pagerank, exposed so PipelineSpec can drive known
-    * graphs (path/clique) through it and check the exact recurrence.
-    * Precondition: every vertex has out-degree >= 1 (symmetric edge
-    * sets satisfy it). Returns (v, od, r) with r scaled by 1e15. */
   /** Final (vec_id, vq, cid, dist) assignment of the fixed-point Lloyd's
     * run (k=4, 2 unrolled iterations) — the frame q_embed_kmeans rolls
     * up and q_cur_mix_topics samples from. Eager checkpoint: the
@@ -1404,6 +1360,11 @@ object PipelineQueries {
     Qh.formattedPlan(pageRankScaled(edges, 3, pin = false))
   }
 
+  /** Fixed-point PageRank over a (src, dst) edge frame — the iteration
+    * core of q_graph_pagerank, exposed so PipelineSpec can drive known
+    * graphs (path/clique) through it and check the exact recurrence.
+    * Precondition: every vertex has out-degree >= 1 (symmetric edge
+    * sets satisfy it). Returns (v, od, r) with r scaled by 1e15. */
   private[graft] def pageRankScaled(
       edges: DataFrame, iters: Int, pin: Boolean = true): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("od"))
@@ -1432,6 +1393,10 @@ object PipelineQueries {
     } finally if (pin) { edges.unpersist(); deg.unpersist() }
   }
 
+  /** Retention rollup over a distinct (user_id, wk) activity frame —
+    * the lazy inner form of q_events_retention (its public plan is a
+    * checkpoint scan; PlanShapeSpec probes this frame to pin that both
+    * consumers of `ev` read the cache, not a second events scan). */
   private[graft] def retentionMatrix(ev: DataFrame): DataFrame = {
     val cohort = ev.groupBy("user_id").agg(min("wk").as("cw"))
     ev.join(cohort, "user_id")
@@ -1440,6 +1405,12 @@ object PipelineQueries {
       .orderBy("cohort_week", "week_offset")
   }
 
+  /** Pass 1 + pass 2 of the heavy-hitters shape as a LAZY frame (the
+    * catalog query checkpoints it): the MG sketch aggregate nominates
+    * ≤m candidates (n_total rides the same aggregate — a second
+    * consumer would re-run the corpus pass) and the recount joins the
+    * exploded tokens against that broadcast candidate set. Exposed for
+    * PlanShapeSpec: broadcast join, never a token-keyed shuffle. */
   private[graft] def heavyHittersRecount(toks: DataFrame, m: Int): DataFrame = {
     val sketch = udaf(new graft.functions.FreqSketch(m),
       org.apache.spark.sql.Encoders.STRING)
@@ -1505,192 +1476,66 @@ object PipelineQueries {
   }
 
   private def minhashPairsFrom(sh: DataFrame, bucketCap: Int): DataFrame = {
-    val bands = bandKeys(sh)
-    // Bounded-at-the-map-side bucket materialization: partial buffers
-    // never exceed bucketCap ids (see BoundedMinSet), so the shuffle
-    // carries ≤ cap longs per bucket per partition — collect_set would
-    // ship and hold the whole mega-bucket in one row. The drop counters
-    // observe AFTER the size>1 filter (an oversized bucket always keeps
-    // cap ≥ 2 ids, so none can be filtered away) — there they see only
-    // the few multi-member buckets instead of every singleton.
-    val cand = bands
-      .groupBy("band", "h1", "h2")
-      .agg(graft.functions.BoundedMinSet.bounded_min_set(col("doc_id"), bucketCap).as("bs"))
-      .select(col("bs.ids").as("ids"), col("bs.n").as("bsz"))
-      .filter(size(col("ids")) > 1)
-      .observe("graft_lsh_bucket_cap",
-        sum(when(col("bsz") > bucketCap, lit(1)).otherwise(lit(0))).as("oversized_buckets"),
-        sum(when(col("bsz") > bucketCap, col("bsz") - bucketCap).otherwise(lit(0))).as("dropped_ids"))
-      // codegen'd pair enumeration (round 18) — see [[OrderedPairs]] for
-      // the exact-equality contract with the nested-HOF spelling
-      .select(explode(
-        graft.functions.OrderedPairs.ordered_pairs(col("ids"))).as("p"))
-      .select(col("p.i").as("i"), col("p.j").as("j"))
-      .distinct()
-    cand
-      // hybrid verify joins: SMJ on i (slim sort, compressed fat
-      // output), shuffle_hash on j (no fat sort) — see ngramPairsFrom
-      .join(sh.select(col("doc_id").as("i"), col("sh").as("sha")), "i")
-      .join(sh.select(col("doc_id").as("j"), col("sh").as("shb")).hint("shuffle_hash"), "j")
+    val ids = SimJoin.cappedIds(bandKeys(sh), Seq("band", "h1", "h2"), bucketCap,
+      "graft_lsh_bucket_cap", "oversized_buckets")
+    SimJoin.verifyJoin(SimJoin.pairs(ids), sh)
       .select(col("i"), col("j"),
         round(size(array_intersect(col("sha"), col("shb"))).cast("double") /
           size(array_union(col("sha"), col("shb"))), 9).as("jac"))
       .filter(col("jac") >= 0.8)
   }
 
-  /** Exact n-gram-Jaccard near-dup pairs via a df-bounded inverted index —
-    * the OTHER scalable candidate-generation strategy (complement to
-    * minhashPairs' banding): an index gram -> posting list, bounded at
-    * `cap` ids per gram, then exact Jaccard on the full shingle sets of
-    * candidate pairs. A pair at jaccard >= 0.8 shares ~80%+ of its
-    * shingles, so it shares a low-df one unless the corpus is pure
-    * boilerplate (at gate SF max df is 7 — blocking is provably lossless
-    * there; the all-pairs oracle checks it, and PipelineSpec proves
-    * capped == uncapped).
-    *
-    * Scale: the posting cap is what makes the index 100 TB-safe — a
-    * boilerplate gram shared by millions of docs would otherwise be one
-    * quadratic posting list. BoundedMinSet bounds each posting at the MAP
-    * side (the shuffle ships <= cap ids per gram per partition, never the
-    * posting list), any gram's pair fan-out is bounded at cap(cap-1)/2,
-    * and truncated grams are counted by a graft_* observe metric (no
-    * silent caps). Keeping the smallest `cap` ids (not dropping the gram)
-    * means a mega-cluster of near-identical docs is still FOUND via its
-    * cap smallest members — what the cap sacrifices is pair-completeness
-    * within that cluster, same documented tradeoff as the LSH bucket
-    * cap. */
   /** Eager form for the catalog query: the shingle frame feeds FOUR
     * consumers (postings ×2 via df-count + prefix, verify-join sides ×2)
     * — persisted for the one materializing job, dropped on return, same
     * rationale as [[minhashPairsShared]]. */
   private[queries] def ngramPairsShared(s: SparkSession, d: String): DataFrame = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp)
-    Qh.materializedWith(shStr)(ngramPairsFrom(shStr, sp, NgramDfCap))
+    val shStr = spreadShingles(s, d)
+    Qh.materializedWith(shStr)(ngramPairsFrom(shStr, NgramDfCap))
   }
 
   /** Lazy, self-contained form — see [[minhashPairs]] for why the
     * cap-equivalence / drop-counter tests need it. */
-  private[graft] def ngramJaccardPairs(s: SparkSession, d: String, cap: Int): DataFrame = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    ngramPairsFrom(shingled(s, d, sp), sp, cap)
-  }
+  private[graft] def ngramJaccardPairs(s: SparkSession, d: String, cap: Int): DataFrame =
+    ngramPairsFrom(spreadShingles(s, d), cap)
 
   /** Plan probe over a persisted shingle frame — see [[minhashPlanProbe]]. */
   private[graft] def ngramPlanProbe(s: SparkSession, d: String): String = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp)
-    Qh.planWith(shStr)(ngramPairsFrom(shStr, sp, NgramDfCap))
+    val shStr = spreadShingles(s, d)
+    Qh.planWith(shStr)(ngramPairsFrom(shStr, NgramDfCap))
   }
 
-  private def ngramPairsFrom(shStr: DataFrame, sp: Int, cap: Int): DataFrame = {
+  /** [[shingled]] spread over the session's shuffle partitions — the
+    * shingle input of the prefix-filter pair generators. */
+  private def spreadShingles(s: SparkSession, d: String): DataFrame =
+    shingled(s, d, s.conf.get("spark.sql.shuffle.partitions").toInt)
+
+  /** Exact n-gram-Jaccard near-dup pairs (i, j, n_common, jac ≥ 0.8) via
+    * a df-bounded inverted index — the OTHER scalable candidate-generation
+    * strategy (complement to minhashPairs' banding): an index gram ->
+    * posting list over each doc's 4/5 rarity prefix, bounded at `cap` ids
+    * per gram, then exact Jaccard on the full shingle sets of candidate
+    * pairs. A pair at jaccard >= 0.8 shares ~80%+ of its shingles, so it
+    * shares a low-df one unless the corpus is pure boilerplate (at gate
+    * SF max df is 7 — blocking is provably lossless there; the all-pairs
+    * oracle checks it, and PipelineSpec proves capped == uncapped). The
+    * cap costs the same pair-completeness within a mega-cluster as the
+    * LSH bucket cap. */
+  private def ngramPairsFrom(shStr: DataFrame, cap: Int): DataFrame = {
     val t = 0.8 // jaccard threshold (must match the oracle SQL)
-    // Hash each shingle string to a long ONCE and run every downstream
-    // stage (postings, df counts, window, set intersections) on longs —
-    // same hash-once discipline as minhashPairs; string set-ops on
-    // 60-element arrays across 100k+ candidate pairs measured ~4x the
-    // whole query's runtime. Exactness: intersection/union sizes equal
-    // the string sets' absent an xxhash64 collision within a compared
-    // pair (~1e-15 odds corpus-wide; the all-pairs DuckDB oracle would
-    // catch one as a hash mismatch).
-    // hashed ARRAYS only where the array itself is joined (verify step;
-    // no explode) — 5000 narrow rows
-    val sh = shStr.select(col("doc_id"), graft.functions.XxHash64Array.xxhash64_array(col("sh")).as("sh"))
-    // postings use the FUSED explode(transform(...)): projecting the
-    // hashed array first and exploding in a second select makes Generate
-    // materialize the 60-long array per row and measured 5x slower
-    // (4.1 s vs 0.7 s at sf0.1); the fused generator streams the longs.
-    // Also: no size(sh) column alongside the explode — CollapseProject
-    // would duplicate the whole interpreted shingle HOF chain into both
-    // expressions; |sh| is recovered from the per-doc window that exists
-    // anyway.
-    val posts = shStr.select(col("doc_id"),
-      explode(graft.functions.XxHash64Array.xxhash64_array(col("sh"))).as("g"))
-    // Global-rarity prefix filter (the canonical ssjoin/PPJoin probing
-    // prefix): order each doc's grams by (global df, gram) and index only
-    // the first floor((1-t)*n)+1 — a pair at jaccard >= t MUST collide
-    // within these prefixes (exact theorem, not probabilistic), and the
-    // rarity ordering puts the shortest posting lists in the index. On
-    // this corpus (small shared vocabulary: 27k grams, nearly all df>1 at
-    // sf0.1) naive share-any-gram blocking emits 1.27M candidates; the
-    // prefix filter emits 119k. The per-doc window is a doc_id-partitioned
-    // row_number over ~60 rows — scale-safe.
-    val dfg = posts.groupBy("g").agg(count(lit(1)).as("df"))
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("df"), col("g"))
-    val wholeDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    // broadcast(dfg): 27k aggregated rows — without the hint Spark's
-    // size guess broadcasts the 10x-bigger exploded posts side instead
-    // (and collecting THAT re-executes the shingle pipeline serially).
-    // Prefix length MUST be computed in exact integer arithmetic:
-    // n − ⌈t·n⌉ + 1 with t = 4/5, i.e. n − (4n+4) div 5 + 1. The float
-    // spelling floor((1−t)·n)+1 evaluates (1−0.8)·n as 1.999…96 for
-    // n = 10 (binary 0.2 is inexact), undersizing the prefix by one for
-    // every n ≡ 0 (mod 5) — which dropped a true boundary pair
-    // (sizes 8/10, jaccard exactly 0.8) from the sf0.1 candidates; the
-    // exact-oracle gate caught it. PipelineSpec pins the adversarial
-    // subset-pair shape.
-    val prefix = posts.join(broadcast(dfg), "g")
-      .withColumn("r", row_number().over(byRarity))
-      .withColumn("n", count(lit(1)).over(wholeDoc))
-      .filter(col("r") <= col("n") - expr("(4 * n + 4) div 5") + 1)
-      .select("doc_id", "g")
-    val postings = prefix.groupBy("g")
-      .agg(graft.functions.BoundedMinSet.bounded_min_set(col("doc_id"), cap).as("bs"))
-      .filter(col("bs.n") > 1)
-      .observe("graft_ngram_df_cap",
-        sum(when(col("bs.n") > cap, lit(1)).otherwise(lit(0))).as("truncated_grams"),
-        sum(when(col("bs.n") > cap, col("bs.n") - cap).otherwise(lit(0))).as("dropped_ids"))
-      .select(col("bs.ids").as("ids"))
-    val cand = postings
-      // codegen'd pair enumeration (round 18) — see [[OrderedPairs]] for
-      // the exact-equality contract with the nested-HOF spelling
-      .select(explode(
-        graft.functions.OrderedPairs.ordered_pairs(col("ids"))).as("p"))
-      .select(col("p.i").as("i"), col("p.j").as("j"))
-      .distinct()
-      // Candidate verification is CPU-heavy per row (two 60-element set
-      // ops) over few BYTES per row, so AQE's size-based coalescing
-      // collapses it to one partition and serializes it (measured 3.4 s
-      // on one thread). An explicit numbered repartition is exempt from
-      // AQE coalescing and keeps the verify stage wide. Key on `i` ONLY:
-      // a repartition on (i, j) is satisfied by the distinct's own
-      // hash(i, j) partitioning and gets elided — leaving the coalescable
-      // ENSURE_REQUIREMENTS exchange as the stage boundary again.
-      // (Round 17: repartition-before-dedup measured 1.7× WORSE here —
-      // see the note in sweepPairsFrom; distinct's map-side partial
-      // dedup is load-bearing.)
-      .repartition(sp, col("i"))
+    val (sh, posts) = SimJoin.hashed(shStr)
+    val ids = SimJoin.cappedIds(SimJoin.rarityPrefix(posts, 4, 5), Seq("g"), cap,
+      "graft_ngram_df_cap", "truncated_grams")
     // |a∩b| via the codegen'd IntersectCount (one hash-probe pass, no
     // intersection/union array materialization); |a∪b| is then pure
     // arithmetic over the (distinct-element) sizes.
-    // HYBRID verify joins, each measured on the sf10 decade corpus
-    // (graft.Profile stage listener):
-    //  - join-on-i stays sort-merge: it sorts only SLIM inputs (16-byte
-    //    candidate pairs; narrow doc rows), and its fat OUTPUT leaves
-    //    sorted by i — consecutive rows repeat the same sha array, so
-    //    the exchange feeding join-on-j LZ4-compresses ~3× better than
-    //    an unsorted stream (hinting BOTH joins ballooned the sweep
-    //    twin's shuffle write 8 → 22 GB).
-    //  - join-on-j is hinted shuffle_hash: the default SMJ would sort
-    //    the pair-scale stream WITH its carried 60-long arrays (the one
-    //    corpus-quadratic-payload sort in the family — 37 GB of spill,
-    //    85% of the sweep twin's task time at sf10); hashing builds
-    //    from the doc-scale sh side (provably the small one: docs ≪
-    //    candidate pairs whenever the index emits anything) and streams
-    //    the fat side unsorted.
-    // A third alternative — widening these exchanges ∝ corpus bytes —
-    // was measured and REJECTED: per-task overheads across the ~20
-    // corpus-pass stages doubled total CPU at 7× width.
     val ic = graft.functions.IntersectCount.intersect_count(col("sha"), col("shb"))
-    cand
-      .join(sh.select(col("doc_id").as("i"), col("sh").as("sha")), "i")
-      .join(sh.select(col("doc_id").as("j"), col("sh").as("shb")).hint("shuffle_hash"), "j")
+    SimJoin.verifyJoin(SimJoin.spread(SimJoin.pairs(ids)), sh)
       .select(col("i"), col("j"),
         ic.as("n_common"),
         round(ic.cast("double") /
           (size(col("sha")) + size(col("shb")) - ic), 9).as("jac"))
-      .filter(col("jac") >= 0.8)
+      .filter(col("jac") >= t)
       .orderBy("i", "j")
   }
 
@@ -1737,9 +1582,8 @@ object PipelineQueries {
   /** Formatted plan of the containment ssjoin over a persisted shingle
     * frame — for PlanShapeSpec. */
   private[graft] def containmentPlanProbe(s: SparkSession, d: String): String = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp)
-    Qh.planWith(shStr)(containmentPairsFrom(shStr, sp, NgramDfCap))
+    val shStr = spreadShingles(s, d)
+    Qh.planWith(shStr)(containmentPairsFrom(shStr, NgramDfCap))
   }
 
   /** Ensure the persisted per-(source, segment-hash) document-frequency
@@ -1770,54 +1614,29 @@ object PipelineQueries {
     * o = ⌈0.9·n_small⌉ required shared grams), and the shared gram can
     * sit ANYWHERE in the larger doc — so the index joins each doc's
     * prefix (n − ⌈0.9n⌉ + 1 rarest grams, exact integer spelling) against
-    * FULL df-capped postings, not prefix×prefix. Same hash-once /
-    * bounded-posting / observe()-counted-drops discipline as
-    * [[ngramPairsFrom]]; verification is one IntersectCount pass per
-    * candidate. */
+    * FULL df-capped postings, not prefix×prefix. Verification is one
+    * IntersectCount pass per candidate. */
   private[queries] def containmentPairsShared(s: SparkSession, d: String): DataFrame = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp)
-    Qh.materializedWith(shStr)(containmentPairsFrom(shStr, sp, NgramDfCap))
+    val shStr = spreadShingles(s, d)
+    Qh.materializedWith(shStr)(containmentPairsFrom(shStr, NgramDfCap))
   }
 
   /** Lazy, self-contained form for PipelineSpec fixture tests. */
-  private[graft] def containmentPairs(df: DataFrame, sp: Int, cap: Int): DataFrame =
-    containmentPairsFrom(shingleDf(df), sp, cap)
+  private[graft] def containmentPairs(df: DataFrame, cap: Int): DataFrame =
+    containmentPairsFrom(shingleDf(df), cap)
 
-  private def containmentPairsFrom(shStr: DataFrame, sp: Int, cap: Int): DataFrame = {
-    val sh = shStr.select(col("doc_id"), graft.functions.XxHash64Array.xxhash64_array(col("sh")).as("sh"))
-    val posts = shStr.select(col("doc_id"),
-      explode(graft.functions.XxHash64Array.xxhash64_array(col("sh"))).as("g"))
-    val dfg = posts.groupBy("g").agg(count(lit(1)).as("df"))
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("df"), col("g"))
-    val wholeDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    // prefix length n − ⌈0.9n⌉ + 1 = n − (9n+9) div 10 + 1 — integer-exact
-    // (the float spelling undersizes at n ≡ 0 (mod 10); see the jaccard
-    // boundary-pair incident at ngramPairsFrom)
-    val prefix = posts.join(broadcast(dfg), "g")
-      .withColumn("r", row_number().over(byRarity))
-      .withColumn("n", count(lit(1)).over(wholeDoc))
-      .filter(col("r") <= col("n") - expr("(9 * n + 9) div 10") + 1)
-      .select(col("doc_id").as("a"), col("g"))
-    val fullPostings = posts.groupBy("g")
-      .agg(graft.functions.BoundedMinSet.bounded_min_set(col("doc_id"), cap).as("bs"))
-      .observe("graft_containment_df_cap",
-        sum(when(col("bs.n") > cap, lit(1)).otherwise(lit(0))).as("truncated_grams"),
-        sum(when(col("bs.n") > cap, col("bs.n") - cap).otherwise(lit(0))).as("dropped_ids"))
-      .select(col("g"), col("bs.ids").as("ids"))
+  private def containmentPairsFrom(shStr: DataFrame, cap: Int): DataFrame = {
+    val (sh, posts) = SimJoin.hashed(shStr)
+    val prefix = SimJoin.rarityPrefix(posts, 9, 10).select(col("doc_id").as("a"), col("g"))
+    val fullPostings = SimJoin.cappedIds(posts, Seq("g"), cap,
+      "graft_containment_df_cap", "truncated_grams")
     val cand = prefix.join(fullPostings, "g")
       .select(col("a"), explode(col("ids")).as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("i"), greatest(col("a"), col("b")).as("j"))
       .distinct()
-      .repartition(sp, col("i")) // keep the verify stage wide under AQE
-    // hybrid verify joins — SMJ on i, shuffle_hash on j; see
-    // ngramPairsFrom for the measurements
     val ic = graft.functions.IntersectCount.intersect_count(col("sha"), col("shb"))
-    cand
-      .join(sh.select(col("doc_id").as("i"), col("sh").as("sha")), "i")
-      .join(sh.select(col("doc_id").as("j"), col("sh").as("shb")).hint("shuffle_hash"), "j")
+    SimJoin.verifyJoin(SimJoin.spread(cand), sh)
       .select(col("i"), col("j"),
         ic.as("n_common"),
         round(ic.cast("double") / least(size(col("sha")), size(col("shb"))), 9)
@@ -1857,13 +1676,20 @@ object PipelineQueries {
       |          ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rn
       |        FROM sc WHERE hits > 0)""".stripMargin
 
-  /** Okapi BM25 (k1=1.2, b=0.75) top-15 for the fixed query term set —
-    * the scoring core of q_text_bm25, shared with q_ret_rrf's fusion.
-    * See the q_text_bm25 catalog entry for the full plan + determinism
-    * commentary (two corpus passes over a persisted narrow numeric
-    * frame; corpus stats are driver model-state scalars; scores round9
-    * with doc_id tiebreaks). */
-  private[queries] def bm25Top(s: SparkSession, d: String): DataFrame = {
+  /** What [[withBm25Core]] hands its body: the query terms, the
+    * documents table, the per-doc frame `pt` (doc_id, dl, tf0..tf2), the
+    * corpus doc count and the length-norm, hit-count and score columns
+    * over `pt`. */
+  private final case class Bm25Core(
+      terms: Seq[String], docs: DataFrame, pt: DataFrame,
+      n: Long, norm: Column, hits: Column, score: Column)
+
+  /** The BM25 (k1=1.2, b=0.75) scoring core over the fixed query term
+    * set, shared by [[bm25Top]] and [[rm3Top]]: calls `use` while the
+    * persisted `pt` frame is live, then drops it. Corpus stats (doc
+    * count, token total, per-term df) are one aggregate row of driver
+    * model-state scalars. */
+  private def withBm25Core[A](s: SparkSession, d: String)(use: Bm25Core => A): A = {
     val terms = Seq("vector", "merge", "scan")
     val docs = t(s, d, "documents")
     val pt = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -1889,63 +1715,50 @@ object PipelineQueries {
         val tfD = col(s"tf$i").cast("double")
         lit(idf(i)) * (tfD * lit(2.2)) / (tfD + norm)
       }.reduce(_ + _)
-      val top = pt
-        .withColumn("hits", col("tf0") + col("tf1") + col("tf2"))
+      use(Bm25Core(terms, docs, pt, n, norm,
+        col("tf0") + col("tf1") + col("tf2"), scoreCol))
+    } finally pt.unpersist()
+  }
+
+  /** Okapi BM25 top-15 for the fixed query term set — the scoring core
+    * of q_text_bm25, shared with q_ret_rrf's fusion. See the q_text_bm25
+    * catalog entry for the full plan + determinism commentary (two corpus
+    * passes over a persisted narrow numeric frame; corpus stats are
+    * driver model-state scalars; scores round9 with doc_id tiebreaks). */
+  private[queries] def bm25Top(s: SparkSession, d: String): DataFrame =
+    withBm25Core(s, d) { bm =>
+      val top = bm.pt
+        .withColumn("hits", bm.hits)
         .filter(col("hits") > 0)
-        .select(col("doc_id"), col("hits"), round(scoreCol, 9).as("score"))
+        .select(col("doc_id"), col("hits"), round(bm.score, 9).as("score"))
         .orderBy(col("score").desc, col("doc_id"))
         .limit(15)
       top.withColumn("rn",
           row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("bigint"))
         .orderBy("rn")
         .localCheckpoint(eager = true)
-    } finally pt.unpersist()
-  }
+    }
 
   /** RM3-style pseudo-relevance feedback on top of the BM25 core — see
     * the q_ret_rm3 catalog entry for semantics + determinism notes.
-    * Same constants (k1=1.2, b=0.75, query terms, rounding) as bm25Top;
-    * expansion model state (5 feedback ids, 3 terms, their idf) is
+    * Expansion model state (5 feedback ids, 3 terms, their idf) is
     * bounded driver state, the BM25 convention. */
-  private[graft] def rm3Top(s: SparkSession, d: String): DataFrame = {
-    val terms = Seq("vector", "merge", "scan")
-    val docs = t(s, d, "documents")
-    val pt = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id") +: size(col("w")).cast("long").as("dl") +:
-        terms.indices.map(i =>
-          size(expr(s"filter(w, x -> x = '${terms(i)}')")).cast("long").as(s"tf$i")): _*)
-    pt.persist()
-    try {
-      val st = pt.agg(count(lit(1)).as("n"), sum("dl").as("t"),
-        sum((col("tf0") > 0).cast("long")).as("df0"),
-        sum((col("tf1") > 0).cast("long")).as("df1"),
-        sum((col("tf2") > 0).cast("long")).as("df2")).head()
-      val n = st.getLong(0)
-      val tTok = st.getLong(1)
-      val idf = terms.indices.map { i =>
-        val df = st.getLong(2 + i)
-        math.log(1.0 + ((n - df).toDouble + 0.5) / (df.toDouble + 0.5))
-      }
-      val norm = lit(1.2) * (lit(0.25) +
-        lit(0.75) * (col("dl").cast("double") * lit(n.toDouble) / lit(tTok.toDouble)))
-      val scoreCol = terms.indices.map { i =>
-        val tfD = col(s"tf$i").cast("double")
-        lit(idf(i)) * (tfD * lit(2.2)) / (tfD + norm)
-      }.reduce(_ + _)
-      val base = pt.select(col("doc_id"),
-        (col("tf0") + col("tf1") + col("tf2")).as("hits"),
-        round(round(scoreCol, 9) * 1e9, 0).cast("long").as("base_n"))
+  private[graft] def rm3Top(s: SparkSession, d: String): DataFrame =
+    withBm25Core(s, d) { bm =>
+      val n = bm.n
+      val base = bm.pt.select(col("doc_id"), bm.hits.as("hits"),
+        round(round(bm.score, 9) * 1e9, 0).cast("long").as("base_n"))
       base.persist()
       try {
         val fb = base.filter(col("hits") > 0)
           .orderBy(col("base_n").desc, col("doc_id")).limit(5).select("doc_id")
-        val expTerms = docs.join(broadcast(fb), "doc_id")
+        val expTerms = bm.docs.join(broadcast(fb), "doc_id")
           .select(explode(split(col("text"), " ")).as("term"))
-          .filter(!col("term").isin(terms: _*))
+          .filter(!col("term").isin(bm.terms: _*))
           .groupBy("term").agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("term")).limit(3)
           .collect().map(_.getString(0)).toSeq
-        val tfx = docs
+        val tfx = bm.docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
           .filter(col("term").isin(expTerms: _*))
           .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1959,10 +1772,10 @@ object PipelineQueries {
             }.toSeq
           val idfDf = s.createDataFrame(idfX).toDF("term", "idfx")
           val ctr = tfx.join(broadcast(idfDf), "term")
-            .join(pt.select(col("doc_id"), col("dl")), "doc_id")
+            .join(bm.pt.select(col("doc_id"), col("dl")), "doc_id")
             .select(col("doc_id"),
               round(col("idfx") * (col("tf").cast("double") * lit(2.2)) /
-                (col("tf").cast("double") + norm) * 1e9, 0).cast("long").as("cn"))
+                (col("tf").cast("double") + bm.norm) * 1e9, 0).cast("long").as("cn"))
           val expn = ctr.groupBy("doc_id").agg(sum("cn").as("exp_n"))
           val fin = base.select(col("doc_id"), col("base_n"))
             .join(expn, Seq("doc_id"), "left")
@@ -1977,8 +1790,7 @@ object PipelineQueries {
             .localCheckpoint(eager = true)
         } finally tfx.unpersist()
       } finally base.unpersist()
-    } finally pt.unpersist()
-  }
+    }
 
   /** Deletion-neighborhood-blocked Levenshtein-≤1 pairs over the first-6-
     * word titles of a (doc_id, text) frame — see the q_dedup_editdist
@@ -1986,36 +1798,23 @@ object PipelineQueries {
     * the frame (not a dir) so PipelineSpec can drive an ed=1 fixture the
     * corpus lacks. */
   private[graft] def editDistPairs(s: SparkSession, docs: DataFrame): DataFrame = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
     val titles = editDistTitles(docs)
-    Qh.materializedWith(titles)(editDistFrom(titles, sp, 64))
+    Qh.materializedWith(titles)(editDistFrom(titles, 64))
   }
 
   private def editDistTitles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("title"))
 
-  private def editDistFrom(titles: DataFrame, sp: Int, cap: Int): DataFrame = {
+  private def editDistFrom(titles: DataFrame, cap: Int): DataFrame = {
     val keys = titles.select(col("doc_id"), explode(expr(
       """array_union(array(title),
         |  transform(sequence(1, length(title)),
         |    i -> concat(substr(title, 1, i - 1), substr(title, i + 1))))"""
         .stripMargin)).as("k"))
-    val cand = keys.groupBy("k")
-      .agg(graft.functions.BoundedMinSet.bounded_min_set(col("doc_id"), cap).as("bs"))
-      .filter(col("bs.n") > 1)
-      .observe("graft_editdist_cap",
-        sum(when(col("bs.n") > cap, lit(1)).otherwise(lit(0))).as("truncated_keys"),
-        sum(when(col("bs.n") > cap, col("bs.n") - cap).otherwise(lit(0))).as("dropped_ids"))
-      .select(col("bs.ids").as("ids"))
-      // codegen'd pair enumeration (round 18) — see [[OrderedPairs]] for
-      // the exact-equality contract with the nested-HOF spelling
-      .select(explode(
-        graft.functions.OrderedPairs.ordered_pairs(col("ids"))).as("p"))
-      .select(col("p.i").as("i"), col("p.j").as("j"))
-      .distinct()
-      .repartition(sp, col("i")) // keep the verify stage wide under AQE
-    cand
+    val ids = SimJoin.cappedIds(keys, Seq("k"), cap, "graft_editdist_cap", "truncated_keys")
+    // its own unhinted join: the payload is a short title, not an array
+    SimJoin.spread(SimJoin.pairs(ids))
       .join(titles.select(col("doc_id").as("i"), col("title").as("ta")), "i")
       .join(titles.select(col("doc_id").as("j"), col("title").as("tb")), "j")
       .select(col("i"), col("j"), levenshtein(col("ta"), col("tb")).as("ed"))
@@ -2026,19 +1825,16 @@ object PipelineQueries {
   /** Formatted plan of the edit-distance pipeline over a persisted title
     * frame — for PlanShapeSpec. */
   private[graft] def editDistPlanProbe(s: SparkSession, d: String): String = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
     val titles = editDistTitles(t(s, d, "documents").select(col("doc_id"), col("text")))
-    Qh.planWith(titles)(editDistFrom(titles, sp, 64))
+    Qh.planWith(titles)(editDistFrom(titles, 64))
   }
 
   /** Jaccard-decile pair histogram down to t = 0.5 — see the
-    * q_dedup_threshold_sweep catalog entry. Same hash-once postings /
-    * rarity-prefix / BoundedMinSet discipline as [[ngramPairsFrom]],
-    * prefix sized for the 0.5 floor. */
+    * q_dedup_threshold_sweep catalog entry. The ngram-jaccard pipeline
+    * with the rarity prefix sized for the 0.5 floor. */
   private[queries] def sweepPairsShared(s: SparkSession, d: String): DataFrame = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp)
-    Qh.materializedWith(shStr)(sweepPairsFrom(shStr, sp, NgramDfCap))
+    val shStr = spreadShingles(s, d)
+    Qh.materializedWith(shStr)(sweepPairsFrom(shStr, NgramDfCap))
   }
 
   /** Formatted plan of the threshold-sweep pair pipeline over a
@@ -2046,53 +1842,17 @@ object PipelineQueries {
     * 37 GB fat sort-spill the shuffle_hash hint kills; the hint must
     * stay pinned here, not only on the jaccard sibling). */
   private[graft] def sweepPlanProbe(s: SparkSession, d: String): String = {
-    val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val shStr = shingled(s, d, sp)
-    Qh.planWith(shStr)(sweepPairsFrom(shStr, sp, NgramDfCap))
+    val shStr = spreadShingles(s, d)
+    Qh.planWith(shStr)(sweepPairsFrom(shStr, NgramDfCap))
   }
 
-  private def sweepPairsFrom(shStr: DataFrame, sp: Int, cap: Int): DataFrame = {
-    val sh = shStr.select(col("doc_id"), graft.functions.XxHash64Array.xxhash64_array(col("sh")).as("sh"))
-    val posts = shStr.select(col("doc_id"),
-      explode(graft.functions.XxHash64Array.xxhash64_array(col("sh"))).as("g"))
-    val dfg = posts.groupBy("g").agg(count(lit(1)).as("df"))
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("df"), col("g"))
-    val wholeDoc = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    val prefix = posts.join(broadcast(dfg), "g")
-      .withColumn("r", row_number().over(byRarity))
-      .withColumn("n", count(lit(1)).over(wholeDoc))
-      .filter(col("r") <= col("n") - expr("(n + 1) div 2") + 1)
-      .select("doc_id", "g")
-    val postings = prefix.groupBy("g")
-      .agg(graft.functions.BoundedMinSet.bounded_min_set(col("doc_id"), cap).as("bs"))
-      .filter(col("bs.n") > 1)
-      .observe("graft_sweep_df_cap",
-        sum(when(col("bs.n") > cap, lit(1)).otherwise(lit(0))).as("truncated_grams"),
-        sum(when(col("bs.n") > cap, col("bs.n") - cap).otherwise(lit(0))).as("dropped_ids"))
-      .select(col("bs.ids").as("ids"))
-    val cand = postings
-      // codegen'd pair enumeration (round 18) — see [[OrderedPairs]] for
-      // the exact-equality contract with the nested-HOF spelling
-      .select(explode(
-        graft.functions.OrderedPairs.ordered_pairs(col("ids"))).as("p"))
-      .select(col("p.i").as("i"), col("p.j").as("j"))
-      // Round 17 note: a repartition(i)-then-dropDuplicates fusion (one
-      // exchange instead of distinct + repartition) was MEASURED AND
-      // REJECTED — losing distinct's map-side partial dedup ships the
-      // raw enumerated pair stream and builds the full dedup hash in the
-      // reduce tasks; the subset bench read 14.2 s vs 3.0 s with the
-      // sentinel itself inflating 1.5× from the session-wide GC
-      // pressure (guide §2.3: aggregate BEFORE you shuffle).
-      .distinct()
-      .repartition(sp, col("i"))
-    // hybrid verify joins — SMJ on i, shuffle_hash on j; see
-    // ngramPairsFrom (this twin owned the 37 GB fat sort-spill)
+  private def sweepPairsFrom(shStr: DataFrame, cap: Int): DataFrame = {
+    val (sh, posts) = SimJoin.hashed(shStr)
+    val ids = SimJoin.cappedIds(SimJoin.rarityPrefix(posts, 1, 2), Seq("g"), cap,
+      "graft_sweep_df_cap", "truncated_grams")
     val ic = graft.functions.IntersectCount.intersect_count(col("sha"), col("shb"))
     val union = size(col("sha")) + size(col("shb")) - ic
-    cand
-      .join(sh.select(col("doc_id").as("i"), col("sh").as("sha")), "i")
-      .join(sh.select(col("doc_id").as("j"), col("sh").as("shb")).hint("shuffle_hash"), "j")
+    SimJoin.verifyJoin(SimJoin.spread(SimJoin.pairs(ids)), sh)
       .select(ic.as("inter"), union.as("u"))
       .filter(lit(2) * col("inter") >= col("u"))
       .select(expr("(10 * inter) div u").cast("int").as("bucket"))
@@ -2100,10 +1860,6 @@ object PipelineQueries {
       .orderBy("bucket")
   }
 
-  /** Survivors of `rounds` peel iterations toward the 2-core of the
-    * near-dup graph, with their induced-subgraph degree — see the
-    * q_graph_kcore catalog entry. Exposed with the round count so
-    * PipelineSpec can prove the fixpoint (rounds vs rounds+1). */
   /** Multi-source BFS layer histogram over an (src, dst) edge frame:
     * landmarks = the 3 smallest source ids, then `rounds` expansion
     * rounds (assigned ⋈ edges, anti-join already-assigned), reporting
@@ -2271,6 +2027,10 @@ object PipelineQueries {
     base
   }
 
+  /** Survivors of `rounds` peel iterations toward the 2-core of the
+    * near-dup graph, with their induced-subgraph degree — see the
+    * q_graph_kcore catalog entry. Exposed with the round count so
+    * PipelineSpec can prove the fixpoint (rounds vs rounds+1). */
   private[graft] def kcoreSurvivors(s: SparkSession, d: String, rounds: Int): DataFrame = {
     val p = minhashPairsShared(s, d).select(col("i"), col("j"))
     var edges = p.select(col("i").as("src"), col("j").as("dst"))
@@ -2451,12 +2211,6 @@ object PipelineQueries {
     labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
-  /** round(cosine(a, b), 9) via the codegen'd DotProduct expression —
-    * same sequential summation as the zip_with/aggregate HOF spelling
-    * (bit-identical, oracle-stable) at a fraction of the cost: the HOF
-    * evaluates an interpreted lambda per element (~12 s for the 200k-pair
-    * scoring stage at sf0.1), the custom expression is a primitive loop
-    * inside WholeStageCodegen. */
   /** Per-doc Gopher-style repetition signals (shared by
     * q_text_repetition and the q_cur_end2end composite): top-word and
     * top-bigram fractions via two-phase (doc_id, gram) counts — the
@@ -2513,9 +2267,29 @@ object PipelineQueries {
        |       top_bigram_frac, repetitive
        |FROM rep ORDER BY doc_id""".stripMargin
 
+  /** round(cosine(a, b), 9) via the codegen'd DotProduct expression —
+    * same sequential summation as the zip_with/aggregate HOF spelling
+    * (bit-identical, oracle-stable) at a fraction of the cost: the HOF
+    * evaluates an interpreted lambda per element (~12 s for the 200k-pair
+    * scoring stage at sf0.1), the custom expression is a primitive loop
+    * inside WholeStageCodegen. */
   private def cosine(a: Column, b: Column): Column = {
     import graft.functions.DotProduct.dot_product
     round(dot_product(a, b) / (sqrt(dot_product(a, a)) * sqrt(dot_product(b, b))), 9)
+  }
+
+  /** Self-sizing plane count for [[semanticDedupSurvivors]]: the
+    * smallest b in [4, 30] with n <= 32 * 2^b, i.e. expected cell size
+    * stays ≤ 32 vectors as the corpus grows (cells ∝ N, so the
+    * quadratic within-cell join does constant per-cell work). Pure
+    * integer arithmetic — the DuckDB oracle computes the IDENTICAL
+    * formula from its own COUNT(*) (`list_min([b for b in range(4,31)
+    * if n <= 32 * (1 << b)])`), so the derived clustering stays
+    * oracle-checkable at every corpus size without parameter plumbing. */
+  private[graft] def semanticBits(n: Long): Int = {
+    var b = 4
+    while (b < 30 && (32L << b) < n) b += 1
+    b
   }
 
   /** SemDeDup survivor set (see q_dedup_semantic): embedding cells from
@@ -2537,20 +2311,6 @@ object PipelineQueries {
     * norms (same values, same multiply order, so round9 cosines stay
     * bit-identical to the oracle's list_cosine_similarity); the join
     * shuffles on cell and never crosses cells. */
-  /** Self-sizing plane count for [[semanticDedupSurvivors]]: the
-    * smallest b in [4, 30] with n <= 32 * 2^b, i.e. expected cell size
-    * stays ≤ 32 vectors as the corpus grows (cells ∝ N, so the
-    * quadratic within-cell join does constant per-cell work). Pure
-    * integer arithmetic — the DuckDB oracle computes the IDENTICAL
-    * formula from its own COUNT(*) (`list_min([b for b in range(4,31)
-    * if n <= 32 * (1 << b)])`), so the derived clustering stays
-    * oracle-checkable at every corpus size without parameter plumbing. */
-  private[graft] def semanticBits(n: Long): Int = {
-    var b = 4
-    while (b < 30 && (32L << b) < n) b += 1
-    b
-  }
-
   private[graft] def semanticDedupSurvivors(
       s: SparkSession, d: String, bits: Int, tau: Double): DataFrame = {
     import graft.functions.DotProduct.dot_product
@@ -2745,7 +2505,8 @@ object PipelineQueries {
       s"""WITH $ShingleOverlapCtes
          |SELECT i, j, CAST(inter AS INT) AS n_common, jac FROM jpairs
          |ORDER BY i, j""".stripMargin) { (s, d) =>
-      // See ngramPairsFrom for the plan + scale commentary.
+      // See ngramPairsFrom and the SimJoin steps it composes for the
+      // plan + scale commentary.
       ngramPairsShared(s, d)
     },
 

@@ -29,11 +29,6 @@ object SourceQueries {
   def cacheDir(d: String): String =
     s"/tmp/graft_src/${CacheVersion}_${d.replaceAll("[^a-zA-Z0-9]", "_")}_${Integer.toHexString(d.hashCode)}"
 
-  /** One-time cache materialization, safe under concurrent first use
-    * from multiple sessions/threads in this JVM: the check-then-write is
-    * serialized behind a single lock (cheap — it only ever guards the
-    * one-time write), and SaveMode.Overwrite clears any partial files a
-    * previously-failed write left behind before _SUCCESS existed. */
   /** Create-once catalog table: table/bucket/stats metadata lives in the
     * (in-memory) session catalog, so a fresh session must recreate the
     * table — and first drop any stale warehouse directory a previous JVM
@@ -51,6 +46,12 @@ object SourceQueries {
     }
 
   private[graft] val cacheLock = new Object
+
+  /** One-time cache materialization, safe under concurrent first use
+    * from multiple sessions/threads in this JVM: the check-then-write is
+    * serialized behind a single lock (cheap — it only ever guards the
+    * one-time write), and SaveMode.Overwrite clears any partial files a
+    * previously-failed write left behind before _SUCCESS existed. */
   private[queries] def materialize(path: String)(write: => Unit): String =
     cacheLock.synchronized {
       if (!new java.io.File(path, "_SUCCESS").exists()) write

@@ -304,12 +304,6 @@ object DocStreams {
       .withColumn("keep",
         !col("has_replacement") && !col("has_control") && !col("high_nonascii"))
 
-  /** Frozen reference length-distribution model for [[ksDriftAlerts]]:
-    * cumulative counts over 64 FIXED buckets (least(len div 64, 63)) of
-    * `length(text)` plus the total — 65 longs of driver model state,
-    * bounded BY CONSTRUCTION (the pre-bucketed production form the
-    * q_agg_ks batch comment prescribes for unbounded-support scores).
-    * One two-phase count pass over the reference corpus. */
   /** ONE reference-corpus count pass over the 64 fixed length buckets —
     * the shared derivation of both frozen drift models ([[ksRefModel]]'s
     * CDF and [[mwRefModel]]'s histogram are driver-side folds of this
@@ -323,6 +317,12 @@ object DocStreams {
     Array.tabulate(64)(i => counts.getOrElse(i, 0L))
   }
 
+  /** Frozen reference length-distribution model for [[ksDriftAlerts]]:
+    * cumulative counts over 64 FIXED buckets (least(len div 64, 63)) of
+    * `length(text)` plus the total — 65 longs of driver model state,
+    * bounded BY CONSTRUCTION (the pre-bucketed production form the
+    * q_agg_ks batch comment prescribes for unbounded-support scores).
+    * One two-phase count pass over the reference corpus. */
   def ksRefModel(corpus: DataFrame): (Array[Long], Long) = {
     val cnt = refBucketCounts(corpus)
     val cum = cnt.scanLeft(0L)(_ + _).drop(1)

@@ -255,11 +255,6 @@ object EventStreams {
       if (broadcastDim) org.apache.spark.sql.functions.broadcast(dim) else dim,
       key)
 
-  /** Exact dedup on event_id. Streaming: state is scoped by the
-    * watermark (dropDuplicatesWithinWatermark), so the dedup map doesn't
-    * grow unboundedly — the streaming face of the corpus-prep exact-dedup
-    * operator (q_dedup_exact). Batch: plain dropDuplicates (the
-    * within-watermark variant is streaming-only and would throw). */
   /** Streaming rate-limit alerts — the live twin of the batch
     * `q_events_rate_limit` audit: per-(user, minute-window) event
     * counts under a watermark, emitting ONLY the buckets that breach
@@ -399,6 +394,11 @@ object EventStreams {
       }(org.apache.spark.sql.Encoders.product[CusumState], e1)
   }
 
+  /** Exact dedup on event_id. Streaming: state is scoped by the
+    * watermark (dropDuplicatesWithinWatermark), so the dedup map doesn't
+    * grow unboundedly — the streaming face of the corpus-prep exact-dedup
+    * operator (q_dedup_exact). Batch: plain dropDuplicates (the
+    * within-watermark variant is streaming-only and would throw). */
   def dedupe(events: DataFrame, watermark: String = "1 hour"): DataFrame = {
     val ts = events.withColumn("ts", col("ts").cast("timestamp"))
     if (events.isStreaming)

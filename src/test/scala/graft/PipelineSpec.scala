@@ -92,7 +92,7 @@ class PipelineSpec extends GraftSuite {
     val short = (10 until 20).map(i => s"w$i").mkString(" ")
     val other = (100 until 130).map(i => s"x$i").mkString(" ")
     val docs = Seq((1L, long), (2L, short), (3L, other)).toDF("doc_id", "text")
-    val got = graft.queries.PipelineQueries.containmentPairs(docs, 4, 50)
+    val got = graft.queries.PipelineQueries.containmentPairs(docs, 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     assert(got.toSeq == Seq((1L, 2L, 1.0)), got.mkString(","))
     val jac = 8.0 / 58.0 // shared shingles / union — the measure that misses it
@@ -917,6 +917,26 @@ class PipelineSpec extends GraftSuite {
     val metrics = df.queryExecution.observedMetrics("graft_ngram_df_cap")
     assert(metrics.getLong(0) > 0, s"no truncated gram observed: $metrics")
     assert(metrics.getLong(1) > 0, s"no dropped ids observed: $metrics")
+  }
+
+  test("containment df cap bounds an adversarial boilerplate corpus and reports drops") {
+    // the mega-posting fixture's 300 near-identical docs: every
+    // boilerplate shingle's FULL posting list is 300 docs. Each doc's
+    // prefix grams join postings capped at the `cap` smallest ids, so a
+    // doc pairs with at most `cap` others, and the truncation is published.
+    val boiler = (1 to 60).map(i => s"tok$i").mkString(" ")
+    val docs = spark.range(300).selectExpr(
+      "id + 1 AS doc_id",
+      s"concat('$boiler', ' unique', CAST(id AS STRING)) AS text")
+
+    val cap = 8
+    val df = graft.queries.PipelineQueries.containmentPairs(docs, cap)
+    val rows = df.collect()
+    assert(rows.nonEmpty, "cap must not kill the cluster entirely")
+    assert(rows.length <= 300 * cap, s"pair expansion not bounded: ${rows.length} pairs")
+    val metrics = df.queryExecution.observedMetrics("graft_containment_df_cap")
+    assert(metrics.getAs[Long]("truncated_grams") > 0, s"no truncated gram observed: $metrics")
+    assert(metrics.getAs[Long]("dropped_ids") > 0, s"no dropped ids observed: $metrics")
   }
 
   test("ngram-jaccard prefix filter finds the exact-boundary subset pair (n % 5 == 0)") {
