@@ -47,10 +47,14 @@ object Bench {
     }
 
     // Optional comma-separated subset (local iteration; the driver runs all).
+    // It may name only the artifact-build row `buildRow`: then the run is
+    // just its timed rebuild, with no warm-up or sentinel.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.catalog.map(_.name)
       .filter(n => only.forall(_.contains(n)))
-    require(names.nonEmpty,
+    val buildRow = "q_dedup_minhash_build"
+    val withBuild = only.forall(_.contains(buildRow))
+    require(names.nonEmpty || withBuild,
       s"SPARK_GRAFT_BENCH_ONLY=${only.map(_.mkString(",")).getOrElse("")} matches no catalog query")
     // UNTIMED warm-up pass over the whole run set before any timing. This
     // serves two distinct purposes: (a) JVM/codegen JIT warm-up, and
@@ -68,7 +72,7 @@ object Bench {
       names.foreach(runOnce)
       System.err.println(
         f"[bench] warm-up pass: ${names.size} queries in ${(System.nanoTime() - t0) / 1e9}%.1f s (untimed)")
-    } else runOnce(names.head) // minimal JIT warm-up on the flagship
+    } else names.headOption.foreach(runOnce) // minimal JIT warm-up on the flagship
     // Best-of-N (default 2) damps JIT/GC noise; a failure in any run
     // marks the query failed.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
@@ -83,7 +87,7 @@ object Bench {
     // loaded box, not by a plan regression.
     val sentinelName = "q1_pricing_summary"
     val sentinelEvery = 30
-    if (!names.contains(sentinelName)) runOnce(sentinelName) // warm it under subsets too
+    if (names.nonEmpty && !names.contains(sentinelName)) runOnce(sentinelName) // warm it under subsets too
     val sentinel = scala.collection.mutable.ArrayBuffer[Double]()
     // Each sentinel reading is best-of-2 like the queries it adjudicates
     // (round-15 ADVICE): a single GC/JIT blip in a lone reading would
@@ -99,7 +103,7 @@ object Bench {
       val times = (1 to runs).map(_ => runOnce(n))
       n -> (if (times.exists(_ < 0)) -1.0 else times.min)
     }
-    sentinel += sentinelReading() // closing reading bounds the last window
+    if (names.nonEmpty) sentinel += sentinelReading() // closing reading bounds the last window
     // Artifact-build visibility (round-17 verdict item #7): the LSH pair
     // artifact is built once per corpus fingerprint and served from disk
     // thereafter, so its build cost never appeared in any timed row. This
@@ -109,9 +113,8 @@ object Bench {
     // and the rebuild is fingerprint-identical, leaving the artifact
     // exactly as the warm-up pass left it. Subset runs skip it unless
     // asked for, like any other row.
-    val buildRow = "q_dedup_minhash_build"
     val results =
-      if (only.forall(_.contains(buildRow))) {
+      if (withBuild) {
         def buildOnce(): Double = {
           if (progress) System.err.println(s"[bench] start $buildRow (cold rebuild)")
           val t0 = System.nanoTime()

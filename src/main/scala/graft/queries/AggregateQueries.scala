@@ -58,8 +58,7 @@ object AggregateQueries {
     * different duplicate of an equal value cannot change any sum.
     * Returns the input columns plus `pid` and `cum`. */
   private[graft] def groupedPrefix(
-      df: DataFrame, grp: String, ord: String, w: org.apache.spark.sql.Column,
-      pin: Boolean = true): DataFrame = {
+      df: DataFrame, grp: String, ord: String, w: org.apache.spark.sql.Column): DataFrame = {
     // backtick-quoted column ref (round-16 ADVICE): a caller-supplied
     // name with dots/spaces/reserved words must reach the resolver as
     // ONE identifier, not be re-parsed as nested-field access
@@ -75,20 +74,17 @@ object AggregateQueries {
         .withColumn("cum", sum(w).over(intraW1))
     }
     val probs = array((1 until parts).map(i => lit(i.toDouble / parts)): _*)
-    // `pin = false` only for the plan probe, which needs the full
-    // lazy structure (and never executes, so bounds divergence between
-    // the two consumers cannot matter there). Accuracy 120 (round 18;
-    // was 1000): the bounds only steer BALANCE, never correctness (any
-    // monotone bucketing yields the same cum) — rank error 1/120 ≈ 0.8%
-    // against a 1/32 ≈ 3% slice target keeps slices within ±25% of
-    // ideal, while the sketch insert/compress cost scales with accuracy
-    // and this pass was the trio's single largest measured CPU stage
-    // (Profile: 6.7 s of the 19 s total on q_agg_weighted_exact at
-    // accuracy 1000). Callers should persist `df` BEFORE calling so
-    // this eager pass populates their cache.
-    val bounds0 = df.groupBy(grp)
+    // Accuracy 120 (round 18; was 1000): the bounds only steer BALANCE,
+    // never correctness (any monotone bucketing yields the same cum) —
+    // rank error 1/120 ≈ 0.8% against a 1/32 ≈ 3% slice target keeps
+    // slices within ±25% of ideal, while the sketch insert/compress cost
+    // scales with accuracy and this pass was the trio's single largest
+    // measured CPU stage (Profile: 6.7 s of the 19 s total on
+    // q_agg_weighted_exact at accuracy 1000). Callers should persist `df`
+    // BEFORE calling so this eager pass populates their cache.
+    val bounds = df.groupBy(grp)
       .agg(percentile_approx(qc(ord), probs, lit(120)).as("bnds"))
-    val bounds = if (pin) bounds0.localCheckpoint(eager = true) else bounds0
+      .localCheckpoint(eager = true)
     // Round 17 (optimization, guide §1.2 per-task work): pid via the
     // codegen'd LowerBoundCount instead of size(filter(bnds, b -> b <
     // ord)) — the HOF spelling is an interpreted per-row lambda over the
@@ -138,10 +134,8 @@ object AggregateQueries {
     * WHERE cum·2 ≥ tot") is tie-order invariant, so the answer is
     * bit-identical. The collapsed frame is persisted across
     * groupedPrefix's consumers and the model-sized result checkpointed
-    * (the Qh.materializedWith discipline); `pin = false` returns the
-    * raw lazy frame for the plan probe. */
-  private def weightedMedianExact(
-      s: SparkSession, d: String, pin: Boolean = true): DataFrame = {
+    * (the Qh.materializedWith discipline). */
+  private def weightedMedianExact(s: SparkSession, d: String): DataFrame = {
     val coll = t(s, d, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"),
         col("l_quantity").cast("long").as("w"))
@@ -150,9 +144,9 @@ object AggregateQueries {
     // persist BEFORE groupedPrefix: its eager bounds pass is the first
     // job and populates this cache, so the collapse runs exactly once
     // across bounds/offsets/final (inlined materializedWith discipline)
-    if (pin) coll.persist()
-    try weightedMedianExactFrom(coll, pin)
-    finally if (pin) coll.unpersist()
+    coll.persist()
+    try weightedMedianExactFrom(coll)
+    finally coll.unpersist()
   }
 
   /** The exact weighted-median machinery over an already-collapsed
@@ -164,24 +158,15 @@ object AggregateQueries {
     * differ only in which aggregate they fold over the collapsed rows).
     * Caller owns persist/unpersist of `coll`. Bit-identical output: this
     * is the exact code path q_agg_weighted_exact always ran, verbatim. */
-  private def weightedMedianExactFrom(coll: DataFrame, pin: Boolean): DataFrame = {
+  private def weightedMedianExactFrom(coll: DataFrame): DataFrame = {
     val tot = coll.groupBy("l_returnflag").agg(sum("w").as("tot"))
-    val res = groupedPrefix(coll, "l_returnflag", "l_extendedprice", col("w"), pin)
+    groupedPrefix(coll, "l_returnflag", "l_extendedprice", col("w"))
       .join(broadcast(tot), "l_returnflag")
       .filter(col("cum") * 2 >= col("tot"))
       .groupBy("l_returnflag")
       .agg(min(col("l_extendedprice")).as("w_median_price"))
-    if (pin) res.localCheckpoint(eager = true) else res
+      .localCheckpoint(eager = true)
   }
-
-  /** Formatted plan of the weighted-median prefix sum (the *PlanProbe
-    * convention): PlanShapeSpec pins that every corpus-scale window
-    * partitions on pid — no single-partition / whole-group window and
-    * no range exchange + corpus checkpoint survive in the exact
-    * quantile path (round-16 rework: pid is value-derived from the
-    * broadcast equi-depth bounds). */
-  private[graft] def weightedMedianPlanProbe(s: SparkSession, d: String): String =
-    Qh.formattedPlan(weightedMedianExact(s, d, pin = false))
 
   val all: Seq[Q] = Seq(
 
@@ -477,8 +462,7 @@ object AggregateQueries {
             .localCheckpoint(eager = true)
         }(ExecutionContext.fromExecutor(pool))
         val exact =
-          try weightedMedianExactFrom(
-            coll.select("l_returnflag", "l_extendedprice", "w"), pin = true)
+          try weightedMedianExactFrom(coll.select("l_returnflag", "l_extendedprice", "w"))
           finally Await.ready(skF, Duration.Inf)
         val sk = skF.value.get.get // rethrows the sketch job's failure
         sk.join(exact, "l_returnflag")

@@ -171,15 +171,6 @@ object CurationQueries {
           .cast("long").as("lrf"))
   }
 
-  /** Formatted plan of the DSIR scoring join over the lazy token frame —
-    * for PlanShapeSpec (the catalog query checkpoints, so its public
-    * plan is a block scan). */
-  private[graft] def dsirScoringPlan(s: SparkSession, d: String): String = {
-    val toks = dsirHashedTokens(t(s, d, "documents"))
-    Qh.formattedPlan(toks.join(broadcast(dsirLogRatios(toks)), "b")
-      .groupBy("doc_id").agg(sum(col("lrf")).as("wfp")))
-  }
-
   /** The tokenize + sequential-prefix-sum CTEs shared by BOTH packing
     * oracles (one copy of the chunk size and split convention — the
     * q_cur_pack_stats manifest must stay derived from the identical
@@ -226,14 +217,6 @@ object CurationQueries {
         col("off") + sum("n_tokens").over(intraW) - col("n_tokens"))
     (ranged, mapped)
   }
-
-  /** Formatted plan of the packing prefix sum BEFORE the checkpoint (the
-    * *PlanProbe convention — the catalog queries' public plan is a scan
-    * of the checkpointed RDD): PlanShapeSpec pins the range exchange on
-    * doc_id and that the corpus-scale window partitions on pid (the only
-    * unpartitioned window is the ≤|partitions|-row offset frame). */
-  private[graft] def packPlanProbe(s: SparkSession, d: String): String =
-    Qh.formattedPlan(packMap(s, d)._2)
 
   /** doc_id, quality, n_tokens — shared scoring projection. */
   private def scored(s: SparkSession, d: String): DataFrame =
@@ -698,8 +681,8 @@ object CurationQueries {
       // offsets via one metadata-sized window, then each partition
       // cumsums locally — two passes, no single-task global window, no
       // driver loop, exact at any corpus size (PlanShapeSpec pins the
-      // shape on the pre-checkpoint frame via packPlanProbe). The
-      // oracle is the sequential spelling of the same sum.
+      // shape on the checkpoint's executed plan). The oracle is the
+      // sequential spelling of the same sum.
       val (ranged, mapped) = packMap(s, d)
       Qh.materializedWith(ranged)(
         mapped
@@ -2371,7 +2354,7 @@ object CurationQueries {
     * but over ≤|support| elements per SOURCE row — ~200 at gate,
     * corpus-size-independent at 100 TB (the whole point of the
     * value-distinct collapse). */
-  private[graft] def madOutliers(s: SparkSession, d: String): DataFrame = {
+  private def madOutliers(s: SparkSession, d: String): DataFrame = {
     // med2/mad4 selector: fold the sorted (value, count) support,
     // carrying (f = running count, m1 = first value with f >= k1,
     // m2 = first value with f >= k2); med2 = m1 + m2 (the two central
@@ -2405,17 +2388,9 @@ object CurationQueries {
       .orderBy("source")
   }
 
-  /** Formatted plan of the mad-outliers pipeline (the *PlanProbe
-    * convention; since round 18 the catalog path is lazy, so this IS
-    * the public plan). */
-  private[graft] def madOutliersPlanProbe(s: SparkSession, d: String): String =
-    Qh.formattedPlan(madOutliers(s, d))
-
-  /** The q_cur_bloom_decontam pipeline. `materialize = false` hands
-    * PlanShapeSpec the raw plan (the catalog path localCheckpoints the
-    * small summary so the persisted eval shingle set can unpersist). */
-  private[graft] def bloomDecontam(
-      s: SparkSession, d: String, materialize: Boolean = true): DataFrame = {
+  /** The q_cur_bloom_decontam pipeline. The small summary is
+    * localCheckpointed so the persisted eval shingle set can unpersist. */
+  private def bloomDecontam(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graftshim.SqlShims
     import org.apache.spark.sql.types.BinaryType
@@ -2465,7 +2440,6 @@ object CurationQueries {
         ((col("n_cand") - coalesce(col("n_present"), lit(0L))) * 100 <=
           (col("n_probe") - coalesce(col("n_present"), lit(0L)))).as("fp_ok"))
       .orderBy("source")
-    if (materialize) Qh.materializedWith(ed)(res)
-    else { ed.unpersist(); res }
+    Qh.materializedWith(ed)(res)
   }
 }

@@ -407,7 +407,7 @@ object PipelineQueries {
     *      Pass-1 candidates form by joining each side's exploded probe
     *      list against the other side's cell id — cell-keyed hash
     *      joins, never a cartesian and never a nested loop (PlanShapeSpec
-    *      pins both via [[mutualNnPlanProbe]]).
+    *      pins both on the executed plans).
     *   2. Triangle-inequality REFINEMENT makes the candidate set
     *      provably sufficient for exact per-vector top-4 (which the
     *      all-pairs oracle demands — IVF probing alone is recall<1 on a
@@ -692,14 +692,6 @@ object PipelineQueries {
     * the law at decade points. */
   private[graft] def nndescentStride(n: Long): Long =
     10L * math.max(1L, math.ceil(n / 20000.0).toLong)
-
-
-  /** The candidate generator's physical plan (PlanShapeSpec: cell-keyed
-    * hash joins, no CartesianProduct — the catalog query's public plan
-    * is a checkpoint scan, so the assertion lives on this inner frame,
-    * the *PlanProbe convention). */
-  private[graft] def mutualNnPlanProbe(s: SparkSession, d: String): String =
-    withMutualNnDist(s, d)((kx, ky) => Qh.formattedPlan(kx.unionByName(ky)))
 
   /** Last-touch attribution — the marketing-analytics staple: each
     * purchase's revenue is credited to the LATEST non-purchase event by
@@ -1282,15 +1274,6 @@ object PipelineQueries {
   private[graft] def minhashPairs(s: SparkSession, d: String, bucketCap: Int): DataFrame =
     minhashPairsFrom(shingled(s, d), bucketCap)
 
-  /** Formatted plan of the pair pipeline over a PERSISTED shingle frame —
-    * for PlanShapeSpec (the catalog query checkpoints, so its public plan
-    * is a scan of the checkpointed RDD): asserts live on the inner plan,
-    * where the three shingle consumers must all read InMemoryTableScan. */
-  private[graft] def minhashPlanProbe(s: SparkSession, d: String): String = {
-    val sh = shingled(s, d)
-    Qh.planWith(sh)(minhashPairsFrom(sh, LshBucketCap))
-  }
-
   /** Winnowing fingerprint selection over a (doc_id, text) frame —
     * the lazy inner form of q_text_winnow, exposed so PipelineSpec can
     * drive adversarial frames (known shared passages) through it. */
@@ -1346,29 +1329,14 @@ object PipelineQueries {
     } finally e.unpersist()
   }
 
-  /** Formatted plan of the pagerank DAG over the artifact-backed edge
-    * frame, WITHOUT the final eager checkpoint (the *PlanProbe
-    * convention — the catalog query's public plan is a checkpoint
-    * scan): shows the round-17 shape — pairs come from ONE parquet scan
-    * of the persisted LSH pair artifact (no shingle/band/verify
-    * rebuild), and each iteration attaches the per-src contribution
-    * via a single edge-scale join. */
-  private[graft] def pageRankPlanProbe(s: SparkSession, d: String): String = {
-    val pairs = minhashPairsShared(s, d).select("i", "j")
-    val edges = pairs.select(col("i").as("src"), col("j").as("dst"))
-      .union(pairs.select(col("j").as("src"), col("i").as("dst")))
-    Qh.formattedPlan(pageRankScaled(edges, 3, pin = false))
-  }
-
   /** Fixed-point PageRank over a (src, dst) edge frame — the iteration
     * core of q_graph_pagerank, exposed so PipelineSpec can drive known
     * graphs (path/clique) through it and check the exact recurrence.
     * Precondition: every vertex has out-degree >= 1 (symmetric edge
     * sets satisfy it). Returns (v, od, r) with r scaled by 1e15. */
-  private[graft] def pageRankScaled(
-      edges: DataFrame, iters: Int, pin: Boolean = true): DataFrame = {
+  private[graft] def pageRankScaled(edges: DataFrame, iters: Int): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("od"))
-    if (pin) { edges.persist(); deg.persist() }
+    edges.persist(); deg.persist()
     try {
       val n = deg.count()
       val Scale = 1000000000000000L
@@ -1387,10 +1355,10 @@ object PipelineQueries {
           .groupBy("dst").agg(sum(col("c")).as("rc"))
           .select(col("dst").as("v"), (lit(base) + col("rc")).as("r"))
       }
-      val res = r.join(deg, col("v") === col("src"))
+      r.join(deg, col("v") === col("src"))
         .select(col("v"), col("od"), col("r"))
-      if (pin) res.localCheckpoint(eager = true) else res
-    } finally if (pin) { edges.unpersist(); deg.unpersist() }
+        .localCheckpoint(eager = true)
+    } finally { edges.unpersist(); deg.unpersist() }
   }
 
   /** Retention rollup over a distinct (user_id, wk) activity frame —
@@ -1499,12 +1467,6 @@ object PipelineQueries {
   private[graft] def ngramJaccardPairs(s: SparkSession, d: String, cap: Int): DataFrame =
     ngramPairsFrom(spreadShingles(s, d), cap)
 
-  /** Plan probe over a persisted shingle frame — see [[minhashPlanProbe]]. */
-  private[graft] def ngramPlanProbe(s: SparkSession, d: String): String = {
-    val shStr = spreadShingles(s, d)
-    Qh.planWith(shStr)(ngramPairsFrom(shStr, NgramDfCap))
-  }
-
   /** [[shingled]] spread over the session's shuffle partitions — the
     * shingle input of the prefix-filter pair generators. */
   private def spreadShingles(s: SparkSession, d: String): DataFrame =
@@ -1554,8 +1516,7 @@ object PipelineQueries {
         xxhash64(col("g.s")).as("hs"), col("g.sn").cast("long").as("sn"))
 
   /** Per-doc boilerplate accounting over a segment frame — the LAZY
-    * inner form (the catalog query checkpoints it; PlanShapeSpec
-    * asserts the broadcast marking join here). */
+    * inner form (the catalog query checkpoints it). */
   private def boilerplateFrom(seg: DataFrame): DataFrame = {
     val boiler = seg.select("doc_id", "source", "hs").distinct()
       .groupBy("source", "hs").agg(count(lit(1)).as("df"))
@@ -1570,20 +1531,6 @@ object PipelineQueries {
       .withColumn("boiler_share",
         round(col("n_tok_removed").cast("double") / col("n_tok"), 9))
       .orderBy("doc_id")
-  }
-
-  /** Formatted plan of the boilerplate pipeline over a persisted segment
-    * frame — for PlanShapeSpec (see [[minhashPlanProbe]]). */
-  private[graft] def boilerplatePlanProbe(s: SparkSession, d: String): String = {
-    val seg = boilerplateSegs(t(s, d, "documents"))
-    Qh.planWith(seg)(boilerplateFrom(seg))
-  }
-
-  /** Formatted plan of the containment ssjoin over a persisted shingle
-    * frame — for PlanShapeSpec. */
-  private[graft] def containmentPlanProbe(s: SparkSession, d: String): String = {
-    val shStr = spreadShingles(s, d)
-    Qh.planWith(shStr)(containmentPairsFrom(shStr, NgramDfCap))
   }
 
   /** Ensure the persisted per-(source, segment-hash) document-frequency
@@ -1797,7 +1744,7 @@ object PipelineQueries {
     * catalog entry for the completeness theorem and scale shape. Takes
     * the frame (not a dir) so PipelineSpec can drive an ed=1 fixture the
     * corpus lacks. */
-  private[graft] def editDistPairs(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[graft] def editDistPairs(docs: DataFrame): DataFrame = {
     val titles = editDistTitles(docs)
     Qh.materializedWith(titles)(editDistFrom(titles, 64))
   }
@@ -1822,28 +1769,12 @@ object PipelineQueries {
       .orderBy("i", "j")
   }
 
-  /** Formatted plan of the edit-distance pipeline over a persisted title
-    * frame — for PlanShapeSpec. */
-  private[graft] def editDistPlanProbe(s: SparkSession, d: String): String = {
-    val titles = editDistTitles(t(s, d, "documents").select(col("doc_id"), col("text")))
-    Qh.planWith(titles)(editDistFrom(titles, 64))
-  }
-
   /** Jaccard-decile pair histogram down to t = 0.5 — see the
     * q_dedup_threshold_sweep catalog entry. The ngram-jaccard pipeline
     * with the rarity prefix sized for the 0.5 floor. */
   private[queries] def sweepPairsShared(s: SparkSession, d: String): DataFrame = {
     val shStr = spreadShingles(s, d)
     Qh.materializedWith(shStr)(sweepPairsFrom(shStr, NgramDfCap))
-  }
-
-  /** Formatted plan of the threshold-sweep pair pipeline over a
-    * persisted shingle frame — for PlanShapeSpec (this twin owned the
-    * 37 GB fat sort-spill the shuffle_hash hint kills; the hint must
-    * stay pinned here, not only on the jaccard sibling). */
-  private[graft] def sweepPlanProbe(s: SparkSession, d: String): String = {
-    val shStr = spreadShingles(s, d)
-    Qh.planWith(shStr)(sweepPairsFrom(shStr, NgramDfCap))
   }
 
   private def sweepPairsFrom(shStr: DataFrame, cap: Int): DataFrame = {
@@ -2554,8 +2485,7 @@ object PipelineQueries {
       // by id and runs codegen'd levenshtein per candidate. The title
       // frame feeds three consumers (keys + both verify sides) —
       // persisted for the one job, dropped on return.
-      editDistPairs(s,
-        t(s, d, "documents").select(col("doc_id"), col("text")))
+      editDistPairs(t(s, d, "documents").select(col("doc_id"), col("text")))
     },
 
     // --- dedup threshold-sensitivity sweep ------------------------------

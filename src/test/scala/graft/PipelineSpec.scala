@@ -116,7 +116,7 @@ class PipelineSpec extends GraftSuite {
       5L -> "alpha beta gamma delta epsilon qqta", // two subs → ed 2
       6L -> "totally different words here now ok"
     ).toDF("doc_id", "text")
-    val got = graft.queries.PipelineQueries.editDistPairs(spark, docs)
+    val got = graft.queries.PipelineQueries.editDistPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == Set((1L, 2L, 1), (1L, 3L, 1), (1L, 4L, 1), (2L, 3L, 1)),
       got.mkString(","))
@@ -143,7 +143,7 @@ class PipelineSpec extends GraftSuite {
       (i, ta) <- titles; (j, tb) <- titles if i < j
       d = lev(ta, tb) if d <= 1
     } yield (i, j, d)).toSet
-    val got = graft.queries.PipelineQueries.editDistPairs(spark, docs)
+    val got = graft.queries.PipelineQueries.editDistPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == expected, s"got ${got.size}, expected ${expected.size}")
     assert(expected.nonEmpty, "fixture corpus must contain ed<=1 pairs")
