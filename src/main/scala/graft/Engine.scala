@@ -238,14 +238,8 @@ class Engine(val spark: SparkSession) {
         // count from the plan's RDD equals df.count().
         val qe = df.queryExecution
         val n = qe.toRdd.count()
-        val drops = qe.observedMetrics.iterator.flatMap { case (name, row) =>
-          if (!name.startsWith("graft_")) Iterator.empty
-          else row.schema.fieldNames.zipWithIndex.iterator.map { case (f, i) =>
-            s"$name.$f" -> (if (row.isNullAt(i)) 0L else row.get(i) match {
-              case v: Number => v.longValue()
-              case _         => 0L
-            })
-          }
+        val drops = GraftMetrics.counters(qe).flatMap { case (name, fields) =>
+          fields.map { case (f, v) => s"$name.$f" -> v }
         }.toMap
         if (drops.nonEmpty) jobObserved.put(jobId, drops)
         jobs.replace(jobId, Running, Finished(n))

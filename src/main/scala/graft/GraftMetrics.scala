@@ -15,6 +15,19 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object GraftMetrics {
   private val MarkerKey = "spark.graft.metrics.registered"
 
+  /** The `graft_*` observed metrics of an executed `qe`, each as its
+    * (field, value) pairs in schema order; a null or non-numeric field
+    * reads 0. */
+  def counters(qe: QueryExecution): Seq[(String, Seq[(String, Long)])] =
+    qe.observedMetrics.toSeq.collect { case (name, row) if name.startsWith("graft_") =>
+      name -> row.schema.fieldNames.toSeq.zipWithIndex.map { case (f, i) =>
+        f -> (if (row.isNullAt(i)) 0L else row.get(i) match {
+          case n: Number => n.longValue()
+          case _ => 0L
+        })
+      }
+    }
+
   /** Idempotent per session: `Engine.session()` calls this on every
     * invocation but `getOrCreate` hands back the same SparkSession, so an
     * unguarded register would stack duplicate listeners (and duplicate
@@ -26,18 +39,10 @@ object GraftMetrics {
     spark.conf.set(MarkerKey, "true")
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (name, row) =>
-          if (name.startsWith("graft_")) {
-            val fields = row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-              f -> (if (row.isNullAt(i)) 0L else row.get(i) match {
-                case n: Number => n.longValue()
-                case _ => 0L
-              })
-            }
-            if (fields.exists(_._2 != 0L))
-              System.err.println(
-                s"[graft] $name: ${fields.map { case (k, v) => s"$k=$v" }.mkString(", ")}")
-          }
+        counters(qe).foreach { case (name, fields) =>
+          if (fields.exists(_._2 != 0L))
+            System.err.println(
+              s"[graft] $name: ${fields.map { case (k, v) => s"$k=$v" }.mkString(", ")}")
         }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     })

@@ -29,8 +29,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * A half-written stage directory (failure before commit) has no
   * `_SUCCESS`; the next run's `SaveMode.Overwrite` clears the partial
-  * files before rewriting — the same convention the derived-source
-  * caches use (SourceQueries.materialize).
+  * files before rewriting — the same convention [[Artifact]] builders
+  * follow.
   */
 object PipelineRunner {
 
@@ -39,8 +39,8 @@ object PipelineRunner {
 
   /** Per-root run serialization: two concurrent runs sharing a root
     * would otherwise both see a stage's marker missing and race the
-    * same output directory (same hazard SourceQueries.materialize
-    * guards with cacheLock). JVM-local striped locks — cross-JVM
+    * same output directory (same hazard [[Artifact.ensure]] guards
+    * with cacheLock). JVM-local striped locks — cross-JVM
     * coordination is the deployment's scheduler's job, as it is for
     * the reference's scheduler-owned job state. */
   private val rootLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()

@@ -614,9 +614,8 @@ object AggregateQueries {
       // (decimal sums are merge-order-exact), the state can keep
       // folding forever without drift. AVG is derived sum/count at READ
       // time — never stored, the classic non-mergeable-metric mistake.
-      // One-time state build goes through the locked materialize like
-      // the other derived artifacts.
-      val stateDir = graft.queries.SourceQueries.cacheDir(d) + "/agg_state_suppkey"
+      // One-time state build is a graft.Artifact like the other
+      // derived artifacts, keyed on the lineitem snapshot it summarizes.
       val split = "1999-01-01"
       def partials(df: DataFrame): DataFrame = df.groupBy("l_suppkey").agg(
         count(lit(1)).as("cnt"),
@@ -624,10 +623,10 @@ object AggregateQueries {
         sum(col("l_extendedprice").cast(D12)).as("sp"),
         min(col("l_extendedprice").cast(D12)).as("minp"),
         max(col("l_extendedprice").cast(D12)).as("maxp"))
-      graft.queries.SourceQueries.materialize(stateDir) {
+      val stateDir = graft.Artifact.ensure(d, "agg_state_suppkey", "lineitem") { dir =>
         partials(t(s, d, "lineitem").filter(col("l_shipdate") < to_timestamp(lit(split))))
-          .write.mode("overwrite").parquet(stateDir)
-      }
+          .write.mode("overwrite").parquet(s"$dir/state")
+      } + "/state"
       val delta = partials(
         t(s, d, "lineitem").filter(col("l_shipdate") >= to_timestamp(lit(split))))
       Tables.parquet(s, stateDir).unionByName(delta)

@@ -2401,45 +2401,46 @@ object CurationQueries {
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), col("source"), explode(tri).as("sh"))
-    val ed = sh.filter(col("source") === "src0").select("sh").distinct().persist()
-    val bloomBytes = {
-      val nEval = ed.count() // sizes the filter; the build is distributed
-      val b = ed.select(xxhash64(col("sh")).as("h"))
-        .stat.bloomFilter("h", math.max(nEval, 64L), 0.0001)
-      val bos = new java.io.ByteArrayOutputStream()
-      b.writeTo(bos)
-      bos.toByteArray
+    val ed = sh.filter(col("source") === "src0").select("sh").distinct()
+    Qh.materializedWith(ed) {
+      val bloomBytes = {
+        val nEval = ed.count() // sizes the filter; the build is distributed
+        val b = ed.select(xxhash64(col("sh")).as("h"))
+          .stat.bloomFilter("h", math.max(nEval, 64L), 0.0001)
+        val bos = new java.io.ByteArrayOutputStream()
+        b.writeTo(bos)
+        bos.toByteArray
+      }
+      val mightHit = SqlShims.column(BloomFilterMightContain(
+        Literal(bloomBytes, BinaryType),
+        SqlShims.expression(xxhash64(col("sh")))))
+      val ps = sh.filter(col("source") =!= "src0")
+      // one corpus-shingle scan counts probes AND bloom candidates
+      val perProbe = ps.groupBy("source").agg(
+        count(lit(1)).as("n_probe"),
+        sum(when(mightHit, 1L).otherwise(0L)).as("n_cand"))
+      val cand = ps.filter(mightHit) // only survivors pay the exact joins
+      val present = cand.join(broadcast(ed), "sh")
+        .groupBy("source").agg(count(lit(1)).as("n_present"))
+      val ev = sh.filter(col("source") === "src0")
+        .select(col("doc_id").as("eval_id"), col("sh"))
+      val pairs = cand.join(broadcast(ev), "sh")
+        .groupBy("doc_id", "source", "eval_id").agg(count(lit(1)).as("n_ov"))
+        .filter(col("n_ov") >= 5)
+        .groupBy("source").agg(
+          countDistinct("doc_id").as("n_docs_flagged"),
+          count(lit(1)).as("n_pairs"),
+          sum("n_ov").as("n_overlap_total"))
+      perProbe.join(present, Seq("source"), "left")
+        .join(pairs, Seq("source"), "left")
+        .select(col("source"), col("n_probe"),
+          coalesce(col("n_present"), lit(0L)).as("n_present"),
+          coalesce(col("n_docs_flagged"), lit(0L)).as("n_docs_flagged"),
+          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
+          coalesce(col("n_overlap_total"), lit(0L)).as("n_overlap_total"),
+          ((col("n_cand") - coalesce(col("n_present"), lit(0L))) * 100 <=
+            (col("n_probe") - coalesce(col("n_present"), lit(0L)))).as("fp_ok"))
+        .orderBy("source")
     }
-    val mightHit = SqlShims.column(BloomFilterMightContain(
-      Literal(bloomBytes, BinaryType),
-      SqlShims.expression(xxhash64(col("sh")))))
-    val ps = sh.filter(col("source") =!= "src0")
-    // one corpus-shingle scan counts probes AND bloom candidates
-    val perProbe = ps.groupBy("source").agg(
-      count(lit(1)).as("n_probe"),
-      sum(when(mightHit, 1L).otherwise(0L)).as("n_cand"))
-    val cand = ps.filter(mightHit) // only survivors pay the exact joins
-    val present = cand.join(broadcast(ed), "sh")
-      .groupBy("source").agg(count(lit(1)).as("n_present"))
-    val ev = sh.filter(col("source") === "src0")
-      .select(col("doc_id").as("eval_id"), col("sh"))
-    val pairs = cand.join(broadcast(ev), "sh")
-      .groupBy("doc_id", "source", "eval_id").agg(count(lit(1)).as("n_ov"))
-      .filter(col("n_ov") >= 5)
-      .groupBy("source").agg(
-        countDistinct("doc_id").as("n_docs_flagged"),
-        count(lit(1)).as("n_pairs"),
-        sum("n_ov").as("n_overlap_total"))
-    val res = perProbe.join(present, Seq("source"), "left")
-      .join(pairs, Seq("source"), "left")
-      .select(col("source"), col("n_probe"),
-        coalesce(col("n_present"), lit(0L)).as("n_present"),
-        coalesce(col("n_docs_flagged"), lit(0L)).as("n_docs_flagged"),
-        coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-        coalesce(col("n_overlap_total"), lit(0L)).as("n_overlap_total"),
-        ((col("n_cand") - coalesce(col("n_present"), lit(0L))) * 100 <=
-          (col("n_probe") - coalesce(col("n_present"), lit(0L)))).as("fp_ok"))
-      .orderBy("source")
-    Qh.materializedWith(ed)(res)
   }
 }

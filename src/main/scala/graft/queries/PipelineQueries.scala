@@ -263,8 +263,7 @@ object PipelineQueries {
     * touches ~nProbe/k of the corpus on disk instead of scanning it. */
   private[graft] def annIvfIndexTop10(s: SparkSession, d: String): DataFrame = {
     import graft.functions.IvfIndex
-    val dir = s"${SourceQueries.cacheDir(d)}/ivf16"
-    SourceQueries.materialize(s"$dir/cells") {
+    val dir = graft.Artifact.ensure(d, "ivf16", "embeddings") { dir =>
       IvfIndex.buildIndex(vecs(s, d), k = 16, dir)
     }
     val centers = IvfIndex.loadCentroids(s, dir)
@@ -294,15 +293,10 @@ object PipelineQueries {
     * the files. */
   private[graft] def annIvfUpsertTop10(s: SparkSession, d: String): DataFrame = {
     import graft.functions.IvfIndex
-    val dir = s"${SourceQueries.cacheDir(d)}/ivf16_upsert"
     val e = vecs(s, d)
-    // commit marker lands only after BOTH steps: a build that died
-    // before the upsert must not leave a silently smaller index
-    SourceQueries.materialize(s"$dir/commit") {
+    val dir = graft.Artifact.ensure(d, "ivf16_upsert", "embeddings") { dir =>
       IvfIndex.buildIndex(e.filter(col("vec_id") % 10 =!= 0), k = 16, dir)
       IvfIndex.upsertIndex(e.filter(col("vec_id") % 10 === 0), dir)
-      s.range(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$dir/commit")
     }
     val centers = IvfIndex.loadCentroids(s, dir)
     val qv = queryVec(e)
@@ -322,8 +316,7 @@ object PipelineQueries {
     * vectors for 100 ids via a broadcast semi join. */
   private[graft] def annPqTop10(s: SparkSession, d: String): DataFrame = {
     import graft.functions.PqIndex
-    val dir = s"${SourceQueries.cacheDir(d)}/pq16x32"
-    SourceQueries.materialize(s"$dir/encoded") {
+    val dir = graft.Artifact.ensure(d, "pq16x32", "embeddings") { dir =>
       PqIndex.buildIndex(vecs(s, d), m = 16, k = 32, dir)
     }
     val e = vecs(s, d)
@@ -340,8 +333,7 @@ object PipelineQueries {
     * broadcast semi join. PartitionFilters asserted in PlanShapeSpec. */
   private[graft] def annIvfPqTop10(s: SparkSession, d: String): DataFrame = {
     import graft.functions.{IvfIndex, PqIndex}
-    val dir = s"${SourceQueries.cacheDir(d)}/ivfpq16"
-    SourceQueries.materialize(s"$dir/cells") {
+    val dir = graft.Artifact.ensure(d, "ivfpq16", "embeddings") { dir =>
       PqIndex.buildIvfPqIndex(vecs(s, d), kCells = 16, m = 16, k = 32, dir)
     }
     val e = vecs(s, d)
@@ -365,16 +357,11 @@ object PipelineQueries {
     * the same frozen-centroid reason as annIvfUpsertTop10. */
   private[graft] def annIvfPqUpsertTop10(s: SparkSession, d: String): DataFrame = {
     import graft.functions.{IvfIndex, PqIndex}
-    val dir = s"${SourceQueries.cacheDir(d)}/ivfpq16_upsert"
     val e = vecs(s, d)
-    // commit marker lands only after BOTH steps: a build that died
-    // before the upsert must not leave a silently smaller index
-    SourceQueries.materialize(s"$dir/commit") {
+    val dir = graft.Artifact.ensure(d, "ivfpq16_upsert", "embeddings") { dir =>
       PqIndex.buildIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0),
         kCells = 16, m = 16, k = 32, dir)
       PqIndex.upsertIvfPqIndex(e.filter(col("vec_id") % 10 === 0), dir)
-      s.range(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$dir/commit")
     }
     val qv = queryVec(e)
     val probes = IvfIndex.probeCells(IvfIndex.loadCentroids(s, dir), qv, nProbe = 6)
@@ -1008,151 +995,6 @@ object PipelineQueries {
   private[queries] def minhashPairsShared(s: SparkSession, d: String): DataFrame =
     Tables.parquet(s, s"${ensureLshIndex(s, d)}/pairs")
 
-  /** Filesystem-level fingerprint of the corpus behind `d`'s documents
-    * table: (name, size, mtime) of every data file, digested. Keys the
-    * LSH artifact directory so a corpus REWRITTEN IN PLACE (regenerated
-    * testdata, a refreshed snapshot at the same path) can never be
-    * served stale pairs — the artifact is tagged to the exact source
-    * snapshot it was built from, the way a production index carries its
-    * source-table version. No data is read; at 100 TB this is one
-    * file-listing the scan does anyway. */
-  private def tableFingerprint(d: String, table: String): String = {
-    // Local-FS walk BY DESIGN: the gate corpus is local parquet, and the
-    // signature needs only (relative path, size, mtime) per data file. A
-    // non-local deployment would key the same signature off a Hadoop
-    // FileSystem.listFiles walk. Fail loudly on a missing path — silently
-    // fingerprinting nothing would defeat the stale-artifact protection
-    // this exists to provide (serving pairs built from a corpus that has
-    // since moved). Recursive, so nested/Hive-partitioned table dirs
-    // fingerprint their real leaves, not just the top-level entries.
-    val root = new java.io.File(s"$d/$table.parquet")
-    require(root.exists,
-      s"tableFingerprint: ${root.getPath} does not exist (local-FS corpus expected)")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(f)
-    val files = walk(root)
-    require(files.nonEmpty, s"tableFingerprint: no data files under ${root.getPath}")
-    // Path component: relative to the table root for directory tables
-    // (unchanged format — existing artifact keys stay valid); a
-    // single-FILE table would relativize to the empty string, so fall
-    // back to its name to keep the component meaningful (round-12
-    // ADVICE). Deterministic either way.
-    def rel(f: java.io.File): String =
-      if (root.isFile) f.getName else root.toPath.relativize(f.toPath).toString
-    val sig = files
-      .map(f => s"${rel(f)}:${f.length}:${f.lastModified}")
-      .mkString("|")
-    java.security.MessageDigest.getInstance("MD5").digest(sig.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-  }
-
-  /** Delete superseded fingerprint-keyed artifact dirs (`<prefix><fp>` for
-    * fp ≠ the current one) under the cache dir. A stale dir can never be
-    * KEYED again — its fingerprint no longer matches the corpus — so this
-    * is garbage collection; called under [[SourceQueries.materialize]]'s
-    * lock AFTER the current build's commit marker lands (round-12 ADVICE:
-    * it used to run before the write, contradicting this doc), so within
-    * this JVM any query that re-resolves the fingerprint reads the
-    * surviving (current) dir.
-    *
-    * CACHE CONTRACT (cross-process, round 14): the lock is JVM-local and
-    * readers hold no lock, so cross-JVM safety rests on the READ LEASE —
-    * every JVM that resolves a fingerprint-keyed dir drops an
-    * `_IN_USE_<pid>` marker there ([[markInUse]]), and this pruner SKIPS
-    * any superseded dir carrying a marker whose pid is still alive: that
-    * process may hold lazily-evaluated frames against the old artifact
-    * (Spark scans resolve file lists late), and its lease lapses with
-    * the pid, so no release step exists to forget. Two graft JVMs
-    * racing build/prune on one corpus dir therefore can't pull files
-    * out from under each other (ArtifactRaceSpec drives a REAL second
-    * JVM through exactly that). A recycled or foreign live pid only
-    * delays GC — conservative leak, never a lost artifact. Remaining
-    * eligibility per UNLEASED stale dir: a COMMITTED dir (its
-    * `commit/_SUCCESS` exists) prunes immediately; an UNCOMMITTED dir
-    * (in-flight build in a process that predates the lease protocol, or
-    * crashed debris) prunes only when its RECURSIVELY newest mtime is
-    * older than the grace window, so a concurrent writer still flushing
-    * part files is never reaped mid-write and can never be left with a
-    * hole-y tree that later gains a valid commit marker (round-13
-    * review finding). */
-  private def pruneStaleArtifacts(cacheBase: String, prefix: String, keep: String): Unit = {
-    val dir = new java.io.File(cacheBase)
-    val graceMs = 10L * 60 * 1000
-    val cutoff = System.currentTimeMillis() - graceMs
-    def newest(f: java.io.File): Long =
-      if (f.isDirectory)
-        (f.lastModified +: Option(f.listFiles()).getOrElse(Array.empty).map(newest).toSeq).max
-      else f.lastModified
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    // Lease identity is (pid, process-start-millis) — round-16 verdict
-    // item #5: a bare-pid lease leaks under pid RECYCLING (a dead
-    // lease whose pid any live process reuses looks leased forever, so
-    // stale dirs accumulate until manual wiping). With the start time
-    // in the marker name, a recycled pid's start instant cannot match
-    // the dead leaseholder's, so the lease lapses. Legacy bare-pid
-    // markers (pre-round-17 writers) keep the old alive-pid check.
-    def leaseHeld(name: String): Boolean = {
-      val body = name.stripPrefix("_IN_USE_")
-      body.split('_') match {
-        case Array(p, s) => (p.toLongOption, s.toLongOption) match {
-          case (Some(pid), Some(start)) =>
-            ProcessHandle.of(pid).map[Boolean] { h =>
-              // start == 0: the WRITER couldn't read its own start
-              // instant — fall back to the alive-pid check; likewise
-              // when the CHECKER can't read the handle's instant
-              // (conservative: treat as held)
-              h.isAlive && (start == 0L || h.info().startInstant()
-                .map[Boolean](_.toEpochMilli == start).orElse(true))
-            }.orElse(false)
-          case _ => false
-        }
-        case Array(p) => p.toLongOption
-          .exists(pid => ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false))
-        case _ => false
-      }
-    }
-    def leasedByLiveProcess(f: java.io.File): Boolean =
-      Option(f.listFiles((_, n) => n.startsWith("_IN_USE_"))).getOrElse(Array.empty)
-        .exists(m => leaseHeld(m.getName))
-    if (dir.isDirectory)
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith(prefix) && f.getName != keep)
-        .filterNot(leasedByLiveProcess)
-        .filter(f => new java.io.File(f, "commit/_SUCCESS").exists || newest(f) < cutoff)
-        .foreach(rm)
-  }
-
-  /** Drop this process's read lease on `base` (see the cache contract
-    * above): an empty `_IN_USE_<pid>_<startMillis>` marker, created at
-    * RESOLUTION time — before any build or read — so a sibling JVM's
-    * pruner always sees the lease before this one depends on the files.
-    * The start-time component makes the lease identity survive pid
-    * recycling (round-16 verdict item #5): a recycled pid has a
-    * different start instant, so the dead lease lapses instead of
-    * pinning the dir forever. Best-effort: on a filesystem refusing the
-    * touch, the pruner's commit/grace rules still make any failure
-    * loud, never silently wrong. */
-  private[graft] def leaseMarkerName: String = {
-    val self = ProcessHandle.current()
-    val start = self.info().startInstant()
-      .map[Long](_.toEpochMilli).orElse(0L)
-    s"_IN_USE_${self.pid()}_$start"
-  }
-
-  private def markInUse(base: String): Unit = {
-    val dir = new java.io.File(base)
-    dir.mkdirs()
-    try {
-      new java.io.File(dir, leaseMarkerName).createNewFile(): Unit
-    } catch { case _: java.io.IOException => () }
-  }
-
-  private def corpusFingerprint(d: String): String = tableFingerprint(d, "documents")
-
   /** Ensure the persisted LSH index exists for `d`'s corpus and return
     * its base path. FOUR artifacts under one commit marker: the banded
     * bucket table (probe keys), the corpus shingle sets (verify
@@ -1162,14 +1004,13 @@ object PipelineQueries {
     * of oversized-bucket/dropped-id totals, so a consumer serving the
     * capped pair artifact can audit what the build dropped — the
     * no-silent-caps invariant survives the move from per-query observe()
-    * metrics to serve-from-disk; PipelineSpec pins it). The directory is
-    * keyed by [[corpusFingerprint]], so an in-place corpus rewrite
-    * rebuilds rather than serving stale pairs; the version suffix
-    * forces a rebuild when the artifact SET itself changes. */
-  private[graft] def ensureLshIndex(s: SparkSession, d: String): String = {
-    val base = s"${SourceQueries.cacheDir(d)}/lsh_idx3_${corpusFingerprint(d)}"
-    markInUse(base) // read lease BEFORE build/read — see the cache contract
-    SourceQueries.materialize(s"$base/commit") {
+    * metrics to serve-from-disk; PipelineSpec pins it). A
+    * [[graft.Artifact]] keyed on the documents table, so an in-place
+    * corpus rewrite rebuilds rather than serving stale pairs; the
+    * version suffix forces a rebuild when the artifact SET itself
+    * changes. */
+  private[graft] def ensureLshIndex(s: SparkSession, d: String): String =
+    graft.Artifact.ensure(d, "lsh_idx3", "documents") { base =>
       val sh = shingled(s, d).persist()
       try {
         val buckets = bandKeys(sh)
@@ -1201,36 +1042,16 @@ object PipelineQueries {
         minhashPairsFrom(sh, LshBucketCap)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$base/pairs")
-        s.range(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$base/commit")
-        // GC superseded-fingerprint dirs only AFTER this build committed
-        // (still under materialize's lock — see the cache contract).
-        pruneStaleArtifacts(SourceQueries.cacheDir(d), "lsh_idx3_",
-          new java.io.File(base).getName)
       } finally sh.unpersist()
     }
-    base
-  }
 
   /** Wipe the committed LSH artifact for `d`'s corpus and rebuild it from
     * the parquet inputs — the timed body of the bench's
     * `q_dedup_minhash_build` row (round-17 verdict item #7: the artifact
     * is build-once/serve-forever, so its cost was invisible to every
-    * bench run after the first; this makes it a measured row). Deleting
-    * the commit marker first means a crash mid-wipe can only leave an
-    * UNCOMMITTED dir, which [[SourceQueries.materialize]] rebuilds —
-    * never a stale-but-committed artifact. */
+    * bench run after the first; this makes it a measured row). */
   private[graft] def rebuildLshIndex(s: SparkSession, d: String): String = {
-    val base = new java.io.File(
-      s"${SourceQueries.cacheDir(d)}/lsh_idx3_${corpusFingerprint(d)}")
-    SourceQueries.cacheLock.synchronized {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(base, "commit")) // uncommit first (crash-safe order)
-      rm(base)
-    }
+    graft.Artifact.drop(d, "lsh_idx3", "documents")
     ensureLshIndex(s, d)
   }
 
@@ -1537,18 +1358,13 @@ object PipelineQueries {
     * artifact exists for `d`'s corpus and return its base path — the
     * boilerplate model's incremental-maintenance state (the text-cleaning
     * analog of the LSH bands index). */
-  private[queries] def ensureBoilerIndex(s: SparkSession, d: String): String = {
-    val base = s"${SourceQueries.cacheDir(d)}/boiler_idx1"
-    SourceQueries.materialize(s"$base/commit") {
+  private[queries] def ensureBoilerIndex(s: SparkSession, d: String): String =
+    graft.Artifact.ensure(d, "boiler_idx1", "documents") { base =>
       boilerplateSegs(t(s, d, "documents"))
         .select("doc_id", "source", "hs").distinct()
         .groupBy("source", "hs").agg(count(lit(1)).as("df"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$base/df")
-      s.range(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$base/commit")
     }
-    base
-  }
 
   /** Asymmetric containment pairs: |A∩B| / min(|A|,|B|) ≥ 0.9 over the
     * same distinct word-3-gram shingles as the jaccard family — the
@@ -1934,12 +1750,9 @@ object PipelineQueries {
   /** Persisted per-day HLL sketch table over the events stream,
     * EXCLUDING the newest day — the "history as of last night" the
     * incremental q_events_active_incremental probe updates with one
-    * delta-day scan. Same create-once commit-marker discipline as
-    * [[ensureLshIndex]]; keyed on the events table's fingerprint. */
-  private[graft] def ensureDaySketches(s: SparkSession, d: String): String = {
-    val base = s"${SourceQueries.cacheDir(d)}/dayhll_${tableFingerprint(d, "events")}"
-    markInUse(base) // read lease BEFORE build/read — see the cache contract
-    SourceQueries.materialize(s"$base/commit") {
+    * delta-day scan. A [[graft.Artifact]] keyed on the events table. */
+  private[graft] def ensureDaySketches(s: SparkSession, d: String): String =
+    graft.Artifact.ensure(d, "dayhll", "events") { base =>
       val ud = t(s, d, "events")
         .selectExpr("user_id", "unix_millis(CAST(ts AS TIMESTAMP)) div 86400000 AS d")
         .distinct().persist()
@@ -1949,14 +1762,8 @@ object PipelineQueries {
           .groupBy("d").agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$base/sketches")
-        s.range(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$base/commit")
-        pruneStaleArtifacts(SourceQueries.cacheDir(d), "dayhll_",
-          new java.io.File(base).getName)
       } finally ud.unpersist()
     }
-    base
-  }
 
   /** Survivors of `rounds` peel iterations toward the 2-core of the
     * near-dup graph, with their induced-subgraph degree — see the
@@ -7252,28 +7059,29 @@ object PipelineQueries {
       val base = ensureDaySketches(s, d)
       val ud = t(s, d, "events")
         .selectExpr("user_id", "unix_millis(CAST(ts AS TIMESTAMP)) div 86400000 AS d")
-        .distinct().persist()
-      val mx = ud.agg(max("d")).collect()(0).getLong(0) // driver scalar: today
-      val deltaSk = ud.filter(col("d") === mx)
-        .groupBy("d").agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
-      val all = Tables.parquet(s, s"$base/sketches").unionAll(deltaSk)
-      def est(n: Int, name: String) = all
-        .filter(col("d") >= mx - (n - 1))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as(name))
-      val exact = ud.filter(col("d") === mx).agg(count(lit(1)).as("dau"))
-        .crossJoin(ud.filter(col("d") >= mx - 6)
-          .agg(countDistinct("user_id").as("wau")))
-        .crossJoin(ud.filter(col("d") >= mx - 29)
-          .agg(countDistinct("user_id").as("mau")))
-      val ok = Seq("dau", "wau", "mau")
-        .map(c => abs(col(s"${c}_est") - col(c)) <= lit(0.1) * col(c))
-        .reduce(_ && _)
-      Qh.materializedWith(ud)(
+        .distinct()
+      Qh.materializedWith(ud) {
+        val mx = ud.agg(max("d")).collect()(0).getLong(0) // driver scalar: today
+        val deltaSk = ud.filter(col("d") === mx)
+          .groupBy("d").agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
+        val all = Tables.parquet(s, s"$base/sketches").unionAll(deltaSk)
+        def est(n: Int, name: String) = all
+          .filter(col("d") >= mx - (n - 1))
+          .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as(name))
+        val exact = ud.filter(col("d") === mx).agg(count(lit(1)).as("dau"))
+          .crossJoin(ud.filter(col("d") >= mx - 6)
+            .agg(countDistinct("user_id").as("wau")))
+          .crossJoin(ud.filter(col("d") >= mx - 29)
+            .agg(countDistinct("user_id").as("mau")))
+        val ok = Seq("dau", "wau", "mau")
+          .map(c => abs(col(s"${c}_est") - col(c)) <= lit(0.1) * col(c))
+          .reduce(_ && _)
         exact.crossJoin(est(1, "dau_est"))
           .crossJoin(est(7, "wau_est"))
           .crossJoin(est(30, "mau_est"))
           .select(lit(mx).as("d"), col("dau"), col("wau"), col("mau"),
-            ok.as("hll_ok")))
+            ok.as("hll_ok"))
+      }
     },
 
     // --- kNN leave-one-out classification audit -------------------------

@@ -57,7 +57,9 @@ object Qh {
   val D3: DecimalType = DecimalType(3, 2)   // rates in [0,1)
 
   /** Persist `inputs`, EAGERLY materialize `result`, then unpersist the
-    * inputs before returning.
+    * inputs before returning. `result` is by-name, so any driver-side
+    * action its block runs (a count, a collected scalar, a bloom-filter
+    * build) already reads the persisted inputs.
     *
     * This is the session-hygiene form of the persist() pattern used by
     * multi-consumer queries (a corpus-pass frame feeding several plan
@@ -84,8 +86,8 @@ object Qh {
     * trade ONLY for small, single-query, recomputable frames like
     * these. Expensive many-consumer state (the LSH pair set, IVF/PQ
     * indexes, pipeline stage outputs) must instead live as on-disk
-    * artifacts under an atomic _SUCCESS commit — see ensureLshIndex /
-    * SourceQueries.materialize / PipelineRunner.
+    * artifacts under an atomic _SUCCESS commit — see graft.Artifact /
+    * PipelineRunner.
     *
     * Persist DERIVED corpus-pass frames (shingles, exploded tokens,
     * recounts) — the ones whose recomputation repeats real CPU work.
@@ -94,7 +96,7 @@ object Qh {
     * (q_cur_datasheet/q_cur_end2end/q_embed_drift, round 8) — the
     * per-branch transform work dominates and stays either way, while
     * the cache adds a columnar encode pass. */
-  def materializedWith(inputs: DataFrame*)(result: DataFrame): DataFrame = {
+  def materializedWith(inputs: DataFrame*)(result: => DataFrame): DataFrame = {
     inputs.foreach(_.persist())
     try result.localCheckpoint(eager = true)
     finally inputs.foreach(_.unpersist())

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,24 +10,13 @@ import org.apache.spark.sql.functions._
   * The reference's TPC-H path is `|`-delimited CSV (reference
   * datafusion.proto:1163-1167, scheduler/src/test_utils.rs:134-140). The
   * driver ships only parquet, so each format query materializes a small
-  * derived copy of `nation`/`region` in that format under /tmp once, then
-  * queries it — proving the scan path (schema, delimiter, header,
-  * pushdown) end-to-end. The oracle reads the original parquet: results
+  * derived copy of `nation`/`region` in that format under /tmp once per
+  * input snapshot ([[graft.Artifact]]), then queries it — proving the
+  * scan path (schema, delimiter, header, pushdown) end-to-end. The oracle reads the original parquet: results
   * must agree exactly, which is the point.
   */
 object SourceQueries {
   private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.df(s, d, n)
-
-  /** Bump when any derived-source layout below changes (columns,
-    * format, partitioning): stale /tmp caches from an earlier code
-    * version would otherwise be read with the new schema. */
-  private val CacheVersion = "v2"
-
-  /** Collision-free cache dir per source sfDir: the readable sanitized
-    * name alone is lossy ('sf0.1' and 'sf0_1' collide), so the exact
-    * path's hash is appended, plus the layout version. */
-  def cacheDir(d: String): String =
-    s"/tmp/graft_src/${CacheVersion}_${d.replaceAll("[^a-zA-Z0-9]", "_")}_${Integer.toHexString(d.hashCode)}"
 
   /** Create-once catalog table: table/bucket/stats metadata lives in the
     * (in-memory) session catalog, so a fresh session must recreate the
@@ -45,35 +34,34 @@ object SourceQueries {
       build
     }
 
+  /** Guards every create-once build in this JVM: [[graft.Artifact]]'s
+    * check-build-commit and [[freshCatalogTable]]'s catalog tables. */
   private[graft] val cacheLock = new Object
 
-  /** One-time cache materialization, safe under concurrent first use
-    * from multiple sessions/threads in this JVM: the check-then-write is
-    * serialized behind a single lock (cheap — it only ever guards the
-    * one-time write), and SaveMode.Overwrite clears any partial files a
-    * previously-failed write left behind before _SUCCESS existed. */
-  private[queries] def materialize(path: String)(write: => Unit): String =
-    cacheLock.synchronized {
-      if (!new java.io.File(path, "_SUCCESS").exists()) write
-      path
-    }
-
   /** Write `nation` as |-delimited headerless CSV (mirroring the
-    * reference's .tbl layout) once per (sfDir) and return its path. */
+    * reference's .tbl layout) once per `nation` snapshot and return its
+    * path. */
   private def nationCsv(s: SparkSession, d: String): String =
-    materialize(s"${cacheDir(d)}/nation_csv") {
+    Artifact.ensure(d, "nation_csv", "nation") { dir =>
       t(s, d, "nation").coalesce(1).write.mode(SaveMode.Overwrite)
         .option("delimiter", "|").option("header", "false")
-        .csv(s"${cacheDir(d)}/nation_csv")
-    }
+        .csv(s"$dir/data")
+    } + "/data"
 
   private def ordersJson(s: SparkSession, d: String): String =
-    materialize(s"${cacheDir(d)}/orders_json") {
+    Artifact.ensure(d, "orders_json", "orders") { dir =>
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderpriority"))
-        .coalesce(1).write.mode(SaveMode.Overwrite).json(s"${cacheDir(d)}/orders_json")
-    }
+        .coalesce(1).write.mode(SaveMode.Overwrite).json(s"$dir/data")
+    } + "/data"
+
+  /** `orders` laid out as Hive-style `o_orderpriority=<v>/` dirs. */
+  private[graft] def ordersPart(s: SparkSession, d: String): String =
+    Artifact.ensure(d, "orders_part", "orders") { dir =>
+      t(s, d, "orders").write.mode(SaveMode.Overwrite)
+        .partitionBy("o_orderpriority").parquet(s"$dir/data")
+    } + "/data"
 
   /** Events re-laid-out by a sort key, range-partitioned into 32 files
     * with small parquet row groups (32 KiB here so layout effects are
@@ -83,7 +71,7 @@ object SourceQueries {
     * of structurally identical writes. */
   private[graft] def eventsLayout(
       s: SparkSession, d: String, name: String)(key: DataFrame => Column): String =
-    materialize(s"${cacheDir(d)}/$name") {
+    Artifact.ensure(d, name, "events") { dir =>
       // INT96 (Spark's legacy default timestamp encoding) carries no
       // row-group statistics — min/max pruning on ts requires the modern
       // INT64 micros encoding.
@@ -98,9 +86,9 @@ object SourceQueries {
           .drop("zz")
           .write.mode(SaveMode.Overwrite)
           .option("parquet.block.size", 32 * 1024)
-          .parquet(s"${cacheDir(d)}/$name")
+          .parquet(s"$dir/data")
       } finally s.conf.set(tsType, prev)
-    }
+    } + "/data"
 
   /** Z-ordered events: 8-bit (user_id, time) Morton key. Bucket bounds
     * come from one metadata-sized agg at write time (layout decisions
@@ -159,10 +147,10 @@ object SourceQueries {
       // This deployment's spark-sql jar carries AvroFileFormat but not the
       // "avro" DataSourceRegister alias, so address it by class name.
       val fmt = "org.apache.spark.sql.avro.AvroFileFormat"
-      val path = materialize(s"${cacheDir(d)}/nation_avro") {
+      val path = Artifact.ensure(d, "nation_avro", "nation") { dir =>
         t(s, d, "nation").coalesce(1).write.mode(SaveMode.Overwrite)
-          .format(fmt).save(s"${cacheDir(d)}/nation_avro")
-      }
+          .format(fmt).save(s"$dir/data")
+      } + "/data"
       s.read.format(fmt).load(path)
         .groupBy("n_regionkey")
         .agg(count(lit(1)).as("n"), max("n_name").as("last_name"))
@@ -176,10 +164,10 @@ object SourceQueries {
       // datafusion.proto:99-115): a DIRECTORY of parquet files read as
       // one relation — at 100 TB every table is this shape, split by
       // spark.sql.files.maxPartitionBytes.
-      val path = materialize(s"${cacheDir(d)}/customer_multi") {
+      val path = Artifact.ensure(d, "customer_multi", "customer") { dir =>
         t(s, d, "customer").repartition(4).write.mode(SaveMode.Overwrite)
-          .parquet(s"${cacheDir(d)}/customer_multi")
-      }
+          .parquet(s"$dir/data")
+      } + "/data"
       Tables.parquet(s, path)
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
         .orderBy("c_mktsegment")
@@ -195,12 +183,8 @@ object SourceQueries {
       // o_orderpriority=<v>/ dirs; the IN filter prunes partitions at
       // planning time — at 100 TB only 2 of 5 directory trees are read
       // (PartitionFilters in the scan node, asserted in PlanShapeSpec).
-      val path = materialize(s"${cacheDir(d)}/orders_part") {
-        t(s, d, "orders").write.mode(SaveMode.Overwrite)
-          .partitionBy("o_orderpriority").parquet(s"${cacheDir(d)}/orders_part")
-      }
       // Hive-partitioned: Spark's partition discovery, not Tables.parquet
-      s.read.parquet(path)
+      s.read.parquet(ordersPart(s, d))
         .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
@@ -211,10 +195,10 @@ object SourceQueries {
     Q("q_orc_scan",
       """SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey""".stripMargin) { (s, d) =>
       // ORC via format string (reference generic format support §2.2).
-      val path = materialize(s"${cacheDir(d)}/region_orc") {
+      val path = Artifact.ensure(d, "region_orc", "region") { dir =>
         t(s, d, "region").coalesce(1).write.mode(SaveMode.Overwrite)
-          .orc(s"${cacheDir(d)}/region_orc")
-      }
+          .orc(s"$dir/data")
+      } + "/data"
       s.read.orc(path).select("r_regionkey", "r_name").orderBy("r_regionkey")
     },
 
@@ -355,18 +339,15 @@ object SourceQueries {
       // at planning time, data is never rewritten — the alternative
       // (backfill-rewrite the old batches) is the thing you cannot
       // afford at scale.
-      val base = s"${cacheDir(d)}/orders_evolve"
-      val path = materialize(base) {
+      val path = Artifact.ensure(d, "orders_evolve", "orders") { dir =>
         val o = t(s, d, "orders")
         o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_totalprice")
-          .write.mode(SaveMode.Overwrite).parquet(s"$base/batch=1")
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/data/batch=1")
         o.filter(col("o_orderkey") % 2 === 1)
           .select("o_orderkey", "o_totalprice", "o_orderpriority")
-          .write.mode(SaveMode.Overwrite).parquet(s"$base/batch=2")
-        // materialize() checks for a root _SUCCESS marker
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(base, "_SUCCESS")): Unit
-      }
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/data/batch=2")
+      } + "/data"
       // batch=N/ partitions with merged schemas: Spark's partition
       // discovery and schema merge, not Tables.parquet
       s.read.option("mergeSchema", "true").parquet(path)
@@ -388,16 +369,15 @@ object SourceQueries {
       // PlanShapeSpec), so at 100 TB a 50-field struct costs what the 2
       // used fields cost. The oracle reads the equivalent flat columns:
       // nesting must never change results.
-      val base = s"${cacheDir(d)}/orders_nested"
-      val path = materialize(base) {
+      val path = Artifact.ensure(d, "orders_nested", "orders") { dir =>
         t(s, d, "orders").select(
           col("o_orderkey"),
           struct(col("o_custkey").as("key"),
             col("o_orderpriority").as("priority")).as("cust"),
           struct(col("o_totalprice").as("price"),
             col("o_orderdate").as("odate")).as("fin"))
-          .write.mode(SaveMode.Overwrite).parquet(base)
-      }
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
+      } + "/data"
       Tables.parquet(s, path)
         .groupBy(col("cust.priority").as("priority"))
         .agg(count(lit(1)).as("n"), Qh.dsum(col("fin.price")).as("total"))

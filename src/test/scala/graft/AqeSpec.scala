@@ -150,11 +150,7 @@ class AqeSpec extends GraftSuite {
     val s = spark
     import s.implicits._
     // partitioned layout (shared with q_partitioned_scan's cache)
-    val path = graft.queries.SourceQueries.cacheDir(sf) + "/orders_part"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      Tables.df(spark, sf, "orders").write.mode("overwrite")
-        .partitionBy("o_orderpriority").parquet(path)
-    }
+    val path = graft.queries.SourceQueries.ordersPart(spark, sf)
     withConf(
       "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true",
       "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" -> "false",

@@ -7,7 +7,7 @@ import scala.sys.process._
   * same corpus dir without pulling files out from under each other. The
   * round-12/13 grace-window prune only narrowed that race; the round-14
   * closure is the READ LEASE (`_IN_USE_<pid>` markers — see
-  * `pruneStaleArtifacts`' cache contract): a superseded artifact dir is
+  * `Artifact`'s contract): a superseded artifact dir is
   * never pruned while any process holding a lease on it is alive, and a
   * lease lapses with its pid, so crashed processes can't wedge GC.
   *
@@ -29,7 +29,7 @@ class ArtifactRaceSpec extends GraftSuite {
       .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
 
   private def lshDirs(): Seq[java.io.File] = {
-    val cache = new java.io.File(graft.queries.SourceQueries.cacheDir(corpus))
+    val cache = new java.io.File(graft.Artifact.cacheDir(corpus))
     Option(cache.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("lsh_idx3_")).toSeq
   }
@@ -55,7 +55,7 @@ class ArtifactRaceSpec extends GraftSuite {
     reingest()
     val baseV1 = graft.queries.PipelineQueries.ensureLshIndex(spark, corpus)
     val v1 = new java.io.File(baseV1)
-    assert(new java.io.File(v1, graft.queries.PipelineQueries.leaseMarkerName).exists,
+    assert(new java.io.File(v1, graft.Artifact.leaseMarkerName).exists,
       "resolution must drop this JVM's (pid, start-time) read lease")
     // a frame this JVM holds against the v1 artifact, Spark-lazy like any
     // pipeline intermediate (file list resolved, data not yet read)

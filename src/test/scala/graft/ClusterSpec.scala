@@ -443,8 +443,8 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
     // Validates the Qh.materializedWith durability caveat under REAL
     // executor loss: lineage-truncated blocks are unrecoverable once
     // every holder is gone — the failure is loud, never a silent wrong
-    // answer — while the on-disk artifact discipline (ensureLshIndex et
-    // al.) rides out the same loss because relaunched executors rescan
+    // answer — while the on-disk artifact discipline (graft.Artifact)
+    // rides out the same loss because relaunched executors rescan
     // durable storage.
     waitForExecutors(2)
     val df = cs.range(0, 100000, 1, 8).toDF("id").localCheckpoint(true)

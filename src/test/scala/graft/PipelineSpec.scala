@@ -730,7 +730,7 @@ class PipelineSpec extends GraftSuite {
   test("PQ index stores codes only — no raw vectors — at 16 codes per 64-dim vector") {
     // force the build, then inspect the encoded layout
     SparkEntry.queries("q_ann_pq")(spark, sf).collect()
-    val dir = s"${graft.queries.SourceQueries.cacheDir(sf)}/pq16x32"
+    val dir = graft.Artifact.path(sf, "pq16x32", "embeddings")
     val enc = spark.read.parquet(s"$dir/encoded")
     assert(enc.columns.sorted.toSeq == Seq("codes", "label", "vec_id"), enc.columns.mkString(","))
     val sizes = enc.select(org.apache.spark.sql.functions.size(col("codes"))).distinct()
