@@ -319,7 +319,21 @@ object Engine {
     * reference's stage-boundary re-optimization,
     * execution_stage.rs:240-261); on top: UTC, shuffle partitions sized
     * to the machine rather than Spark's default 200. On a real cluster
-    * the same settings hold; only master/memory change. */
+    * the same settings hold; only master/memory change.
+    *
+    * Artifact isolation is off (`spark.sql.artifact.isolation.enabled`).
+    * With it on — Spark 4's default — every `newSession()` child runs its
+    * tasks under its own executor classloader, and `CodeGenerator`'s
+    * cache is keyed by (classloader, code): each JDBC connection, tenant
+    * and Connect session compiled again every class the driver had
+    * already compiled, and fetched the class files from the driver over
+    * RPC. graft ships all its code on the application classpath and adds
+    * no per-session artifacts, so isolation bought nothing. What it gives
+    * up: a jar added with `ADD JAR` in one session is visible to every
+    * session (the Spark 3 Thrift-server behaviour). Temp views and conf
+    * stay per session. Spark reads the setting only when a session is
+    * created, so it must be on the builder — it lands on the SparkConf
+    * and every child inherits it; a runtime `spark.conf.set` is too late. */
   def session(
       master: String = "local[*]",
       shufflePartitions: Int = 32,
@@ -354,6 +368,7 @@ object Engine {
       // runtime set in Tables.df — a session that flips this to false
       // would make nanos files unreadable again.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

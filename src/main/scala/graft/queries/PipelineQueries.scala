@@ -1910,43 +1910,52 @@ object PipelineQueries {
     * large-star/small-star pattern); rounds = graph diameter (near-dup
     * clusters are tiny, so 2-3). Each round is ONE shuffle of
     * (vertex, label) — the only shape that survives 100 TB. Shared by
-    * q_dedup_clusters and q_cur_keep_best (CurationQueries). */
+    * q_dedup_clusters and q_cur_keep_best (CurationQueries).
+    *
+    * The labels return through an eager `localCheckpoint`, so the edge
+    * cache and the last round's label cache are dropped before return,
+    * on the non-converged error path too: no cache outlives the call. */
   private[queries] def nearDupClusters(s: SparkSession, d: String): DataFrame = {
     val pairs = minhashPairsShared(s, d).select(col("i"), col("j"))
     val edges = pairs.union(pairs.select(col("j").as("i"), col("i").as("j"))).cache()
-    var labels = edges.select(col("i").as("v")).distinct()
-      .withColumn("lbl", col("v"))
     var cachedPrev: DataFrame = null
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 20) {
-      val viaNeighbors = edges
-        .join(labels, col("j") === col("v"))
-        .groupBy(col("i").as("v2")).agg(min("lbl").as("nlbl"))
-      // carry the old label through the round so convergence is a
-      // filter+count on the SAME cached frame — one join per round,
-      // not a second labels⋈next reconciliation join
-      val step = labels.join(viaNeighbors, col("v") === col("v2"), "left")
-        .select(col("v"), col("lbl").as("old_lbl"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .cache()
-      val changed = step.filter(col("lbl") =!= col("old_lbl")).count()
-      // `changed` materialized `step`, so the previous round's cache
-      // (and its lineage) is no longer needed — don't pin 20 rounds of
-      // label snapshots in executor storage for the session's lifetime
+    try {
+      var labels = edges.select(col("i").as("v")).distinct()
+        .withColumn("lbl", col("v"))
+      var converged = false
+      var rounds = 0
+      while (!converged && rounds < 20) {
+        val viaNeighbors = edges
+          .join(labels, col("j") === col("v"))
+          .groupBy(col("i").as("v2")).agg(min("lbl").as("nlbl"))
+        // carry the old label through the round so convergence is a
+        // filter+count on the SAME cached frame — one join per round,
+        // not a second labels⋈next reconciliation join
+        val step = labels.join(viaNeighbors, col("v") === col("v2"), "left")
+          .select(col("v"), col("lbl").as("old_lbl"),
+            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+          .cache()
+        val changed = step.filter(col("lbl") =!= col("old_lbl")).count()
+        // `changed` materialized `step`, so the previous round's cache
+        // (and its lineage) is no longer needed — don't pin 20 rounds of
+        // label snapshots in executor storage for the session's lifetime
+        if (cachedPrev != null) cachedPrev.unpersist()
+        cachedPrev = step
+        labels = step.select(col("v"), col("lbl"))
+        converged = changed == 0
+        rounds += 1
+      }
+      // a silently non-converged result would diverge from the oracle
+      // with no signal; 20 rounds = graph diameter 2^20-ish under
+      // min-label doubling, so hitting the cap means something is wrong
+      if (!converged)
+        sys.error(s"near-dup clustering: label propagation did not converge in $rounds rounds")
+      labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
+        .localCheckpoint(eager = true)
+    } finally {
       if (cachedPrev != null) cachedPrev.unpersist()
-      cachedPrev = step
-      labels = step.select(col("v"), col("lbl"))
-      converged = changed == 0
-      rounds += 1
+      edges.unpersist()
     }
-    // a silently non-converged result would diverge from the oracle
-    // with no signal; 20 rounds = graph diameter 2^20-ish under
-    // min-label doubling, so hitting the cap means something is wrong
-    if (!converged)
-      sys.error(s"near-dup clustering: label propagation did not converge in $rounds rounds")
-    edges.unpersist()
-    labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
   /** Per-doc Gopher-style repetition signals (shared by

@@ -26,6 +26,12 @@ import java.net.{InetAddress, ServerSocket, Socket}
   *    temp views and conf over a shared persistent catalog, exactly
   *    the reference's SessionContext-per-bearer-token contract
   *    (flight_sql.rs:125-162) and the `Engine.newSession` semantics;
+  *  - connections share compiled classes: `Engine.session` turns
+  *    Spark's per-session artifact classloaders off, so a statement one
+  *    connection ran compiles no plan class when another runs it
+  *    (WireSpec pins it). Only the row deserializer is compiled once
+  *    per connection and result type: the fetch runs under Hive's
+  *    per-session classloader;
   *  - prepared statements (`java.sql.PreparedStatement`) bind
   *    parameters per-execute against a cached statement, the
   *    reference's `$n` placeholder flow (flight_sql.rs:581-670);

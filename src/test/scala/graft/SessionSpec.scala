@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -36,5 +38,21 @@ class SessionSpec extends GraftSuite {
         |FROM VALUES (1), (2), (2), (3) AS t(k) ORDER BY k, c""".stripMargin)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
     assert(rows == Seq(1 -> 1L, 2 -> 3L, 2 -> 3L, 3 -> 3L))
+  }
+
+  test("a child session reuses the classes its parent compiled") {
+    // artifact isolation would give the child its own executor
+    // classloader, and codegen's cache is keyed by (classloader, code)
+    val child = spark.newSession()
+    assert(child.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    val sql = "SELECT id % 7 AS k, SUM(id * 3) AS s FROM range(0, 1000, 1, 4) " +
+      "GROUP BY id % 7 ORDER BY k"
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val parentRows = spark.sql(sql).collect().toSeq
+    val before = compiles.getCount
+    val childRows = child.sql(sql).collect().toSeq
+    val compiled = compiles.getCount - before
+    assert(childRows == parentRows)
+    assert(compiled == 0, s"the child session compiled $compiled classes")
   }
 }

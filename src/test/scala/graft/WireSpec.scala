@@ -1,6 +1,7 @@
 package graft
 
 import graft.server.WireServer
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.BeforeAndAfterAll
 
 import java.sql.{Connection, DriverManager}
@@ -194,5 +195,32 @@ class WireSpec extends GraftSuite with BeforeAndAfterAll {
       // but the persistent catalog is shared: conn2 still sees the table
       assert(queryStrings(conn2, "SELECT COUNT(*) FROM wire_orders").head.head.toLong > 0)
     } finally { conn1.close(); conn2.close() }
+  }
+
+  test("a statement one connection compiled compiles nothing on the next") {
+    // Janino compiles in this JVM (the server is in-process), so the
+    // codegen counter sees both connections' sessions and their tasks
+    val sql =
+      """SELECT o_orderpriority, COUNT(*) AS n, MAX(o_totalprice * 3) AS m
+        |FROM wire_orders WHERE o_orderstatus <> 'P'
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val connA = connect()
+    val connB = connect()
+    try {
+      val a = queryStrings(connA, sql)
+      // The fetch RPC builds the row deserializer on the connection's
+      // handler thread, whose context classloader is Hive's per-session
+      // UDFClassLoader, so each connection compiles it once per result
+      // type (nullable string, bigint, nullable double here). Warm it
+      // with a plan that shares nothing else with `sql`.
+      assert(queryStrings(connB,
+        "SELECT CAST(NULL AS STRING), 1L, CAST(NULL AS DOUBLE)").size == 1)
+      val before = compiles.getCount
+      val b = queryStrings(connB, sql)
+      val compiled = compiles.getCount - before
+      assert(a.nonEmpty && b == a)
+      assert(compiled == 0, s"connection B compiled $compiled classes")
+    } finally { connA.close(); connB.close() }
   }
 }
