@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.queries.Qh
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -45,19 +46,18 @@ object IvfIndex {
       if (total <= maxTrainRows) vecs
       else vecs.sample(withReplacement = false,
         math.min(1.0, maxTrainRows.toDouble * 1.05 / total), seed = 42L)
-    val cached = base.persist()
-    try {
+    Qh.persisting(base) {
       // under the cap the "sample" IS the input, so its count is already
       // known — one fewer whole-input action (round 18; bit-identical:
       // n == total by definition on that branch)
-      val n = if (total <= maxTrainRows) total else cached.count()
+      val n = if (total <= maxTrainRows) total else base.count()
       val stride = math.max(1L, n / k)
       // deterministic spread seeding; ids need not be dense — if the
       // pmod-stride filter under-fills (sparse/structured id spaces),
       // top up from the first vectors by id so exactly min(k, n)
       // centroids always exist (an empty centroid set would assign every
       // row a null cell)
-      val strided = cached
+      val strided = base
         .filter(pmod(col("vec_id"), lit(stride)) === 0)
         .orderBy("vec_id")
         .limit(k)
@@ -65,14 +65,14 @@ object IvfIndex {
       var centers: Array[Array[Double]] =
         if (strided.length >= math.min(k, n).toInt) strided
         else {
-          val fill = cached.orderBy("vec_id").limit(k)
+          val fill = base.orderBy("vec_id").limit(k)
             .select("v").collect().map(_.getSeq[Double](0).toArray)
           (strided ++ fill.filterNot(f => strided.exists(_.sameElements(f))))
             .take(math.min(k, n.toInt))
         }
       var it = 0
       while (it < iters) {
-        val assigned = cached.withColumn("cell", assign(centers, col("v")))
+        val assigned = base.withColumn("cell", assign(centers, col("v")))
         // new centroid = element-wise mean of the cell's vectors, keyed
         // by cell id. A cell that attracted no vectors keeps its previous
         // centroid — positional indexing would shrink k and permute ids.
@@ -91,7 +91,7 @@ object IvfIndex {
         it += 1
       }
       centers
-    } finally cached.unpersist()
+    }
   }
 
   /** Persist a build-once/probe-many IVF index under `dir`: the k

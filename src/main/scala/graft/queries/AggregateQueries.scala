@@ -133,20 +133,17 @@ object AggregateQueries {
     * at each tie-run's last row, and the median selector ("MIN(value)
     * WHERE cum·2 ≥ tot") is tie-order invariant, so the answer is
     * bit-identical. The collapsed frame is persisted across
-    * groupedPrefix's consumers and the model-sized result checkpointed
-    * (the Qh.materializedWith discipline). */
+    * groupedPrefix's consumers and the model-sized result checkpointed. */
   private def weightedMedianExact(s: SparkSession, d: String): DataFrame = {
     val coll = t(s, d, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"),
         col("l_quantity").cast("long").as("w"))
       .groupBy("l_returnflag", "l_extendedprice")
       .agg(sum("w").as("w"))
-    // persist BEFORE groupedPrefix: its eager bounds pass is the first
-    // job and populates this cache, so the collapse runs exactly once
-    // across bounds/offsets/final (inlined materializedWith discipline)
-    coll.persist()
-    try weightedMedianExactFrom(coll)
-    finally coll.unpersist()
+    // groupedPrefix's eager bounds pass is the first job and populates
+    // this cache, so the collapse runs exactly once across
+    // bounds/offsets/final
+    Qh.persisting(coll)(weightedMedianExactFrom(coll))
   }
 
   /** The exact weighted-median machinery over an already-collapsed
@@ -156,8 +153,8 @@ object AggregateQueries {
     * instead of scanning lineitem a second time (guide §2.3 "shuffle
     * fewer bytes" / §2.4 — the two branches are keyed identically and
     * differ only in which aggregate they fold over the collapsed rows).
-    * Caller owns persist/unpersist of `coll`. Bit-identical output: this
-    * is the exact code path q_agg_weighted_exact always ran, verbatim. */
+    * Bit-identical output: this is the exact code path
+    * q_agg_weighted_exact always ran, verbatim. */
   private def weightedMedianExactFrom(coll: DataFrame): DataFrame = {
     val tot = coll.groupBy("l_returnflag").agg(sum("w").as("tot"))
     groupedPrefix(coll, "l_returnflag", "l_extendedprice", col("w"))
@@ -445,34 +442,32 @@ object AggregateQueries {
           col("l_quantity").cast("long").as("w"))
         .groupBy("l_returnflag", "l_extendedprice")
         .agg(sum("w").as("w"), count(lit(1)).as("cnt"))
-      coll.persist()
       // The sketch job runs on its own single-use thread: a fresh thread
       // inherits THIS query's SparkContext local properties (job group,
       // tags), where a pooled global-executor thread would carry whatever
       // query created it. It is awaited on every path — also when the
       // exact chain throws — before `coll` is unpersisted under it.
-      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val skF = Future {
-          coll.groupBy("l_returnflag")
-            .agg(wmedian(col("l_extendedprice"), col("w").cast("double")).as("wm"),
-              sum("cnt").as("n"))
-            .localCheckpoint(eager = true)
-        }(ExecutionContext.fromExecutor(pool))
-        val exact =
-          try weightedMedianExactFrom(coll.select("l_returnflag", "l_extendedprice", "w"))
-          finally Await.ready(skF, Duration.Inf)
-        val sk = skF.value.get.get // rethrows the sketch job's failure
-        sk.join(exact, "l_returnflag")
-          .select(col("l_returnflag"), col("w_median_price"), col("n"),
-            (abs(col("wm") - col("w_median_price")) <=
-              abs(col("w_median_price")) * 0.01).as("wp_ok"))
-          .orderBy("l_returnflag")
-      } finally {
-        pool.shutdown()
-        coll.unpersist()
+      Qh.persisting(coll) {
+        val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+        try {
+          import scala.concurrent.{Await, ExecutionContext, Future}
+          import scala.concurrent.duration.Duration
+          val skF = Future {
+            coll.groupBy("l_returnflag")
+              .agg(wmedian(col("l_extendedprice"), col("w").cast("double")).as("wm"),
+                sum("cnt").as("n"))
+              .localCheckpoint(eager = true)
+          }(ExecutionContext.fromExecutor(pool))
+          val exact =
+            try weightedMedianExactFrom(coll.select("l_returnflag", "l_extendedprice", "w"))
+            finally Await.ready(skF, Duration.Inf)
+          val sk = skF.value.get.get // rethrows the sketch job's failure
+          sk.join(exact, "l_returnflag")
+            .select(col("l_returnflag"), col("w_median_price"), col("n"),
+              (abs(col("wm") - col("w_median_price")) <=
+                abs(col("w_median_price")) * 0.01).as("wp_ok"))
+            .orderBy("l_returnflag")
+        } finally pool.shutdown()
       }
     },
 
@@ -569,29 +564,28 @@ object AggregateQueries {
       val coll = t(s, d, "lineitem")
         .select(col("l_returnflag").as("rf"), col("l_extendedprice").as("v_raw"))
         .groupBy("rf", "v_raw").agg(count(lit(1)).as("cnt"))
-      coll.persist() // groupedPrefix's eager bounds pass populates it
-      try {
-      val sizes = coll.groupBy("rf").agg(sum("cnt").as("n"))
-      val res = groupedPrefix(coll, "rf", "v_raw", col("cnt"))
-        .join(broadcast(sizes), "rf")
-        .withColumn("k", expr("n div 20"))
-        .withColumn("v", col("v_raw").cast(D12))
-        .withColumn("inc",
-          greatest(lit(0L), least(col("cum"), col("n") - col("k"))
-            - greatest(col("cum") - col("cnt"), col("k"))))
-        .groupBy("rf")
-        .agg(
-          max("n").cast("bigint").as("n"),
-          max("k").cast("bigint").as("k"),
-          (sum(col("v") * col("inc")).cast("double")
-            / (max("n") - lit(2) * max("k"))).as("trimmed_mean"),
-          ((sum(col("v") * col("inc"))
-            + max("k") * min(when(col("cum") >= col("k") + 1, col("v")))
-            + max("k") * min(when(col("cum") >= col("n") - col("k"), col("v"))))
-            .cast("double") / max("n")).as("winsor_mean"))
-        .orderBy("rf")
-      res.localCheckpoint(eager = true)
-      } finally coll.unpersist()
+      // groupedPrefix's eager bounds pass populates the cache
+      Qh.materializedWith(coll) {
+        val sizes = coll.groupBy("rf").agg(sum("cnt").as("n"))
+        groupedPrefix(coll, "rf", "v_raw", col("cnt"))
+          .join(broadcast(sizes), "rf")
+          .withColumn("k", expr("n div 20"))
+          .withColumn("v", col("v_raw").cast(D12))
+          .withColumn("inc",
+            greatest(lit(0L), least(col("cum"), col("n") - col("k"))
+              - greatest(col("cum") - col("cnt"), col("k"))))
+          .groupBy("rf")
+          .agg(
+            max("n").cast("bigint").as("n"),
+            max("k").cast("bigint").as("k"),
+            (sum(col("v") * col("inc")).cast("double")
+              / (max("n") - lit(2) * max("k"))).as("trimmed_mean"),
+            ((sum(col("v") * col("inc"))
+              + max("k") * min(when(col("cum") >= col("k") + 1, col("v")))
+              + max("k") * min(when(col("cum") >= col("n") - col("k"), col("v"))))
+              .cast("double") / max("n")).as("winsor_mean"))
+          .orderBy("rf")
+      }
     },
 
     // --- incremental aggregate maintenance (partial-agg state merge) ----
@@ -974,7 +968,6 @@ object AggregateQueries {
                 (col("n0") + col("n")).cast(DecimalType(38, 0)))
               .as("drifted_95"))
           .orderBy("source")
-          .localCheckpoint(eager = true)
       }
     },
 

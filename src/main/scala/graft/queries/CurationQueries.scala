@@ -92,9 +92,8 @@ object CurationQueries {
     * CurationSpec can pin hand-computed cap/redistribute/clamp values
     * on a skewed fixture the near-uniform corpus can't produce. */
   private[graft] def epochSchedule(
-      tok: DataFrame, capEpochs: Long, budgetMult: Long): DataFrame = {
-    tok.persist()
-    try {
+      tok: DataFrame, capEpochs: Long, budgetMult: Long): DataFrame =
+    Qh.materializedWith(tok) {
       val g = tok.agg(sum("tok").as("tt"), count(lit(1)).as("ns")).head()
       val budget = budgetMult * g.getLong(0)
       val base = budget / g.getLong(1)
@@ -117,9 +116,7 @@ object CurationQueries {
           expr("(1000 * alloc) div tok").as("epochs_milli"),
           (col("alloc") === lit(capEpochs) * col("tok")).as("capped"))
         .orderBy("source")
-        .localCheckpoint(eager = true)
-    } finally tok.unpersist()
-  }
+    }
 
   /** Knuth multiplicative hash of a non-negative id, mod 2^32 — exact
     * BIGINT arithmetic both engines replicate bit-for-bit (same mix
@@ -1148,11 +1145,8 @@ object CurationQueries {
           Seq("doc_id"), "left_anti")
         .join(splitAssign(s, d).select("doc_id", "split"), "doc_id")
       // NOT persisted: the stage operators re-scan documents (8 pruned
-      // columnar scans), and caching the raw text-heavy relation for one
-      // job measured 26% SLOWER at sf0.1 — the per-branch split/shingle
-      // work dominates and a cache removes only the cheap scan while
-      // adding columnar encode cost. materializedWith is for DERIVED
-      // corpus-pass frames (shingles, exploded tokens), not raw scans.
+      // columnar scans); caching this raw scan measured 26% SLOWER at
+      // sf0.1 (see Qh.persisting).
       keep.groupBy("lang", "split")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens"))
         .orderBy("lang", "split")
@@ -2058,7 +2052,6 @@ object CurationQueries {
           .select(col("doc_id"), col("source"), col("qm"),
             col("ref_qm").as("norm_qm"))
           .orderBy("doc_id")
-          .localCheckpoint(eager = true)
       }
     },
 

@@ -433,8 +433,7 @@ object PipelineQueries {
         col("embedding").cast("array<double>").as("v"),
         expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1024.0) as bigint))")
           .as("q"))
-    e.persist()
-    try {
+    Qh.persisting(e) {
       // Cell count SELF-SIZES on the √n law (the customary IVF rule —
       // and this helper's own documented contract): per-cell occupancy
       // is then √n per side, so pass-1 candidates ≈ n·4·√n and the
@@ -499,8 +498,7 @@ object PipelineQueries {
           element_at(col("pc4"), 1).getField("o").cast("int").as("cell"),
           element_at(col("pc4"), 1).getField("d").as("dOwn"),
           transform(col("pc4"), p => p.getField("o").cast("int")).as("pcs"))
-      binned.persist()
-      try {
+      Qh.persisting(binned) {
         // per-(side, cell) radius — a ≤2k-row aggregate FRAME,
         // broadcast-joined into the pass-2 re-probe stream below (the
         // round-14 spelling collected it to a driver map and inlined it
@@ -567,8 +565,7 @@ object PipelineQueries {
           .select(col("k"), col("p.o").as("o"), col("p.d").as("d64"))
         val s0 = top4By(candA, "x", "y")
         val s1 = top4By(candB, "y", "x")
-        s0.persist(); s1.persist()
-        try {
+        Qh.persisting(s0, s1) {
           // current 4th-best per vector (MaxValue when under-filled —
           // forces a full re-probe of every populated cell)
           def d4Of(side: DataFrame, key: String) = side
@@ -627,9 +624,9 @@ object PipelineQueries {
               .unionByName(cand2y), "y", "x")
           use(nnPairsBy(f0).select(col("k").as("x"), col("o").as("y"), col("d64")),
             nnPairsBy(f1).select(col("o").as("x"), col("k").as("y"), col("d64")))
-        } finally { s0.unpersist(); s1.unpersist() }
-      } finally binned.unpersist()
-    } finally e.unpersist()
+        }
+      }
+    }
   }
 
   /** The mutual-NN coarse quantizer's cell-count law: k = ⌈√n⌉,
@@ -1011,14 +1008,14 @@ object PipelineQueries {
     * changes. */
   private[graft] def ensureLshIndex(s: SparkSession, d: String): String =
     graft.Artifact.ensure(d, "lsh_idx3", "documents") { base =>
-      val sh = shingled(s, d).persist()
-      try {
+      val sh = shingled(s, d)
+      Qh.persisting(sh) {
         val buckets = bandKeys(sh)
           .groupBy("band", "h1", "h2")
           .agg(graft.functions.BoundedMinSet
             .bounded_min_set(col("doc_id"), LshBucketCap).as("bs"))
-          .persist() // feeds both the bands write and the caps rollup
-        try {
+        // feeds both the bands write and the caps rollup
+        Qh.persisting(buckets) {
           buckets
             .observe("graft_lsh_index_cap",
               sum(when(col("bs.n") > LshBucketCap, lit(1)).otherwise(lit(0)))
@@ -1036,13 +1033,13 @@ object PipelineQueries {
                 .otherwise(lit(0L))).as("dropped_ids"))
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$base/caps")
-        } finally buckets.unpersist()
+        }
         sh.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$base/shingles")
         minhashPairsFrom(sh, LshBucketCap)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$base/pairs")
-      } finally sh.unpersist()
+      }
     }
 
   /** Wipe the committed LSH artifact for `d`'s corpus and rebuild it from
@@ -1076,7 +1073,7 @@ object PipelineQueries {
       .distinct()
     // the delta batch is shingled once for both its consumers (band
     // keys + the verify-join side) — at scale that is the whole
-    // per-batch cost, so don't pay it twice; dropped on return
+    // per-batch cost, so don't pay it twice
     Qh.materializedWith(deltaSh)(
       cand
         .join(deltaSh.select(col("doc_id").as("delta_id"), col("sh").as("sha")), "delta_id")
@@ -1111,14 +1108,12 @@ object PipelineQueries {
 
   /** Final (vec_id, vq, cid, dist) assignment of the fixed-point Lloyd's
     * run (k=4, 2 unrolled iterations) — the frame q_embed_kmeans rolls
-    * up and q_cur_mix_topics samples from. Eager checkpoint: the
-    * quantized corpus is persisted for the assignment/update passes and
-    * dropped before returning (the Qh.materializedWith discipline). */
+    * up and q_cur_mix_topics samples from. The quantized corpus is
+    * persisted for the assignment/update passes. */
   private[graft] def kmeansAssignments(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d).select(col("vec_id"),
       expr("transform(v, x -> CAST(floor(x * 16777216.0D) AS BIGINT))").as("vq"))
-    e.persist()
-    try {
+    Qh.materializedWith(e) {
       def assign(cents: Seq[(Long, Array[Long])]): DataFrame = {
         val cands = cents.map { case (cid, c) =>
           val cArr = array(c.map(lit): _*)
@@ -1146,8 +1141,8 @@ object PipelineQueries {
       val init = e.filter(col("vec_id") < 4).collect()
         .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toSeq.sortBy(_._1)
       val c1 = update(assign(init))
-      assign(c1).localCheckpoint(eager = true)
-    } finally e.unpersist()
+      assign(c1)
+    }
   }
 
   /** Fixed-point PageRank over a (src, dst) edge frame — the iteration
@@ -1157,8 +1152,7 @@ object PipelineQueries {
     * sets satisfy it). Returns (v, od, r) with r scaled by 1e15. */
   private[graft] def pageRankScaled(edges: DataFrame, iters: Int): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("od"))
-    edges.persist(); deg.persist()
-    try {
+    Qh.materializedWith(edges, deg) {
       val n = deg.count()
       val Scale = 1000000000000000L
       val base = 15L * Scale / (100L * n)
@@ -1178,8 +1172,7 @@ object PipelineQueries {
       }
       r.join(deg, col("v") === col("src"))
         .select(col("v"), col("od"), col("r"))
-        .localCheckpoint(eager = true)
-    } finally { edges.unpersist(); deg.unpersist() }
+    }
   }
 
   /** Retention rollup over a distinct (user_id, wk) activity frame —
@@ -1276,8 +1269,7 @@ object PipelineQueries {
 
   /** Eager form for the catalog query: the shingle frame feeds FOUR
     * consumers (postings ×2 via df-count + prefix, verify-join sides ×2)
-    * — persisted for the one materializing job, dropped on return, same
-    * rationale as [[minhashPairsShared]]. */
+    * — persisted for the one materializing job. */
   private[queries] def ngramPairsShared(s: SparkSession, d: String): DataFrame = {
     val shStr = spreadShingles(s, d)
     Qh.materializedWith(shStr)(ngramPairsFrom(shStr, NgramDfCap))
@@ -1449,9 +1441,8 @@ object PipelineQueries {
 
   /** The BM25 (k1=1.2, b=0.75) scoring core over the fixed query term
     * set, shared by [[bm25Top]] and [[rm3Top]]: calls `use` while the
-    * persisted `pt` frame is live, then drops it. Corpus stats (doc
-    * count, token total, per-term df) are one aggregate row of driver
-    * model-state scalars. */
+    * `pt` frame is persisted. Corpus stats (doc count, token total,
+    * per-term df) are one aggregate row of driver model-state scalars. */
   private def withBm25Core[A](s: SparkSession, d: String)(use: Bm25Core => A): A = {
     val terms = Seq("vector", "merge", "scan")
     val docs = t(s, d, "documents")
@@ -1459,8 +1450,7 @@ object PipelineQueries {
       .select(col("doc_id") +: size(col("w")).cast("long").as("dl") +:
         terms.indices.map(i =>
           size(expr(s"filter(w, x -> x = '${terms(i)}')")).cast("long").as(s"tf$i")): _*)
-    pt.persist()
-    try {
+    Qh.persisting(pt) {
       val st = pt.agg(
         count(lit(1)).as("n"), sum("dl").as("t"),
         sum((col("tf0") > 0).cast("long")).as("df0"),
@@ -1480,7 +1470,7 @@ object PipelineQueries {
       }.reduce(_ + _)
       use(Bm25Core(terms, docs, pt, n, norm,
         col("tf0") + col("tf1") + col("tf2"), scoreCol))
-    } finally pt.unpersist()
+    }
   }
 
   /** Okapi BM25 top-15 for the fixed query term set — the scoring core
@@ -1511,8 +1501,7 @@ object PipelineQueries {
       val n = bm.n
       val base = bm.pt.select(col("doc_id"), bm.hits.as("hits"),
         round(round(bm.score, 9) * 1e9, 0).cast("long").as("base_n"))
-      base.persist()
-      try {
+      Qh.persisting(base) {
         val fb = base.filter(col("hits") > 0)
           .orderBy(col("base_n").desc, col("doc_id")).limit(5).select("doc_id")
         val expTerms = bm.docs.join(broadcast(fb), "doc_id")
@@ -1525,8 +1514,7 @@ object PipelineQueries {
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
           .filter(col("term").isin(expTerms: _*))
           .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        tfx.persist()
-        try {
+        Qh.materializedWith(tfx) {
           val idfX = tfx.groupBy("term").agg(count(lit(1)).as("df")).collect()
             .map { r =>
               val df = r.getLong(1)
@@ -1550,9 +1538,8 @@ object PipelineQueries {
               Window.orderBy(col("final_n").desc, col("doc_id"))).cast("bigint"))
             .select("rn", "doc_id", "base_n", "exp_n", "final_n")
             .orderBy("rn")
-            .localCheckpoint(eager = true)
-        } finally tfx.unpersist()
-      } finally base.unpersist()
+        }
+      }
     }
 
   /** Deletion-neighborhood-blocked Levenshtein-≤1 pairs over the first-6-
@@ -1755,14 +1742,14 @@ object PipelineQueries {
     graft.Artifact.ensure(d, "dayhll", "events") { base =>
       val ud = t(s, d, "events")
         .selectExpr("user_id", "unix_millis(CAST(ts AS TIMESTAMP)) div 86400000 AS d")
-        .distinct().persist()
-      try {
+        .distinct()
+      Qh.persisting(ud) {
         val mx = ud.agg(max("d")).collect()(0).getLong(0)
         ud.filter(col("d") < mx)
           .groupBy("d").agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$base/sketches")
-      } finally ud.unpersist()
+      }
     }
 
   /** Survivors of `rounds` peel iterations toward the 2-core of the
@@ -1795,9 +1782,8 @@ object PipelineQueries {
     * convention); each round is ONE map-side-reduced argmax pass with
     * the current centers inlined as literals. Returns (rn, vec_id,
     * radius = the selected point's min-distance to the prior set). */
-  private[graft] def kcenterGreedy(e: DataFrame, k: Int): DataFrame = {
-    e.persist()
-    try {
+  private[graft] def kcenterGreedy(e: DataFrame, k: Int): DataFrame =
+    Qh.persisting(e) {
       val out = Seq.newBuilder[(Long, Long, Long)]
       var centers = List(
         e.filter(col("vec_id") === 0).head().getSeq[Long](1).toArray)
@@ -1815,8 +1801,7 @@ object PipelineQueries {
       }
       e.sparkSession.createDataFrame(out.result())
         .toDF("rn", "vec_id", "radius")
-    } finally e.unpersist()
-  }
+    }
 
   /** CUSUM over a (event_type, d, cnt) daily-count frame — the window
     * core of q_events_cusum (see the catalog entry for the closed-form
@@ -1882,12 +1867,10 @@ object PipelineQueries {
     * minimum in one round. Per round: one dst-keyed edge shuffle to
     * fetch neighbor labels, a (v, lbl) count (map-side partial), and a
     * vertex-scale max(struct(count, -lbl)) argmax — no window sort
-    * anywhere. Edges persist across rounds and drop on return; label
-    * frames chain lazily into one lineage (the caller materializes the
-    * result once). */
-  private[graft] def lpaCommunities(edges: DataFrame, rounds: Int): DataFrame = {
-    edges.persist()
-    try {
+    * anywhere. Edges persist across rounds; label frames chain lazily
+    * into one lineage, materialized once. */
+  private[graft] def lpaCommunities(edges: DataFrame, rounds: Int): DataFrame =
+    Qh.materializedWith(edges) {
       var labels = edges.select(col("src").as("v")).distinct()
         .withColumn("lbl", col("v"))
       for (_ <- 1 to rounds) {
@@ -1900,9 +1883,8 @@ object PipelineQueries {
           .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
           .select(col("src").as("v"), (-col("m.nl")).as("lbl"))
       }
-      labels.localCheckpoint(eager = true)
-    } finally edges.unpersist()
-  }
+      labels
+    }
 
   /** Connected components over the verified near-dup pair graph:
     * (doc_id, cluster_id = min reachable doc_id), for every doc that
@@ -1912,14 +1894,14 @@ object PipelineQueries {
     * (vertex, label) — the only shape that survives 100 TB. Shared by
     * q_dedup_clusters and q_cur_keep_best (CurationQueries).
     *
-    * The labels return through an eager `localCheckpoint`, so the edge
-    * cache and the last round's label cache are dropped before return,
-    * on the non-converged error path too: no cache outlives the call. */
+    * Each round's labels are an eager `localCheckpoint` whose one job
+    * also counts the labels that changed (an `observe`), so a round is
+    * one job, the lineage is cut every round, and the returned labels
+    * read no cache. */
   private[queries] def nearDupClusters(s: SparkSession, d: String): DataFrame = {
     val pairs = minhashPairsShared(s, d).select(col("i"), col("j"))
-    val edges = pairs.union(pairs.select(col("j").as("i"), col("i").as("j"))).cache()
-    var cachedPrev: DataFrame = null
-    try {
+    val edges = pairs.union(pairs.select(col("j").as("i"), col("i").as("j")))
+    Qh.persisting(edges) {
       var labels = edges.select(col("i").as("v")).distinct()
         .withColumn("lbl", col("v"))
       var converged = false
@@ -1928,21 +1910,16 @@ object PipelineQueries {
         val viaNeighbors = edges
           .join(labels, col("j") === col("v"))
           .groupBy(col("i").as("v2")).agg(min("lbl").as("nlbl"))
-        // carry the old label through the round so convergence is a
-        // filter+count on the SAME cached frame — one join per round,
-        // not a second labels⋈next reconciliation join
-        val step = labels.join(viaNeighbors, col("v") === col("v2"), "left")
+        // carrying the old label through the round makes convergence an
+        // observed count, not a second labels⋈next reconciliation join
+        val changed = org.apache.spark.sql.Observation()
+        labels = labels.join(viaNeighbors, col("v") === col("v2"), "left")
           .select(col("v"), col("lbl").as("old_lbl"),
             least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-          .cache()
-        val changed = step.filter(col("lbl") =!= col("old_lbl")).count()
-        // `changed` materialized `step`, so the previous round's cache
-        // (and its lineage) is no longer needed — don't pin 20 rounds of
-        // label snapshots in executor storage for the session's lifetime
-        if (cachedPrev != null) cachedPrev.unpersist()
-        cachedPrev = step
-        labels = step.select(col("v"), col("lbl"))
-        converged = changed == 0
+          .observe(changed, count(when(col("lbl") =!= col("old_lbl"), lit(1))).as("n"))
+          .select(col("v"), col("lbl"))
+          .localCheckpoint(eager = true)
+        converged = changed.get("n") == 0L
         rounds += 1
       }
       // a silently non-converged result would diverge from the oracle
@@ -1951,10 +1928,6 @@ object PipelineQueries {
       if (!converged)
         sys.error(s"near-dup clustering: label propagation did not converge in $rounds rounds")
       labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
-        .localCheckpoint(eager = true)
-    } finally {
-      if (cachedPrev != null) cachedPrev.unpersist()
-      edges.unpersist()
     }
   }
 
@@ -2299,8 +2272,8 @@ object PipelineQueries {
       // mega-cluster of identical titles is found via its 64 smallest
       // members — the LSH-cap trade); verification joins titles back
       // by id and runs codegen'd levenshtein per candidate. The title
-      // frame feeds three consumers (keys + both verify sides) —
-      // persisted for the one job, dropped on return.
+      // frame feeds three consumers (keys + both verify sides) and is
+      // persisted for the one job.
       editDistPairs(t(s, d, "documents").select(col("doc_id"), col("text")))
     },
 
@@ -2449,13 +2422,12 @@ object PipelineQueries {
       // all-pairs); per iteration ONE shuffle keyed by dst carries
       // (dst, contribution) longs; out-degrees and ranks are
       // vertex-scale frames co-keyed with the edge join. Edges + degrees
-      // are persisted across the three unrolled iterations and dropped
-      // on return (at production scale each iteration is a
-      // PipelineRunner checkpoint instead, like nearDupClusters's
-      // per-round cache retirement). N (graph order) is a driver
-      // model-state scalar, the BM25 convention. The symmetric graph has
-      // no dangling vertices (every vertex has out-degree >= 1), so no
-      // redistribution term is needed.
+      // are persisted across the three unrolled iterations (at
+      // production scale each iteration is a PipelineRunner checkpoint
+      // instead, like nearDupClusters's per-round checkpoint). N (graph
+      // order) is a driver model-state scalar, the BM25 convention. The
+      // symmetric graph has no dangling vertices (every vertex has
+      // out-degree >= 1), so no redistribution term is needed.
       // Round 17 (optimization): read the PERSISTED pair artifact like
       // every other graph consumer — this query was the last caller of
       // the lazy per-call pipeline rebuild (shingle + band + verify over
@@ -2578,9 +2550,9 @@ object PipelineQueries {
       // convention), not an approximation. Shape for 100 TB: each round
       // is two semi joins keyed src/dst against a vertex-scale keep set
       // + one degree count — per-round edge shuffles carrying long
-      // pairs; rounds persist for one job each and drop on return (at
-      // production scale each round is a PipelineRunner checkpoint,
-      // the nearDupClusters discipline).
+      // pairs; rounds persist for one job each (at production scale
+      // each round is a PipelineRunner checkpoint, the nearDupClusters
+      // discipline).
       kcoreSurvivors(s, d, 3)
     },
 
@@ -2732,8 +2704,7 @@ object PipelineQueries {
         .select(col("vec_id"),
           expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1024.0) as bigint))")
             .as("q"))
-      e.persist()
-      try {
+      Qh.persisting(e) {
         val p = e.select(col("vec_id"), expr(RpProjExpr).as("p"))
         // Pair distance via the CODEGEN'D DotProduct norm expansion
         // d = |a|² + |b|² − 2·a·b with per-VECTOR norms precomputed
@@ -2760,15 +2731,14 @@ object PipelineQueries {
               (col("na") + col("nb") - lit(2.0) * dot_product(col("va"), col("vb")))
                 .cast("long").as(dcol))
         }
-        val dt = allPairs(e, "q", "d64").persist()
-        try {
+        val dt = allPairs(e, "q", "d64")
+        Qh.persisting(dt) {
           val ds = allPairs(p, "p", "d16")
           val wU = Window.partitionBy("u")
           val ak = ds.withColumn("rn",
               row_number().over(wU.orderBy(col("d16"), col("w"))))
             .filter(col("rn") <= 3).select("u", "w")
-          ak.persist()
-          try {
+          Qh.materializedWith(ak) {
             val non = ak.as("a").join(ak.as("b"), col("a.w") === col("b.u"))
               .filter(col("b.w") =!= col("a.u"))
               .select(col("a.u").as("u"), col("b.w").as("w")).distinct()
@@ -2789,10 +2759,9 @@ object PipelineQueries {
               .select(col("u").as("vec_id"), col("hit0"), col("hit1"),
                 (col("hit1") > col("hit0")).as("improved"))
               .orderBy("vec_id")
-              .localCheckpoint(eager = true)
-          } finally ak.unpersist()
-        } finally dt.unpersist()
-      } finally e.unpersist()
+          }
+        }
+      }
     },
 
     // --- incremental graph maintenance over the persisted LSH index -----
@@ -3151,7 +3120,7 @@ object PipelineQueries {
       // aggregatable count; the join back is hash-keyed; islands are a
       // per-doc window over DUPLICATED positions only. The wins frame
       // feeds both the count and the probe: materializedWith computes
-      // the window pass once and drops the cache before returning.
+      // the window pass once.
       val L = 10
       val wins = spreadT(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -3495,8 +3464,7 @@ object PipelineQueries {
       val e = t(s, d, "embeddings").select(col("vec_id"),
         expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1024.0) as bigint))")
           .as("q"))
-      e.persist()
-      try {
+      Qh.materializedWith(e) {
         val p = e.select(col("vec_id"), expr(RpProjExpr).as("p"))
         val qq = e.filter(col("vec_id") === 0).select(col("q").as("qv"))
         val ex = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(qq))
@@ -3515,8 +3483,7 @@ object PipelineQueries {
             min("r_milli").as("min_milli"),
             max("r_milli").as("max_milli"))
           .orderBy("bucket")
-          .localCheckpoint(eager = true)
-      } finally e.unpersist()
+      }
     },
 
     // --- greedy k-center coreset (diversity selection) --------------------
@@ -3599,8 +3566,7 @@ object PipelineQueries {
       // window sorts from the final job. Oracle semantics unchanged —
       // kx/ky below equal the old window outputs row-for-row.
       withMutualNnDist(s, d) { (kx, ky) =>
-        kx.persist(); ky.persist()
-        try {
+        Qh.materializedWith(kx, ky) {
           val akx = kx.groupBy("x").agg(expr("sum(d64) div 4").as("akx"))
           val aky = ky.groupBy("y").agg(expr("sum(d64) div 4").as("aky"))
           kx.join(ky.select("x", "y"), Seq("x", "y"))
@@ -3609,8 +3575,7 @@ object PipelineQueries {
             .select(col("x"), col("y"), col("d64"),
               expr("(1000 * (akx + aky)) div (2 * d64)").as("margin_milli"))
             .orderBy("x", "y")
-            .localCheckpoint(eager = true)
-        } finally { kx.unpersist(); ky.unpersist() }
+        }
       }
     },
 
@@ -3646,8 +3611,7 @@ object PipelineQueries {
       // broadcast literals; the per-label top-5 is a bounded window.
       val e = t(s, d, "embeddings").select(col("vec_id"), col("label"),
         expr("transform(CAST(embedding AS array<double>), x -> CAST(floor(x * 16777216.0D) AS BIGINT))").as("vq"))
-      e.persist()
-      try {
+      Qh.materializedWith(e) {
         val cents = e.select(col("label"), posexplode(col("vq")).as(Seq("pos", "x")))
           .groupBy("label", "pos").agg(sum("x").as("sp"), count(lit(1)).as("np"))
           .collect()
@@ -3670,8 +3634,7 @@ object PipelineQueries {
           .filter(col("rn") <= 5)
           .select(col("label"), col("vec_id"), col("rn"), col("dq"))
           .orderBy("label", "rn")
-          .localCheckpoint(eager = true)
-      } finally e.unpersist()
+      }
     },
 
     Q("q_embed_qa",
@@ -3738,7 +3701,6 @@ object PipelineQueries {
       // sub-ulp ln() differences across libm implementations).
       // both exploded frames feed a count AND a total — persisted for
       // the one materializing job (each is one corpus pass, not two)
-      // and dropped on return via materializedWith
       val tok = t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("t"))
       val u = tok.groupBy("t").agg(count(lit(1)).as("cu"))
@@ -3797,7 +3759,7 @@ object PipelineQueries {
       // sum could flip a round9 boundary), divided once at the end.
       // The one corpus-scale exploded frame feeds both the model counts
       // and the scoring stream — persisted for the one materializing
-      // job, dropped on return.
+      // job.
       val docs = spreadT(s, d, "documents")
       val tok = docs.select(explode(split(col("text"), " ")).as("a"))
       val uni = tok.groupBy("a").agg(count(lit(1)).as("ca"))
@@ -3983,7 +3945,7 @@ object PipelineQueries {
       // preserved for the next round. Both engines' replace() scan
       // left-to-right non-overlapping, which is what makes the exact
       // oracle possible for an iterative learner.
-      // persisted (for the one materializing job; dropped on return):
+      // persisted for the one materializing job:
       // the ONE corpus-scale pass — every merge round re-reads this
       // vocabulary-sized table instead of re-counting the corpus
       // (un-persisted, the 3 rounds planned 14 corpus scans)
@@ -4312,13 +4274,13 @@ object PipelineQueries {
       import s.implicits._
       val toks = t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("token"))
-      val v = toks.groupBy("token").agg(count(lit(1)).as("cnt")).persist()
-      val hi = v.orderBy(col("cnt").desc, col("token")).limit(10)
-      val lo = v.orderBy(col("cnt").asc, col("token")).limit(5)
-      val probes = hi.unionAll(lo).distinct().collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      val nTotal = v.agg(sum("cnt")).collect()(0).getLong(0)
-      v.unpersist()
+      val v = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
+      val (probes, nTotal) = Qh.persisting(v) {
+        val hi = v.orderBy(col("cnt").desc, col("token")).limit(10)
+        val lo = v.orderBy(col("cnt").asc, col("token")).limit(5)
+        (hi.unionAll(lo).distinct().collect().map(r => (r.getString(0), r.getLong(1))),
+          v.agg(sum("cnt")).collect()(0).getLong(0))
+      }
       val bytes = toks
         .agg(expr("count_min_sketch(token, 0.0001d, 0.99d, 42)").as("sk"))
         .collect()(0).getAs[Array[Byte]](0)
@@ -4440,8 +4402,7 @@ object PipelineQueries {
       // document frequencies — model state, like the IVF centroids);
       // pass 2 scores each doc map-side against those literals and
       // TakeOrdered'd top-15. The narrow (doc_id, dl, tf*) frame — five
-      // numerics, never text — is persisted across the two passes and
-      // dropped before returning (round-7 cache-hygiene ADVICE).
+      // numerics, never text — is persisted across the two passes.
       // Determinism: idf/norm chains are written with IDENTICAL
       // association in both engines; scores round9 before ranking and
       // ties break on doc_id (libm-ulp risk absorbed, the q_text_tfidf
@@ -4637,7 +4598,7 @@ object PipelineQueries {
       val m = z.filter(col("st") === 0)
         .withColumn("plen", count(lit(1)).over(Window.partitionBy("doc_id", "grp")))
       // m feeds two consumers (word scores + the phrase rollup's join
-      // side): persist for the one materializing job, drop on return.
+      // side): persist for the one materializing job.
       Qh.materializedWith(m) {
         val ws = m.groupBy("wd")
           .agg(expr("CAST(sum(plen) * 1000000000 div count(1) AS BIGINT)").as("sn"))
@@ -4763,8 +4724,7 @@ object PipelineQueries {
       // the exploded frame — the corpus-sized side never reshuffles for
       // the marking join. Per-doc accounting is then a doc_id-keyed
       // two-phase aggregate. The segment frame feeds two consumers (df
-      // count + marking), so it is persisted for one job and dropped
-      // (Qh.materializedWith).
+      // count + marking), so it is persisted for one job.
       val seg = boilerplateSegs(t(s, d, "documents"))
       Qh.materializedWith(seg)(boilerplateFrom(seg))
     },
@@ -4966,8 +4926,7 @@ object PipelineQueries {
       val sl = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
         .select(col("vec_id"), col("v"), cosine(col("v"), col("qv")).as("cs"))
         .orderBy(col("cs").desc, col("vec_id")).limit(20)
-        .persist()
-      try {
+      Qh.persisting(sl) {
         val sims = sl.as("a").join(sl.as("b"), col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"),
             cosine(col("a.v"), col("b.v")).as("ss"))
@@ -4991,7 +4950,7 @@ object PipelineQueries {
         }
         s.createDataFrame(sel.result()).toDF("rnk", "vec_id", "cs", "mmr")
           .orderBy("rnk")
-      } finally sl.unpersist()
+      }
     },
 
     // --- per-label centroids (element-wise mean of vectors) -------------
@@ -5288,8 +5247,7 @@ object PipelineQueries {
       // and is the cheap pass you always run before a fact-fact join.
       val kc = t(s, d, "orders").groupBy(col("o_custkey").as("k"))
         .agg(count(lit(1)).as("c"))
-      kc.persist()
-      try {
+      Qh.materializedWith(kc) {
         val st = kc.agg(count(lit(1)).as("nk"), sum("c").as("tot")).head()
         val (nk, tot) = (st.getLong(0), st.getLong(1))
         kc.orderBy(col("c").desc, col("k")).limit(10)
@@ -5306,8 +5264,7 @@ object PipelineQueries {
                     | div CAST($tot AS DECIMAL(38,0))""".stripMargin)
               .as("ratio_mean_milli"))
           .orderBy("rn")
-          .localCheckpoint(eager = true)
-      } finally kc.unpersist()
+      }
     },
 
     Q("q_join_salted",
@@ -5614,7 +5571,7 @@ object PipelineQueries {
       // distinct (user, week) frame feeds BOTH join sides — without the
       // persist the plan recomputes the events-scale distinct exchange
       // twice (the dominant shuffle, verified in PLANS.md), so it is
-      // materialized once and dropped before returning.
+      // materialized once.
       val ev = t(s, d, "events")
         .selectExpr("user_id",
           "unix_millis(CAST(ts AS TIMESTAMP)) div 604800000 AS wk")
@@ -5840,7 +5797,7 @@ object PipelineQueries {
       // funnel feasible at 100 TB (the naive spelling — a self-join per
       // stage pair on raw events — is quadratic in the timeline). Final
       // counts are 4 scalars assembled in one plan.
-      // persisted (for the one materializing job; dropped on return):
+      // persisted for the one materializing job:
       // the unit-keyed timeline feeds FOUR branches (three stage
       // aggregates + the unit count) — without it Catalyst plans an
       // events scan per reference (measured: 14 scans). At 100 TB this
@@ -6029,7 +5986,7 @@ object PipelineQueries {
       // survives the distinct), and the per-doc rollup collapses
       // map-side on doc_id. Fractions are exact integer milli-units.
       // The occurrence frame feeds both the df build and the join probe
-      // — materialized once, dropped on return. Sub-3-word docs have no
+      // — materialized once. Sub-3-word docs have no
       // 3-grams and are excluded (a caller's length gate catches them
       // long before this filter).
       val occ = spreadT(s, d, "documents")
@@ -6323,8 +6280,7 @@ object PipelineQueries {
       import graft.functions.DotProduct.dot_product
       val eq = vecs(s, d).select(col("vec_id"),
         expr("transform(v, x -> floor(x * 16777216D))").as("xq"))
-      eq.persist()
-      try {
+      Qh.materializedWith(eq) {
         val dimStats = eq.select(posexplode(col("xq")).as(Seq("i", "x")))
           .groupBy("i").agg(sum(col("x").cast(DecimalType(38, 0))).as("sm"),
             count(lit(1)).as("n"))
@@ -6364,7 +6320,7 @@ object PipelineQueries {
         val loadings = v.zipWithIndex.map { case (x, i) => (i.toLong, x.toLong) }
           .toSeq.toDF("i", "loading")
         loadings.crossJoin(ev).select(col("i"), col("loading"), col("ev_ppm")).orderBy("i")
-      } finally eq.unpersist()
+      }
     },
 
     // --- per-source Jensen-Shannon distribution drift -------------------

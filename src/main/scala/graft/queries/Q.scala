@@ -23,8 +23,6 @@ final case class Q(
 object Q {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(oracle))
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
 
   /** Run one SQL text against per-directory scoped temp-view names (the
     * only difference from the DuckDB oracle text is the table prefix).
@@ -56,27 +54,39 @@ object Qh {
   val D12: DecimalType = DecimalType(12, 2) // prices, quantities
   val D3: DecimalType = DecimalType(3, 2)   // rates in [0,1)
 
-  /** Persist `inputs`, EAGERLY materialize `result`, then unpersist the
-    * inputs before returning. `result` is by-name, so any driver-side
-    * action its block runs (a count, a collected scalar, a bloom-filter
-    * build) already reads the persisted inputs.
+  /** The one cache lifecycle: persist `inputs`, run `body`, unpersist
+    * the inputs in a finally (the error path too). `body` is by-name, so
+    * every action it runs (a count, a collected scalar, a bloom-filter
+    * build) reads the caches. These two functions are the only code in
+    * src/main that persists or frees a cache (QhSpec pins the source),
+    * so no cache outlives the call that made it (ClusterSpec pins every
+    * catalog row) — a bare `persist()` under a lazily-returned frame
+    * leaks for the session, and across a bench run those corpus-sized
+    * caches evict each other. A frame `body` returns must not read
+    * `inputs` lazily (it would recompute them from the scans after the
+    * call): return driver-built results, or use [[materializedWith]].
     *
-    * This is the session-hygiene form of the persist() pattern used by
-    * multi-consumer queries (a corpus-pass frame feeding several plan
-    * branches): a bare `df.persist()` inside a lazily-returned query
-    * leaks the cache for the life of the SparkSession — across a
-    * 158-query bench/verify run those corpus-sized caches accumulate and
-    * evict each other (round-7 ADVICE). Here the one job triggered by
-    * `localCheckpoint(eager = true)` computes every persisted input
-    * exactly once (each consumer reads the cache), the small result is
-    * pinned as executor-resident blocks with its lineage truncated, and
-    * the inputs are dropped in a finally — no cache outlives the call.
-    * The builder runs inside Bench's timed region, so the eager work is
-    * measured exactly like the lazy form was. At 100 TB the same shape
-    * is a PipelineRunner stage checkpoint to reliable storage;
-    * localCheckpoint is the in-session analog (results here are
-    * candidate pairs / top-k / scalar rollups — orders of magnitude
-    * smaller than the corpus passes they retire).
+    * Persist DERIVED corpus-pass frames (shingles, exploded tokens,
+    * recounts) — the ones whose recomputation repeats real CPU work.
+    * Do NOT point this at a raw table scan: caching text-heavy rows to
+    * save pruned columnar re-scans measured 24-30% SLOWER at sf0.1
+    * (q_cur_datasheet/q_cur_end2end/q_embed_drift, round 8) — the
+    * per-branch transform work dominates and stays either way, while
+    * the cache adds a columnar encode pass. */
+  def persisting[A](inputs: DataFrame*)(body: => A): A = {
+    inputs.foreach(_.persist())
+    try body
+    finally inputs.foreach(_.unpersist())
+  }
+
+  /** [[persisting]] whose result is EAGERLY materialized while the inputs
+    * are cached: the one job `localCheckpoint(eager = true)` triggers
+    * computes every input once, and the small result (candidate pairs,
+    * top-k, scalar rollups) is pinned as executor-resident blocks with
+    * its lineage truncated, so it reads nothing the call frees. `result`
+    * must not end in its own localCheckpoint — that is a second
+    * execution scanning the first. The builder runs inside Bench's timed
+    * region, so the eager work is measured like lazy work.
     *
     * FAULT-TOLERANCE CAVEAT (round-11 decision, recorded in PARITY.md):
     * localCheckpoint truncates lineage WITHOUT durability — the blocks
@@ -87,20 +97,9 @@ object Qh {
     * these. Expensive many-consumer state (the LSH pair set, IVF/PQ
     * indexes, pipeline stage outputs) must instead live as on-disk
     * artifacts under an atomic _SUCCESS commit — see graft.Artifact /
-    * PipelineRunner.
-    *
-    * Persist DERIVED corpus-pass frames (shingles, exploded tokens,
-    * recounts) — the ones whose recomputation repeats real CPU work.
-    * Do NOT point this at a raw table scan: caching text-heavy rows to
-    * save pruned columnar re-scans measured 24-30% SLOWER at sf0.1
-    * (q_cur_datasheet/q_cur_end2end/q_embed_drift, round 8) — the
-    * per-branch transform work dominates and stays either way, while
-    * the cache adds a columnar encode pass. */
-  def materializedWith(inputs: DataFrame*)(result: => DataFrame): DataFrame = {
-    inputs.foreach(_.persist())
-    try result.localCheckpoint(eager = true)
-    finally inputs.foreach(_.unpersist())
-  }
+    * PipelineRunner. */
+  def materializedWith(inputs: DataFrame*)(result: => DataFrame): DataFrame =
+    persisting(inputs: _*)(result.localCheckpoint(eager = true))
 
   /** `(funcName, formatted final plan)` of every SQL execution `body`
     * runs to completion, in order — a catalog row's eager

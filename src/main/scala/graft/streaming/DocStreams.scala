@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Qh
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -223,8 +224,7 @@ object DocStreams {
       .filter(col("df") >= 2)
       .select(concat_ws("|", col("source"), col("hs").cast("string")).as("k"),
         col("df"))
-    keys.persist()
-    try {
+    Qh.persisting(keys) {
       val total = keys.count()
       val kept = keys.orderBy(col("df").desc, col("k")).limit(maxKeys)
         .select("k").collect().map(_.getString(0)).toSeq.sorted
@@ -235,7 +235,7 @@ object DocStreams {
             s"$total df>=2 segment keys ($dropped lowest-df keys dropped; " +
             "ingest under-strips those templates until the next retrain)")
       kept
-    } finally keys.unpersist()
+    }
   }
 
   /** Ingest-time boilerplate accounting against the frozen model:
@@ -659,15 +659,15 @@ object DocStreams {
     val ed = corpus.filter(col("source") === evalSource)
       .select(split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
-      .select(explode(tri).as("sh")).distinct().persist()
-    try {
+      .select(explode(tri).as("sh")).distinct()
+    Qh.persisting(ed) {
       val n = ed.count()
       val b = ed.select(xxhash64(col("sh")).as("h"))
         .stat.bloomFilter("h", math.max(n, 64L), 0.0001)
       val bos = new java.io.ByteArrayOutputStream()
       b.writeTo(bos)
       bos.toByteArray
-    } finally ed.unpersist()
+    }
   }
 
   /** Ingest-time decontamination gate — the streaming first stage of

@@ -655,6 +655,16 @@ class AnalyticsSpec extends GraftSuite {
     assert(evPpm >= 0 && evPpm <= 1000000)
   }
 
+  test("q_embed_pca_power: writing the result reads no parquet file") {
+    // the result is built while the quantized corpus is still cached;
+    // a lazy result would re-read and re-quantize `embeddings` here
+    val df = SparkEntry.queries("q_embed_pca_power")(spark, sf)
+    val ps = graft.queries.Qh.executedPlans(spark)(
+      df.write.format("noop").mode("overwrite").save())
+    assert(ps.nonEmpty)
+    assert(!ps.last._2.contains("Scan parquet"), ps.last._2)
+  }
+
   test("ks statistic equals a from-scratch sup over the pooled support") {
     val r = SparkEntry.queries("q_agg_ks")(spark, sf).collect()
     assert(r.length == 1)

@@ -37,6 +37,7 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
   private var expectedReps: Map[String, Seq[String]] = _
   private var multiJvmQueries: Seq[String] = _
   private var customAggQueries: Seq[String] = _
+  private var cacheLeftBy: Seq[String] = _
 
   /** One representative catalog query per family (round-13 verdict
     * item #2): the 288 gate rows had only ever been produced by one JVM;
@@ -116,7 +117,7 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(sniffer)
-    val scanned: Seq[(String, Boolean, Seq[String])] =
+    val scanned: Seq[(String, Boolean, Seq[String], Boolean)] =
       SparkEntry.catalog.map { q =>
         hit.set(false)
         val rows = SparkEntry.queries(q.name)(spark, sf)
@@ -124,15 +125,20 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
         // listener events are async on the shared bus — drain before
         // reading the flag (same discipline as graft.Profile)
         org.apache.spark.graftshim.CoreShims.drainListenerBus(spark.sparkContext)
+        // a cache still registered here outlived its row; clear it so
+        // the next row is judged on its own
+        val leftCache = !spark.sharedState.cacheManager.isEmpty
+        if (leftCache) spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        (q.name, hit.get(), rows)
+        (q.name, hit.get(), rows, leftCache)
       }
     spark.listenerManager.unregister(sniffer)
-    customAggQueries = scanned.collect { case (n, true, _) => n }
+    cacheLeftBy = scanned.collect { case (n, _, _, true) => n }
+    customAggQueries = scanned.collect { case (n, true, _, _) => n }
     multiJvmQueries = (familyReps ++ customAggQueries).distinct
     expectedReps = scanned.collect {
-      case (n, _, rows) if multiJvmQueries.contains(n) => n -> rows
+      case (n, _, rows, _) if multiJvmQueries.contains(n) => n -> rows
     }.toMap
     SparkTestBase.reset() // one SparkContext per JVM; park the shared one
 
@@ -228,6 +234,12 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
     val got = SparkEntry.queries("q1_pricing_summary")(cs, sf)
       .collect().map(_.toString).toSeq
     assert(got == expectedQ1, "cluster result differs from single-JVM result")
+  }
+
+  test("no catalog row leaves a Dataset cache behind") {
+    // every persist runs inside a Qh bracket, which frees it before the
+    // row returns; the beforeAll pass checked the whole catalog
+    assert(cacheLeftBy.isEmpty, s"rows that left a cache: $cacheLeftBy")
   }
 
   test("family-representative catalog subset is content-identical under multi-JVM execution") {

@@ -196,15 +196,6 @@ class PipelineSpec extends GraftSuite {
     assert(violations.isEmpty, s"communities spanning components: $violations")
   }
 
-  test("q_dedup_clusters leaves no cache behind") {
-    // the propagation loop caches edges and each round's labels; the
-    // returned frame must not read any of them
-    spark.catalog.clearCache()
-    val cc = SparkEntry.queries("q_dedup_clusters")(spark, sf)
-    assert(spark.sharedState.cacheManager.isEmpty, "a label-propagation cache outlived the query")
-    assert(cc.count() > 0)
-  }
-
   test("lpaCommunities splits a barbell at the sparse cut (cc cannot)") {
     // two triangles {0,1,2} and {10,11,12} joined by one bridge 2-10:
     // ONE connected component, but LPA's frequency rule keeps each

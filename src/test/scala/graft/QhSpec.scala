@@ -20,4 +20,43 @@ class QhSpec extends GraftSuite {
     assert(out.head().getLong(0) == 7L)
     assert(in.storageLevel == StorageLevel.NONE, "the input cache outlived the call")
   }
+
+  test("a materializedWith row runs exactly one localCheckpoint") {
+    // a body's own localCheckpoint would add a second one scanning the first
+    for (q <- Seq("q_agg_ks_bysource", "q_cur_quantile_norm")) {
+      val ps = Qh.executedPlans(spark)(SparkEntry.queries(q)(spark, sf))
+      assert(ps.count(_._1 == "localCheckpoint") == 1, s"$q: ${ps.map(_._1)}")
+    }
+  }
+
+  test("persisting returns its body's value and drops its inputs") {
+    val in = spark.range(100).selectExpr("id % 3 AS k").distinct()
+    assert(Qh.persisting(in)(in.count()) == 3L)
+    assert(in.storageLevel == StorageLevel.NONE, "the input cache outlived the call")
+  }
+
+  test("persisting drops its inputs when its body throws") {
+    val a = spark.range(10).selectExpr("id * 2 AS x")
+    val b = spark.range(10).selectExpr("id * 3 AS y")
+    intercept[IllegalStateException](Qh.persisting(a, b) {
+      assert(a.storageLevel != StorageLevel.NONE && b.storageLevel != StorageLevel.NONE)
+      throw new IllegalStateException("body failed")
+    })
+    assert(a.storageLevel == StorageLevel.NONE && b.storageLevel == StorageLevel.NONE,
+      "an input cache outlived a failed body")
+  }
+
+  test("Q.scala holds the only persist/cache/unpersist calls in src/main") {
+    // the Bench and Profile sweeps drop localCheckpoint blocks between
+    // rows; they free no Dataset cache
+    val call = """\.persist\(|\.cache\(\)|\.unpersist\(""".r
+    val hits = SparkTestBase.mainSources
+      .filter(_._1 != "graft/queries/Q.scala")
+      .flatMap { case (f, src) =>
+        src.linesIterator.filter(call.findFirstIn(_).nonEmpty).map(l => f -> l.trim)
+      }
+    val sweep = ".foreach(_.unpersist(blocking = false))"
+    assert(hits == Seq("graft/Bench.scala" -> sweep, "graft/Bench.scala" -> sweep,
+      "graft/Profile.scala" -> sweep), hits.mkString("\n"))
+  }
 }

@@ -2,9 +2,6 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-
 /** One engine configuration: `Engine.session` is the only session
   * builder in `src/main`, so the engine that is verified (Verify), the
   * one that is benchmarked (Bench, perfbench) and the one that ships are
@@ -12,13 +9,9 @@ import scala.jdk.CollectionConverters._
 class SessionSpec extends GraftSuite {
 
   test("Engine.scala holds the only SparkSession.builder in src/main") {
-    val root = Paths.get("src/main/scala")
-    val walk = Files.walk(root)
-    val hits =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map((p: Path) => root.relativize(p).toString).toSeq.sorted
-      finally walk.close()
+    val hits = SparkTestBase.mainSources.collect {
+      case (f, src) if src.contains("SparkSession.builder") => f
+    }
     assert(hits == Seq("graft/Engine.scala"))
   }
 

@@ -47,6 +47,18 @@ object SparkTestBase {
   }
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `(path under src/main/scala, content)` of every main Scala source,
+    * sorted by path — for pins on what the engine's code may contain. */
+  lazy val mainSources: Seq[(String, String)] = {
+    import java.nio.file.{Files, Path, Paths}, scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+      .toSeq.sortBy(_._1)
+    finally walk.close()
+  }
 }
 
 abstract class GraftSuite extends AnyFunSuite {
