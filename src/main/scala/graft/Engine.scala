@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetShims
 import org.apache.spark.sql.types.StructType
 
 import java.util.UUID
@@ -49,9 +50,13 @@ class Engine(val spark: SparkSession) {
       options: Map[String, String] = Map.empty,
       schema: Option[StructType] = None,
       global: Boolean = false): DataFrame = {
-    var r = spark.read.format(format).options(options)
-    schema.foreach(s => r = r.schema(s))
-    val df = r.load(location)
+    // a flat parquet location's schema comes from one footer on the
+    // driver, as in Tables.parquet, not from Spark's inference job
+    val footer = schema.isEmpty && format.equalsIgnoreCase("parquet") &&
+      !options.keys.exists(_.equalsIgnoreCase("mergeSchema")) && ParquetShims.flat(spark, location)
+    val reader = spark.read.format(format).options(options)
+    val df = schema.orElse(Option.when(footer)(ParquetShims.schemaOf(spark, location)))
+      .fold(reader)(reader.schema).load(location)
     if (global) df.createOrReplaceGlobalTempView(name)
     else df.createOrReplaceTempView(name)
     df

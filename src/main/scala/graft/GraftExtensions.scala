@@ -4,6 +4,8 @@ import graft.functions.{NfcNormalize, RollingHash}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType}
 
 /** SparkSessionExtensions hook: registers the gap-fill functions under
@@ -15,10 +17,22 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType}
   * does) or `spark.sql.extensions=graft.GraftExtensions`. Builders
   * hand-compose Catalyst expression trees (a lazily-converted Column
   * node would reach codegen unresolved) — all codegen'd, no UDFs.
+  *
+  * It also keeps filter constants out of generated code
+  * (graft.plans.ParamLiterals), so statements that differ only in their
+  * literals share one compiled class: a template compiles once per JVM,
+  * not once per statement.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Runs just before CollapseCodegenStages, both in the non-adaptive
+    // preparations (a plan with no exchange is never AQE-wrapped) and in
+    // AQE's per-stage rules.
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.ParamLiterals
+    })
+
     // SQL:2011 GROUPS window frames: Spark's parser lacks the frame mode,
     // so a delegating parser rewrites the text into the proven dense_rank
     // composition before parsing (graft.plans.GroupsFrames; the reference

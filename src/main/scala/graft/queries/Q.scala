@@ -5,6 +5,7 @@ import org.apache.spark.graftshim.CoreShims
 import org.apache.spark.sql.execution.{ExplainUtils, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -55,16 +56,19 @@ object Qh {
   val D3: DecimalType = DecimalType(3, 2)   // rates in [0,1)
 
   /** The one cache lifecycle: persist `inputs`, run `body`, unpersist
-    * the inputs in a finally (the error path too). `body` is by-name, so
-    * every action it runs (a count, a collected scalar, a bloom-filter
-    * build) reads the caches. These two functions are the only code in
-    * src/main that persists or frees a cache (QhSpec pins the source),
-    * so no cache outlives the call that made it (ClusterSpec pins every
-    * catalog row) — a bare `persist()` under a lazily-returned frame
-    * leaks for the session, and across a bench run those corpus-sized
-    * caches evict each other. A frame `body` returns must not read
-    * `inputs` lazily (it would recompute them from the scans after the
-    * call): return driver-built results, or use [[materializedWith]].
+    * the inputs in a finally (the error path too). An input already
+    * cached on entry is neither persisted nor freed: a helper handed its
+    * caller's cached frame leaves that cache to the caller. `body` is
+    * by-name, so every action it runs (a count, a collected scalar, a
+    * bloom-filter build) reads the caches. These two functions are the
+    * only code in src/main that persists or frees a cache (QhSpec pins
+    * the source), so no cache outlives the call that made it
+    * (ClusterSpec pins every catalog row) — a bare `persist()` under a
+    * lazily-returned frame leaks for the session, and across a bench run
+    * those corpus-sized caches evict each other. A frame `body` returns
+    * must not read `inputs` lazily (it would recompute them from the
+    * scans after the call): return driver-built results, or use
+    * [[materializedWith]].
     *
     * Persist DERIVED corpus-pass frames (shingles, exploded tokens,
     * recounts) — the ones whose recomputation repeats real CPU work.
@@ -74,9 +78,13 @@ object Qh {
     * per-branch transform work dominates and stays either way, while
     * the cache adds a columnar encode pass. */
   def persisting[A](inputs: DataFrame*)(body: => A): A = {
-    inputs.foreach(_.persist())
+    val owned = inputs.filter { in =>
+      val free = in.storageLevel == StorageLevel.NONE
+      if (free) in.persist()
+      free
+    }
     try body
-    finally inputs.foreach(_.unpersist())
+    finally owned.foreach(_.unpersist())
   }
 
   /** [[persisting]] whose result is EAGERLY materialized while the inputs

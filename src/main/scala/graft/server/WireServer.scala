@@ -29,9 +29,11 @@ import java.net.{InetAddress, ServerSocket, Socket}
   *  - connections share compiled classes: `Engine.session` turns
   *    Spark's per-session artifact classloaders off, so a statement one
   *    connection ran compiles no plan class when another runs it
-  *    (WireSpec pins it). Only the row deserializer is compiled once
-  *    per connection and result type: the fetch runs under Hive's
-  *    per-session classloader;
+  *    (WireSpec pins it). Filter constants stay out of the generated
+  *    code (GraftExtensions), so the classes are shared per template:
+  *    `WHERE o_orderkey = 7` after `= 5` compiles nothing either. Only
+  *    the row deserializer is compiled once per connection and result
+  *    type: the fetch runs under Hive's per-session classloader;
   *  - prepared statements (`java.sql.PreparedStatement`) bind
   *    parameters per-execute against a cached statement, the
   *    reference's `$n` placeholder flow (flight_sql.rs:581-670);

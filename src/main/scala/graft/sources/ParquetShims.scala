@@ -52,6 +52,17 @@ object ParquetShims {
       .getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet"))
   }
 
+  /** Whether [[schemaOf]] serves `path`: an existing file, or a directory
+    * with no subdirectory (a glob, a missing path or a partitioned layout
+    * is left to `spark.read`). */
+  def flat(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val q = fs.makeQualified(p)
+    fs.exists(q) && (fs.getFileStatus(q).isFile ||
+      !fs.listStatus(q).exists(f => f.isDirectory && !hidden(f.getPath.getName)))
+  }
+
   private def isSummary(name: String): Boolean =
     name == PARQUET_COMMON_METADATA_FILE || name == PARQUET_METADATA_FILE
 

@@ -97,6 +97,19 @@ class ParquetReadSpec extends GraftSuite {
     assert(resumed.count() == first.count())
   }
 
+  test("Engine.createExternalTable pins a flat parquet schema without a Spark job") {
+    val engine = new Engine(spark)
+    val table = s"$sf/orders.parquet"
+    val (df, jobs) = withJobCount(engine.createExternalTable("prs_orders", table))
+    assert(jobs == 0)
+    assert(df.schema == spark.read.parquet(table).schema)
+    // a partitioned location keeps Spark's partition discovery
+    val parts = Files.createTempDirectory("graft_ext_parts").resolve("t").toString
+    spark.range(10).withColumn("p", col("id") % 2).write.partitionBy("p").parquet(parts)
+    assert(engine.createExternalTable("prs_parts", parts).where("p = 1").count() == 5)
+    Seq("prs_orders", "prs_parts").foreach(engine.dropView)
+  }
+
   test("missing, empty and partitioned paths fail the documented way") {
     def sparkError(p: String) = intercept[AnalysisException](spark.read.parquet(p))
     def ourError(p: String) = intercept[AnalysisException](Tables.parquet(spark, p))

@@ -216,6 +216,18 @@ class PipelineSpec extends GraftSuite {
       s"right triangle not labeled 10: $got")
   }
 
+  test("lpaCommunities leaves its caller's edge cache in place") {
+    val s = spark
+    import s.implicits._
+    val und = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("src", "dst")
+    val edges = und.union(und.selectExpr("dst as src", "src as dst")).cache()
+    try {
+      graft.queries.PipelineQueries.lpaCommunities(edges, 3).collect()
+      assert(edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "lpaCommunities freed the caller's cache")
+    } finally edges.unpersist()
+  }
+
   test("q_ret_rm3: base scores agree with bm25Top; expansion reorders") {
     val bm = SparkEntry.queries("q_text_bm25")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.Row
 
 /** One engine configuration: `Engine.session` is the only session
   * builder in `src/main`, so the engine that is verified (Verify), the
@@ -40,12 +40,28 @@ class SessionSpec extends GraftSuite {
     assert(child.conf.get("spark.sql.artifact.isolation.enabled") == "false")
     val sql = "SELECT id % 7 AS k, SUM(id * 3) AS s FROM range(0, 1000, 1, 4) " +
       "GROUP BY id % 7 ORDER BY k"
-    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val parentRows = spark.sql(sql).collect().toSeq
-    val before = compiles.getCount
-    val childRows = child.sql(sql).collect().toSeq
-    val compiled = compiles.getCount - before
+    var childRows: Seq[Row] = Nil
+    val compiled = SparkTestBase.compilesDuring { childRows = child.sql(sql).collect().toSeq }
     assert(childRows == parentRows)
     assert(compiled == 0, s"the child session compiled $compiled classes")
+  }
+
+  test("a template re-run with different literals compiles nothing") {
+    // filter constants reach generated code as references, not as source
+    // text (graft.plans.ParamLiterals). One template has no exchange, so
+    // it is planned without AQE; the other runs through AQE's stage rules.
+    val templates = Seq[(Long, Long) => String](
+      (k, lim) => s"SELECT id, id * 3 AS x FROM range(0, 1000, 1, 4) " +
+        s"WHERE id % 7 = $k AND id < $lim",
+      (lo, hi) => s"SELECT id % 5 AS g, COUNT(*) AS n FROM range(0, 1000, 1, 4) " +
+        s"WHERE id BETWEEN $lo AND $hi GROUP BY id % 5 ORDER BY g")
+    for (t <- templates) {
+      val first = spark.sql(t(3, 900)).collect()
+      var second: Array[Row] = Array.empty
+      val compiled = SparkTestBase.compilesDuring { second = spark.sql(t(4, 800)).collect() }
+      assert(first.nonEmpty && second.nonEmpty && !(second sameElements first))
+      assert(compiled == 0, s"${t(4, 800)}: compiled $compiled classes")
+    }
   }
 }

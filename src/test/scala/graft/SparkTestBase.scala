@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,6 +48,16 @@ object SparkTestBase {
   }
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Janino compilations while `body` runs. The codegen counter is
+    * JVM-wide, so a compile on any thread (an executor task, a wire
+    * handler) counts. */
+  def compilesDuring(body: => Any): Long = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
 
   /** `(path under src/main/scala, content)` of every main Scala source,
     * sorted by path — for pins on what the engine's code may contain. */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.server.WireServer
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.BeforeAndAfterAll
 
 import java.sql.{Connection, DriverManager}
@@ -204,7 +203,6 @@ class WireSpec extends GraftSuite with BeforeAndAfterAll {
       """SELECT o_orderpriority, COUNT(*) AS n, MAX(o_totalprice * 3) AS m
         |FROM wire_orders WHERE o_orderstatus <> 'P'
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
-    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val connA = connect()
     val connB = connect()
     try {
@@ -216,11 +214,31 @@ class WireSpec extends GraftSuite with BeforeAndAfterAll {
       // with a plan that shares nothing else with `sql`.
       assert(queryStrings(connB,
         "SELECT CAST(NULL AS STRING), 1L, CAST(NULL AS DOUBLE)").size == 1)
-      val before = compiles.getCount
-      val b = queryStrings(connB, sql)
-      val compiled = compiles.getCount - before
+      var b: Seq[Seq[String]] = Nil
+      val compiled = SparkTestBase.compilesDuring { b = queryStrings(connB, sql) }
       assert(a.nonEmpty && b == a)
       assert(compiled == 0, s"connection B compiled $compiled classes")
     } finally { connA.close(); connB.close() }
+  }
+
+  test("a template re-run with a different literal compiles nothing") {
+    // the wire_mix shapes: a key-range lookup with no exchange (planned
+    // without AQE) and a filtered aggregate (AQE's stage rules); filter
+    // constants reach generated code as references, so the second
+    // literal reuses every class the first one compiled
+    val templates = Seq[Long => String](
+      k => s"SELECT o_orderkey, o_custkey, o_totalprice FROM wire_orders " +
+        s"WHERE o_orderkey BETWEEN $k AND ${k + 200} AND o_totalprice > 1000.5",
+      k => s"SELECT o_orderstatus, COUNT(*) AS n FROM wire_orders " +
+        s"WHERE o_custkey <> $k AND o_orderkey < ${k * 40} GROUP BY o_orderstatus")
+    val conn = connect()
+    try for (t <- templates) {
+      // the first run also compiles this connection's row deserializer
+      val first = queryStrings(conn, t(100))
+      var second: Seq[Seq[String]] = Nil
+      val compiled = SparkTestBase.compilesDuring { second = queryStrings(conn, t(300)) }
+      assert(first.nonEmpty && second.nonEmpty && second != first)
+      assert(compiled == 0, s"${t(300)}: compiled $compiled classes")
+    } finally conn.close()
   }
 }
