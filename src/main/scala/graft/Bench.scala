@@ -46,16 +46,14 @@ object Bench {
       }
     }
 
-    // Optional comma-separated subset (local iteration; the driver runs all).
-    // It may name only the artifact-build row `buildRow`: then the run is
-    // just its timed rebuild, with no warm-up or sentinel.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
+    // Optional subset, SPARK_GRAFT_ONLY (local iteration; a full run
+    // times all). It may name only the artifact-build row `buildRow`:
+    // then the run is just its timed rebuild, with no warm-up or sentinel.
+    val buildRow = "q_dedup_minhash_build"
+    val only = SparkEntry.only(extra = Set(buildRow))
     val names = SparkEntry.catalog.map(_.name)
       .filter(n => only.forall(_.contains(n)))
-    val buildRow = "q_dedup_minhash_build"
     val withBuild = only.forall(_.contains(buildRow))
-    require(names.nonEmpty || withBuild,
-      s"SPARK_GRAFT_BENCH_ONLY=${only.map(_.mkString(",")).getOrElse("")} matches no catalog query")
     // UNTIMED warm-up pass over the whole run set before any timing. This
     // serves two distinct purposes: (a) JVM/codegen JIT warm-up, and
     // (b) building every persisted one-time artifact (LSH index, day

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{NfcNormalize, RollingHash}
+import graft.plans.{GroupsFrameParser, GroupsFrames, GroupsMarker}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
@@ -18,7 +19,9 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType}
   * hand-compose Catalyst expression trees (a lazily-converted Column
   * node would reach codegen unresolved) — all codegen'd, no UDFs.
   *
-  * It also keeps filter constants out of generated code
+  * It also runs SQL:2011 GROUPS window frames (graft.plans.GroupsFrames:
+  * a frame-keyword edit in the parser, one post-hoc resolution rule and
+  * one check rule), and keeps filter constants out of generated code
   * (graft.plans.ParamLiterals), so statements that differ only in their
   * literals share one compiled class: a template compiles once per JVM,
   * not once per statement.
@@ -33,18 +36,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.ParamLiterals
     })
 
-    // SQL:2011 GROUPS window frames: Spark's parser lacks the frame mode,
-    // so a delegating parser rewrites the text into the proven dense_rank
-    // composition before parsing (graft.plans.GroupsFrames; the reference
-    // enum carries GROUPS, datafusion.proto:651-676). One regex probe per
-    // statement when no GROUPS frame is present.
-    ext.injectParser((_, delegate) => new graft.plans.GroupsFrameParser(delegate))
-
     def register(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name, usage),
         builder))
+
+    // SQL:2011 GROUPS window frames (graft.plans.GroupsFrames; the
+    // reference enum carries GROUPS, datafusion.proto:651-676). Spark's
+    // parser lacks the frame mode, so the delegating parser turns each
+    // GROUPS frame into a ROWS frame whose ORDER BY ends in the
+    // __graft_groups() marker — one regex probe per statement without
+    // one. A post-hoc resolution rule rewrites every marked Window to
+    // dense_rank + RANGE frames; the check rule fails on a marker it
+    // could not place (a GROUPS frame without ORDER BY).
+    ext.injectParser((_, delegate) => new GroupsFrameParser(delegate))
+    ext.injectPostHocResolutionRule(_ => GroupsFrames)
+    ext.injectCheckRule(_ => GroupsFrames.checkNoMarker)
+    register(GroupsFrames.MarkerName, "__graft_groups() - GROUPS-frame marker (parser-internal)") {
+      _ => GroupsMarker()
+    }
 
     register("graft_rolling_hash",
       "graft_rolling_hash(str) - rolling polynomial hash (h*31+byte mod 1e9+7)") {

@@ -31,6 +31,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** The query subset named by `SPARK_GRAFT_ONLY` (comma-separated,
+    * blanks trimmed; None when unset, i.e. every query) — the one subset
+    * variable of Verify and Bench. Fails on an empty list or a name that
+    * is neither a catalog query nor one of `extra`. */
+  def only(extra: Set[String] = Set.empty): Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- catalog.map(_.name) -- extra
+      require(names.nonEmpty && unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY=$v names no query or unknown ones: ${unknown.mkString(",")}")
+      names
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.map(q => q.name -> q.run).toMap

@@ -9,12 +9,8 @@ object Verify {
     val spark = Engine.session(s"local[$cpus]", cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Optional subset for fast local iteration (tools/check.py --only).
-    val onlyFilter: String => Boolean =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet) match {
-        case Some(set) => set.contains
-        case None      => _ => true
-      }
-    SparkEntry.queries.filter(kv => onlyFilter(kv._1)).foreach { case (name, fn) =>
+    val only = SparkEntry.only()
+    SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -136,11 +136,9 @@ object WindowQueries {
       // The old spelling ran two window passes over the full corpus
       // with |statuses| = 3 sort tasks — parallelism bounded by the
       // partition key's cardinality (7.5× at 10× data; at 100 TB a
-      // 3-way sort of the corpus). q_window_groups_sql keeps the
-      // general two-window rewrite — it exercises the injected-parser
-      // GROUPS surface for arbitrary (incl. non-decomposable) frames;
-      // this twin is the scale path for decomposable aggregates, and
-      // CurationSpec pins its semantics against brute force.
+      // 3-way sort of the corpus). q_window_groups_sql reaches the same
+      // plan from raw GROUPS text; CurationSpec pins this twin's
+      // semantics against brute force.
       val o = t(s, d, "orders").select(col("o_orderkey"), col("o_orderstatus"),
         col("o_orderdate").cast("date").as("day"), col("o_totalprice"))
       val drW = Window.partitionBy("o_orderstatus").orderBy("day")
@@ -169,24 +167,21 @@ object WindowQueries {
         |    (PARTITION BY o_orderstatus ORDER BY dr
         |     RANGE BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS grp_sum
         |FROM r ORDER BY o_orderkey""".stripMargin)(
-      // The GROUPS frame in literal SQL TEXT (round-12 verdict item #5):
-      // graft.plans.GroupsFrames rewrites the statement into the
-      // dense_rank composition proven by q_window_groups_emul above; on
-      // Engine / wire-server sessions the SAME rewrite runs inside the
-      // parser (GraftExtensions.injectParser — EngineSpec pins raw-text
-      // parsing), so a JDBC client's GROUPS query runs verbatim. The
-      // vanilla gate session calls the rewrite explicitly because parser
-      // extensions attach at session build time. DuckDB 1.0 cannot parse
-      // GROUPS either, so the oracle spells the composition.
+      // The GROUPS frame in literal SQL TEXT (round-12 verdict item #5),
+      // run raw through the session's GROUPS support (GraftExtensions →
+      // graft.plans.GroupsFrames). Its SUM is decomposable, so it takes
+      // the peer-group cells form q_window_groups_emul hand-builds, and
+      // the same-keyed DENSE_RANK reads the cells' rank (PlanShapeSpec).
+      // DuckDB 1.0 cannot parse GROUPS, so the oracle spells the
+      // composition.
       Q.sqlRun("wgsql", "orders") { p =>
-        graft.plans.GroupsFrames.rewrite(
-          s"""SELECT o_orderkey, o_orderstatus,
-             |  CAST(DENSE_RANK() OVER (PARTITION BY o_orderstatus
-             |       ORDER BY CAST(o_orderdate AS DATE)) AS INT) AS dr,
-             |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER
-             |    (PARTITION BY o_orderstatus ORDER BY CAST(o_orderdate AS DATE)
-             |     GROUPS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS grp_sum
-             |FROM ${p}orders ORDER BY o_orderkey""".stripMargin)
+        s"""SELECT o_orderkey, o_orderstatus,
+           |  CAST(DENSE_RANK() OVER (PARTITION BY o_orderstatus
+           |       ORDER BY CAST(o_orderdate AS DATE)) AS INT) AS dr,
+           |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER
+           |    (PARTITION BY o_orderstatus ORDER BY CAST(o_orderdate AS DATE)
+           |     GROUPS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS grp_sum
+           |FROM ${p}orders ORDER BY o_orderkey""".stripMargin
       }),
 
     // --- frame EXCLUDE clauses (SQL:2011), emulated ---------------------

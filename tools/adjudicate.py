@@ -7,7 +7,7 @@ this automates it).
 Usage: tools/adjudicate.py BENCH_rNN.json SOLO_DUMP [--threshold 2.0]
 
 SOLO_DUMP is the bench_scratch.json dump of the flagged-queries-only run
-  SPARK_GRAFT_BENCH_ONLY=<names> SPARK_GRAFT_SF_DIR=... \
+  SPARK_GRAFT_ONLY=<names> SPARK_GRAFT_SF_DIR=... \
       tools/run_verify.sh graft.Bench
 (a subset run writes its full record, per-query map included, there;
 its stdout carries only the contract scalars).

@@ -122,7 +122,7 @@ def main():
         # the readings say nothing either way about the flagged plans.
         print(f"bench_flags: {load_flags} LOAD-attributed flag(s), none REAL? — "
               "MANDATORY: re-run the flagged queries on a quiet box "
-              "(SPARK_GRAFT_BENCH_ONLY=<names> tools/run_verify.sh graft.Bench) "
+              "(SPARK_GRAFT_ONLY=<names> tools/run_verify.sh graft.Bench) "
               "before treating this bench as green")
         sys.exit(2)
     sys.exit(1)

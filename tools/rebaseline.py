@@ -61,7 +61,7 @@ NEW_ROWS = {
     "q_cur_pack_stats": "round 11: packed-window manifest — per-window doc counts / segment resets / gap-free certification; per-doc explode into only overlapped windows + one seq_id agg",
     "q_cur_mad_outliers": "round 11: robust median/MAD outlier gate — exact integer order-stats on the value-distinct frame, one corpus count pass",
     "q_text_psi_bysource": "round 11: PSI drift matrix vs the reference source — hashed-256-bucket features, nano fixed-point terms on the model grid",
-    "q_window_groups_sql": "round 13: GROUPS frame in literal SQL text — GroupsFrames rewrite to the dense_rank composition (same plan shape as q_window_groups_emul: two window passes over one o_orderstatus shuffle)",
+    "q_window_groups_sql": "round 13: GROUPS frame in literal SQL text — since round 17 the peer-group cells form (per-(status, day) partial aggregate, dense_rank + RANGE windows over the cells, null-safe join back), the plan q_window_groups_emul hand-builds, reached by a Catalyst rule on the marked Window",
     "q_text_heavy_hitters_scaled": "round 13: self-sizing MG top-20 — escalates m ×4 until the bound certifies (log₄ bounded sketch passes, never a vocab shuffle); certifies at m₀=100 here, at m=400 on the 10× sf1 corpus where the fixed-m row refuses",
 }
 

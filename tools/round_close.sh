@@ -55,7 +55,7 @@ if [ -n "$BENCH_LATEST" ] && [ -f "$BENCH_LATEST" ]; then
     # stdout line is contract scalars only); clear it so a failed run
     # cannot be adjudicated from a stale dump
     rm -f bench_scratch.json
-    SPARK_GRAFT_BENCH_ONLY="$FLAGGED" \
+    SPARK_GRAFT_ONLY="$FLAGGED" \
       SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
       RUNS="${RUNS:-1}" tools/run_verify.sh graft.Bench \
       > /tmp/graft_adjudicate.out 2>/tmp/graft_adjudicate.err
