@@ -28,7 +28,6 @@ import scala.concurrent.{ExecutionContext, Future}
   * and runtime re-optimization — the reference's §3-§4 behavior.
   */
 class Engine(val spark: SparkSession) {
-  functions.GraftFunctions.register(spark)
 
   // ---- catalog ----------------------------------------------------------
 

@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.Qh
-
 /** Plan-audit utility: prints the formatted physical plan of catalog
   * queries. Usage: Explain [--exec] <sfDir> [queryName ...] (default: a
   * headline subset). */
@@ -18,14 +16,14 @@ object Explain {
     val names = if (rest.length > 1) rest.drop(1).toSeq
       else Seq("q1_pricing_summary", "q_join_inner_agg", "q_dedup_minhash",
         "q_ann_bruteforce", "q_topk")
-    val spark = Engine.session("local[4]", 4, "graft-explain")
+    val spark = SparkEntry.mainSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       if (exec)
-        Qh.executedPlans(spark)(SparkEntry.queries(n)(spark, sfDir)
+        QueryTrace.of(spark)(SparkEntry.queries(n)(spark, sfDir)
             .write.format("noop").mode("overwrite").save())
-          .zipWithIndex.foreach { case ((f, p), i) => println(s"---- execution $i: $f\n$p") }
+          ._2.plans.zipWithIndex.foreach { case ((f, p), i) => println(s"---- execution $i: $f\n$p") }
       else SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()

@@ -80,8 +80,7 @@ object ScaleUp {
     val reps = if (args.length > 2) args(2).toInt else 10
     val off = if (args.length > 3) args(3).toLong else Off
     val signSeed = if (args.length > 4) Some(args(4).toInt) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Engine.session(s"local[$cpus]", cpus, "graft-scaleup")
+    val spark = SparkEntry.mainSession("graft-scaleup")
 
     def write(name: String)(build: Int => DataFrame): Unit = {
       val out = (0 until reps).map(build).reduce(_ unionAll _)

@@ -44,6 +44,24 @@ object SparkEntry {
       names
     }
 
+  /** A main's [[Engine.session]]: `local[SPARK_GRAFT_CPUS]` and as many
+    * shuffle partitions, by default this machine's core count. */
+  def mainSession(appName: String): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    Engine.session(s"local[$cpus]", cpus, appName)
+  }
+
+  /** The data a main reads when given none: `SPARK_GRAFT_SF_DIR`, default sf0.1. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** `s` as a JSON string literal; a control character (a tab or newline
+    * in a catalog SQL text) becomes a four-hex-digit unicode escape. */
+  def jsonString(s: String): String = s.flatMap {
+    case c @ ('"' | '\\') => s"\\$c"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.map(q => q.name -> q.run).toMap

@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SqlShims.{column, expression}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType, TimestampType}
 
 /** Gap-fill scalar functions: the reference's `ScalarFunction` surface
   * (reference datafusion.proto:448-522) that Spark lacks a 1:1 built-in
@@ -9,46 +12,68 @@ import org.apache.spark.sql.functions._
   * Catalyst built-ins — no UDFs, so they stay inside WholeStageCodegen
   * and keep predicate pushdown intact. Scale note: every helper is a pure
   * per-row expression → embarrassingly parallel, no shuffle introduced.
+  * `date_bin`, `trunc_num`, `digest` and `strpos` are each one Catalyst
+  * tree builder: [[graft.GraftExtensions]] registers it as `graft_<name>`
+  * and the Column function of the same name wraps it.
   */
 object GraftFunctions {
 
   /** `date_bin(stride, ts, origin)` (reference datafusion.proto:516
     * DateBin): floor (ts - origin) to a multiple of `stride` seconds from
     * `origin`. Pure micros arithmetic → codegen'd. */
-  def date_bin(strideSeconds: Long, ts: Column, origin: Column): Column = {
-    val strideUs = lit(strideSeconds * 1000000L)
-    val o = unix_micros(origin)
-    timestamp_micros(
-      o + floor((unix_micros(ts) - o).cast("double") / strideUs).cast("long") * strideUs)
+  def dateBin(stride: Expression, ts: Expression, origin: Expression): Expression = {
+    // floor((unix_micros(ts) - o) / strideUs) * strideUs + o, in micros
+    val strideUs = Multiply(Cast(stride, LongType), Literal(1000000L))
+    val o = UnixMicros(Cast(origin, TimestampType))
+    val t = UnixMicros(Cast(ts, TimestampType))
+    val bins = Cast(Floor(Divide(
+      Cast(Subtract(t, o), DoubleType), Cast(strideUs, DoubleType))), LongType)
+    MicrosToTimestamp(Add(o, Multiply(bins, strideUs)))
   }
+  def date_bin(strideSeconds: Long, ts: Column, origin: Column): Column =
+    column(dateBin(Literal(strideSeconds), expression(ts), expression(origin)))
 
   /** Numeric `trunc(x, scale)` — truncate toward zero (reference
     * datafusion.proto:467 Trunc is numeric; Spark's 2-arg `trunc` is
     * date-oriented). Matches DuckDB/PostgreSQL trunc semantics. */
-  def trunc_num(x: Column, scale: Int): Column = {
-    val p = lit(math.pow(10.0, scale.toDouble))
-    val scaled = x * p
-    (when(x >= 0, floor(scaled)).otherwise(ceil(scaled)) / p).cast("double")
+  def truncNum(x0: Expression, scale: Expression): Expression = {
+    val x = Cast(x0, DoubleType)
+    val p = Pow(Literal(10.0), Cast(scale, DoubleType))
+    val scaled = Multiply(x, p)
+    Cast(Divide(
+      Cast(CaseWhen(
+        Seq((GreaterThanOrEqual(x, Literal(0.0)), Floor(scaled))),
+        Some(Ceil(scaled))), DoubleType),
+      p), DoubleType)
   }
+  def trunc_num(x: Column, scale: Int): Column = column(truncNum(expression(x), Literal(scale)))
 
   /** `digest(x, algo)` dispatch (reference datafusion.proto:455 Digest):
     * md5 / sha224 / sha256 / sha384 / sha512 by name. Algo is almost
-    * always a literal, so the `when` chain constant-folds. An unknown
+    * always a literal, so the case chain constant-folds. An unknown
     * algorithm raises (like DataFusion's digest) instead of silently
     * yielding NULL for every row. */
-  def digest(x: Column, algo: Column): Column =
-    when(algo.isNull, lit(null).cast("string")) // NULL algo propagates NULL like the other scalars
-      .when(lower(algo) === "md5", md5(x))
-      .when(lower(algo) === "sha224", sha2(x, 224))
-      .when(lower(algo) === "sha256", sha2(x, 256))
-      .when(lower(algo) === "sha384", sha2(x, 384))
-      .when(lower(algo) === "sha512", sha2(x, 512))
-      .otherwise(raise_error(concat(lit("unsupported digest algorithm: "), algo)))
+  def digest(x0: Expression, algo0: Expression): Expression = {
+    val x = Cast(x0, BinaryType)
+    val algo = Lower(Cast(algo0, StringType))
+    def is(a: String) = EqualTo(algo, Literal(a))
+    CaseWhen(
+      Seq(
+        (IsNull(algo), Literal(null, StringType)), // NULL algo → NULL, not an error
+        (is("md5"), Md5(x)),
+        (is("sha224"), Sha2(x, Literal(224))),
+        (is("sha256"), Sha2(x, Literal(256))),
+        (is("sha384"), Sha2(x, Literal(384))),
+        (is("sha512"), Sha2(x, Literal(512)))),
+      Some(Cast(RaiseError(Concat(Seq(
+        Literal("unsupported digest algorithm: "), algo))), StringType)))
+  }
+  def digest(x: Column, algo: Column): Column = column(digest(expression(x), expression(algo)))
 
   /** `strpos(s, sub)` (reference datafusion.proto:500): 1-based position
-    * of first occurrence, 0 if absent — Spark's `instr` builtin, resolved
-    * by name so both operands can be Columns. */
-  def strpos(s: Column, sub: Column): Column = call_function("instr", s, sub)
+    * of the first occurrence, 0 if absent. */
+  def strpos(s: Expression, sub: Expression): Expression = StringLocate(sub, s, Literal(1))
+  def strpos(s: Column, sub: Column): Column = column(strpos(expression(s), expression(sub)))
 
   /** `current_time` (reference datafusion.proto:519): Spark has no TIME
     * type; render HH:mm:ss like the reference's Arrow Time64 text form. */
@@ -66,13 +91,4 @@ object GraftFunctions {
   def to_timestamp_seconds(c: Column): Column = timestamp_seconds(c)
   def to_timestamp_millis(c: Column): Column = timestamp_millis(c)
   def to_timestamp_micros(c: Column): Column = timestamp_micros(c)
-
-  /** SQL-text access to these helpers is provided by
-    * [[graft.GraftExtensions]] (SparkSessionExtensions.injectFunction →
-    * `graft_rolling_hash`, `graft_date_bin`, `graft_trunc_num`,
-    * `graft_digest`, `graft_strpos`), all as codegen'd Catalyst
-    * expression compositions — never Scala UDFs, which would block
-    * codegen and pushdown. Kept for API compatibility; a no-op because
-    * registration happens at session build. */
-  def register(spark: SparkSession): Unit = ()
 }

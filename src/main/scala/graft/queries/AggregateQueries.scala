@@ -32,7 +32,7 @@ object AggregateQueries {
     * Round-16 decade rework: the original spelling (range-repartition
     * on (grp, ord) + spark_partition_id + a FULL-CORPUS localCheckpoint
     * to pin the sampled partition assignment across its two consumers)
-    * measured 10–14× at 10× data — graft.Profile attributed the wall to
+    * measured 10–14× at 10× data — a per-stage profile attributed the wall to
     * the checkpoint materialization of the whole fact table PLUS a
     * second full-corpus exchange, because the (pid, grp) window's hash
     * requirement cannot reuse a range partitioning. The slice id is now

@@ -3298,7 +3298,7 @@ object PipelineQueries {
       // dedup is ROW-LOCAL (array_distinct before the explode): every
       // doc's trigrams come from ONE input row, so a global distinct()
       // buys nothing — and at sf10 it was the query's wall
-      // (graft.Profile: a 300M-row dedup exchange spilling 13.5 GB,
+      // (per-stage profile: a 300M-row dedup exchange spilling 13.5 GB,
       // 80% of task time; the round-15 sf0.1 measurement that preferred
       // streamed explode + distinct() by 1.4× inverts completely once
       // the dedup hash map exceeds memory). Post-join, only trigrams in

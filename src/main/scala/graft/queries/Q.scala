@@ -1,15 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.graftshim.CoreShims
-import org.apache.spark.sql.execution.{ExplainUtils, QueryExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-
-import scala.jdk.CollectionConverters._
 
 /** One catalog entry: a Spark-first query plus (when SQL-expressible) the
   * equivalent DuckDB oracle SQL run by the driver's correctness gate.
@@ -108,35 +102,6 @@ object Qh {
     * PipelineRunner. */
   def materializedWith(inputs: DataFrame*)(result: => DataFrame): DataFrame =
     persisting(inputs: _*)(result.localCheckpoint(eager = true))
-
-  /** `(funcName, formatted final plan)` of every SQL execution `body`
-    * runs to completion, in order — a catalog row's eager
-    * `localCheckpoint`s included, whose plans its returned frame shows
-    * only as a checkpoint scan. The listener lives only for `body`: the
-    * listener bus is drained before it is registered and again after
-    * `body`, and it is unregistered in a finally, so executions run
-    * before or after `body` are not captured. The execution's adaptive
-    * plans print their final plan only (not also the initial one), so
-    * each operator it ran appears once; a cached relation's own plan,
-    * shown under each scan that reads it, prints as Spark formats it. */
-  def executedPlans(s: SparkSession)(body: => Any): Seq[(String, String)] = {
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val l = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        val sb = new StringBuilder
-        ExplainUtils.processPlan(
-          qe.executedPlan.transform { case a: AdaptiveSparkPlanExec => a.executedPlan },
-          (x: String) => sb.append(x): Unit)
-        got.add(f -> sb.toString): Unit
-      }
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    CoreShims.drainListenerBus(s.sparkContext)
-    s.listenerManager.register(l)
-    try { body; CoreShims.drainListenerBus(s.sparkContext) }
-    finally s.listenerManager.unregister(l)
-    got.asScala.toSeq
-  }
 
   /** Exact, order-independent sum of a double money column. */
   def dsum(c: Column): Column = sum(c.cast(D12)).cast(DoubleType)

@@ -139,7 +139,7 @@ private[queries] object SimJoin {
 
   /** `cand` (i, j, …) with both sides' payloads attached as `sha`/`shb`
     * from a (doc_id, sh) frame. HYBRID verify joins, each measured on the
-    * sf10 decade corpus (graft.Profile stage listener):
+    * sf10 decade corpus (per-stage profile):
     *  - join-on-i stays sort-merge: it sorts only SLIM inputs (16-byte
     *    candidate pairs; narrow doc rows), and its fat OUTPUT leaves
     *    sorted by i — consecutive rows repeat the same sha array, so the

@@ -14,10 +14,10 @@ object CoreShims {
     sc.conf.set(key, value): Unit
 
   /** Drain the listener bus (`private[spark]`): block until every event
-    * posted so far has been delivered to every listener. [[graft.Profile]]
-    * reads listener-built per-stage aggregates right after an action
-    * returns — without the drain, trailing stage-completion events land
-    * after the read (or after the clear, bleeding into the next run). */
+    * posted so far has been delivered to every listener. [[graft.QueryTrace]]
+    * reads what its listener built right after the traced call returns —
+    * without the drain, trailing stage and task events land after the
+    * read. */
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 }

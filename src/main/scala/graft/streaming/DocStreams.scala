@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.queries.Qh
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One document as it arrives on an ingestion stream (mirrors the
@@ -304,6 +304,29 @@ object DocStreams {
       .withColumn("keep",
         !col("has_replacement") && !col("has_control") && !col("high_nonascii"))
 
+  /** The windowed histogram the drift monitors score: `docs`' `ts` cast
+    * to a timestamp and watermarked, `bucketed` maps each row to (ts,
+    * keys…, bucket `b`), and each event-time window and key set gets its
+    * `buckets` counts as the array `h` — one conditional sum per bucket
+    * inside the ONE streaming aggregation, so the state per open window
+    * is `buckets` longs, no value lists — and their total `n`, next to
+    * `window_start` and the keys. */
+  private def windowHistogram(docs: DataFrame, buckets: Int, windowLen: String,
+      watermark: String, keys: String*)(bucketed: DataFrame => DataFrame): DataFrame = {
+    val hcols = (0 until buckets).map(i =>
+      sum(when(col("b") === i, 1L).otherwise(0L)).as(s"h$i"))
+    bucketed(docs.withColumn("ts", col("ts").cast("timestamp")).withWatermark("ts", watermark))
+      .groupBy(window(col("ts"), windowLen) +: keys.map(col): _*)
+      .agg(hcols.head, hcols.tail: _*)
+      .select((col("window.start").as("window_start") +: keys.map(col)) :+
+        array((0 until buckets).map(i => col(s"h$i")): _*).as("h"): _*)
+      .withColumn("n", expr("aggregate(h, 0L, (a, x) -> a + x)"))
+  }
+
+  /** The 64 fixed length buckets of the KS and Mann-Whitney monitors
+    * and their reference models. */
+  private def lengthBucket: Column = expr("least(length(text) div 64, 63)").as("b")
+
   /** ONE reference-corpus count pass over the 64 fixed length buckets —
     * the shared derivation of both frozen drift models ([[ksRefModel]]'s
     * CDF and [[mwRefModel]]'s histogram are driver-side folds of this
@@ -311,7 +334,7 @@ object DocStreams {
     * scan, not two). */
   private def refBucketCounts(corpus: DataFrame): Array[Long] = {
     val counts = corpus
-      .select(expr("least(length(text) div 64, 63)").as("b"))
+      .select(lengthBucket)
       .groupBy("b").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
     Array.tabulate(64)(i => counts.getOrElse(i, 0L))
@@ -334,8 +357,7 @@ object DocStreams {
     * event-time window's length distribution is KS-tested against the
     * FROZEN reference CDF (broadcast literal — the frozen-baseline
     * lambda shape of `EventStreams.anomalies`). The window histogram is
-    * 64 conditional sums inside the ONE streaming aggregation (state =
-    * 64 longs per open window — bounded, no value lists); the sup and
+    * [[windowHistogram]]'s 64 longs of state per window; the sup and
     * the asymptotic 95% reject bar are then ROW-LOCAL integer folds
     * over the finalized histogram, exactly q_agg_ks's integer-sup form
     * (D on the common refN·n denominator; reject bar squared to ppm).
@@ -350,17 +372,7 @@ object DocStreams {
       windowLen: String = "1 hour",
       watermark: String = "30 minutes"): DataFrame = {
     val refLit = refCum.mkString("array(", "L, ", "L)")
-    val hcols = (0 until 64).map(i =>
-      sum(when(col("b") === i, 1L).otherwise(0L)).as(s"h$i"))
-    docs
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .select(col("ts"), expr("least(length(text) div 64, 63)").as("b"))
-      .groupBy(window(col("ts"), windowLen))
-      .agg(hcols.head, hcols.tail: _*)
-      .select(col("window.start").as("window_start"),
-        array((0 until 64).map(i => col(s"h$i")): _*).as("h"))
-      .withColumn("n", expr("aggregate(h, 0L, (a, x) -> a + x)"))
+    windowHistogram(docs, 64, windowLen, watermark)(_.select(col("ts"), lengthBucket))
       .withColumn("d_num", expr(
         s"""aggregate(sequence(0, 63),
            |  named_struct('cum', 0L, 'best', 0L),
@@ -434,18 +446,7 @@ object DocStreams {
     val refLit = refCnt.mkString("array(", "L, ", "L)")
     val refCumB = refCnt.scanLeft(0L)(_ + _).dropRight(1) // pooled-before, ref side
       .mkString("array(", "L, ", "L)")
-    val hcols = (0 until 64).map(i =>
-      sum(when(col("b") === i, 1L).otherwise(0L)).as(s"h$i"))
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    docs
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .select(col("ts"), expr("least(length(text) div 64, 63)").as("b"))
-      .groupBy(window(col("ts"), windowLen))
-      .agg(hcols.head, hcols.tail: _*)
-      .select(col("window.start").as("window_start"),
-        array((0 until 64).map(i => col(s"h$i")): _*).as("h"))
-      .withColumn("n", expr("aggregate(h, 0L, (a, x) -> a + x)"))
+    windowHistogram(docs, 64, windowLen, watermark)(_.select(col("ts"), lengthBucket))
       // doubled tie-averaged rank sum of the window group over the
       // pooled 64-bucket support: one row-local integer fold
       .withColumn("r1x2", expr(
@@ -527,20 +528,11 @@ object DocStreams {
       windowLen: String = "1 hour",
       watermark: String = "30 minutes"): DataFrame = {
     val refLit = refCnt.mkString("array(", "L, ", "L)")
-    val hcols = (0 until 256).map(i =>
-      sum(when(col("b") === i, 1L).otherwise(0L)).as(s"h$i"))
-    docs
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("source"),
-        explode(split(col("text"), " ")).as("g"))
-      .select(col("ts"), col("source"),
-        (graft.functions.RollingHash.rolling_hash(col("g")) % 256).as("b"))
-      .groupBy(window(col("ts"), windowLen), col("source"))
-      .agg(hcols.head, hcols.tail: _*)
-      .select(col("window.start").as("window_start"), col("source"),
-        array((0 until 256).map(i => col(s"h$i")): _*).as("h"))
-      .withColumn("n_tokens", expr("aggregate(h, 0L, (a, x) -> a + x)"))
+    windowHistogram(docs, 256, windowLen, watermark, "source") {
+      _.select(col("ts"), col("source"), explode(split(col("text"), " ")).as("g"))
+        .select(col("ts"), col("source"),
+          (graft.functions.RollingHash.rolling_hash(col("g")) % 256).as("b"))
+    }.withColumnRenamed("n", "n_tokens")
       // 1.0D/256.0D: in SQL text a bare `1.0` is a DECIMAL literal, and
       // decimal division rounds differently from the batch query's
       // double arithmetic — the D suffix keeps every term in the exact

@@ -659,8 +659,8 @@ class AnalyticsSpec extends GraftSuite {
     // the result is built while the quantized corpus is still cached;
     // a lazy result would re-read and re-quantize `embeddings` here
     val df = SparkEntry.queries("q_embed_pca_power")(spark, sf)
-    val ps = graft.queries.Qh.executedPlans(spark)(
-      df.write.format("noop").mode("overwrite").save())
+    val ps = QueryTrace.of(spark)(
+      df.write.format("noop").mode("overwrite").save())._2.plans
     assert(ps.nonEmpty)
     assert(!ps.last._2.contains("Scan parquet"), ps.last._2)
   }

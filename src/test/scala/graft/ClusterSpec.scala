@@ -85,55 +85,32 @@ class ClusterSpec extends GraftSuite with BeforeAndAfterAll {
     // query whose execution runs a graft custom aggregate —
     // TypedImperativeAggregate/Aggregator serde is exactly the code
     // whose bugs only surface cross-JVM — and the list must come from
-    // the PLANS, not a hand-list. A QueryExecutionListener watches
-    // every action the single-JVM reference pass fires (including the
-    // eager-checkpoint inner pipelines, whose aggregates never appear
-    // in the public checkpoint-scan plan) and marks the query if any
-    // analyzed plan carries an aggregate function from the graft
-    // package (TypedImperativeAggregate subclasses directly;
-    // `udaf`-registered Aggregators via the ScalaAggregator wrapper's
-    // toString, which embeds the aggregator's class name).
-    val hit = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val sniffer = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def isGraft(
-          e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = e match {
-        case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression =>
-          val af = ae.aggregateFunction
-          // direct TypedImperativeAggregate subclasses by class name;
-          // udaf-wrapped Aggregators hide inside ScalaAggregator, whose
-          // constructor params (productIterator) carry the graft
-          // Aggregator instance
-          af.getClass.getName.startsWith("graft.") ||
-            af.productIterator.exists(v =>
-              v != null && v.getClass.getName.startsWith("graft."))
-        case _ => false
-      }
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        if (qe.analyzed.collectWithSubqueries {
-          case p if p.expressions.exists(_.exists(isGraft)) => ()
-        }.nonEmpty) hit.set(true)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    // the PLANS, not a hand-list. A row is marked if the analyzed plan of
+    // any execution its QueryTrace records (eager-checkpoint inner
+    // pipelines included) carries a graft aggregate: a graft.*
+    // TypedImperativeAggregate, or a `udaf` ScalaAggregator whose
+    // constructor params carry a graft Aggregator.
+    def graftClass(v: Any): Boolean = v != null && v.getClass.getName.startsWith("graft.")
+    def isGraft(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = e match {
+      case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression =>
+        graftClass(ae.aggregateFunction) || ae.aggregateFunction.productIterator.exists(graftClass)
+      case _ => false
     }
-    spark.listenerManager.register(sniffer)
     val scanned: Seq[(String, Boolean, Seq[String], Boolean)] =
       SparkEntry.catalog.map { q =>
-        hit.set(false)
-        val rows = SparkEntry.queries(q.name)(spark, sf)
-          .collect().map(_.toString).sorted.toSeq
-        // listener events are async on the shared bus — drain before
-        // reading the flag (same discipline as graft.Profile)
-        org.apache.spark.graftshim.CoreShims.drainListenerBus(spark.sparkContext)
+        val (rows, tr) = QueryTrace.of(spark)(SparkEntry.queries(q.name)(spark, sf)
+          .collect().map(_.toString).sorted.toSeq)
+        val hit = tr.executions.exists(_.qe.analyzed.collectWithSubqueries {
+          case p if p.expressions.exists(_.exists(isGraft)) => ()
+        }.nonEmpty)
         // a cache still registered here outlived its row; clear it so
         // the next row is judged on its own
         val leftCache = !spark.sharedState.cacheManager.isEmpty
         if (leftCache) spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        (q.name, hit.get(), rows, leftCache)
+        (q.name, hit, rows, leftCache)
       }
-    spark.listenerManager.unregister(sniffer)
     cacheLeftBy = scanned.collect { case (n, _, _, true) => n }
     customAggQueries = scanned.collect { case (n, true, _, _) => n }
     multiJvmQueries = (familyReps ++ customAggQueries).distinct

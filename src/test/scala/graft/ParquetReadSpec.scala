@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graftshim.CoreShims
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -25,30 +22,6 @@ class ParquetReadSpec extends GraftSuite {
     val spark0 = spark.read.parquet(p).schema
     assert(ours == spark0, s"$p:\n  footer   $ours\n  inferred $spark0")
     assert(ours.json == spark0.json, p)
-  }
-
-  /** `f`'s result and the Spark jobs it launched on this thread (tagged
-    * by a job group, so jobs other threads run meanwhile are not counted). */
-  private def withJobCount[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"parquet-read-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    CoreShims.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ParquetReadSpec job count")
-    val out =
-      try f
-      finally {
-        sc.clearJobGroup()
-        CoreShims.drainListenerBus(sc)
-        sc.removeSparkListener(listener)
-      }
-    (out, jobs.get())
   }
 
   test("footer schema equals spark.read.parquet's for every table at three scale factors") {
@@ -79,8 +52,8 @@ class ParquetReadSpec extends GraftSuite {
   test("Tables.df and a fully resumed 3-stage PipelineRunner.run launch no Spark job") {
     val table = s"$sf/lineitem.parquet"
     // the control: Spark's own inference does launch a job for the footer
-    assert(withJobCount(spark.read.parquet(table))._2 >= 1)
-    assert(withJobCount(Tables.all.map(Tables.df(spark, sf, _)))._2 == 0)
+    assert(QueryTrace.of(spark)(spark.read.parquet(table))._2("jobs") >= 1)
+    assert(QueryTrace.of(spark)(Tables.all.map(Tables.df(spark, sf, _)))._2("jobs") == 0)
 
     val root = Files.createTempDirectory("graft_pipe_jobless").toString
     val stages: Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -89,9 +62,9 @@ class ParquetReadSpec extends GraftSuite {
       "daily" -> (_.groupBy("l_shipdate").agg(count(lit(1)).as("n"))))
     val (first, computed) = PipelineRunner.run(spark, root, Tables.df(spark, sf, "lineitem"), stages)
     assert(computed.computed.size == 3)
-    val ((resumed, report), jobs) =
-      withJobCount(PipelineRunner.run(spark, root, Tables.df(spark, sf, "lineitem"), stages))
-    assert(jobs == 0)
+    val ((resumed, report), tr) =
+      QueryTrace.of(spark)(PipelineRunner.run(spark, root, Tables.df(spark, sf, "lineitem"), stages))
+    assert(tr("jobs") == 0)
     assert(report.loaded == stages.map(_._1) && report.computed.isEmpty)
     assert(resumed.schema == first.schema)
     assert(resumed.count() == first.count())
@@ -100,8 +73,8 @@ class ParquetReadSpec extends GraftSuite {
   test("Engine.createExternalTable pins a flat parquet schema without a Spark job") {
     val engine = new Engine(spark)
     val table = s"$sf/orders.parquet"
-    val (df, jobs) = withJobCount(engine.createExternalTable("prs_orders", table))
-    assert(jobs == 0)
+    val (df, tr) = QueryTrace.of(spark)(engine.createExternalTable("prs_orders", table))
+    assert(tr("jobs") == 0)
     assert(df.schema == spark.read.parquet(table).schema)
     // a partitioned location keeps Spark's partition discovery
     val parts = Files.createTempDirectory("graft_ext_parts").resolve("t").toString

@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.Qh
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -21,7 +20,7 @@ class PlanShapeSpec extends GraftSuite {
     * included, which its public plan shows only as a checkpoint scan.
     * Absence pins hold on all of them; presence and count pins name one. */
   private def built(name: String): Seq[(String, String)] =
-    Qh.executedPlans(spark)(SparkEntry.queries(name)(spark, sf))
+    QueryTrace.of(spark)(SparkEntry.queries(name)(spark, sf))._2.plans
 
   private def lastCheckpoint(ps: Seq[(String, String)]): String =
     ps.filter(_._1 == "localCheckpoint").lastOption.map(_._2)
@@ -30,26 +29,14 @@ class PlanShapeSpec extends GraftSuite {
   private def noneContains(ps: Seq[(String, String)], bad: String*): Unit =
     for ((f, p) <- ps; b <- bad) assert(!p.contains(b), s"$b in a $f execution:\n$p")
 
-  test("Qh.executedPlans captures exactly the executions its body runs") {
+  test("QueryTrace captures exactly the executions its body runs") {
     spark.range(10).collect()
-    val ps = Qh.executedPlans(spark)(SparkEntry.queries("q_cur_pack_sequences")(spark, sf))
+    val ps = built("q_cur_pack_sequences")
     spark.range(10).collect()
     // only the row's own localCheckpoint, with the plan its public plan
     // hides — neither the collect before the body nor the one after it
     assert(ps.map(_._1) == Seq("localCheckpoint"), ps.map(_._1))
     assert(ps.head._2.contains("hashpartitioning(pid"), ps.head._2)
-    // the listener is gone after a body that throws (listListeners is
-    // private[sql] to Scala, public in bytecode)
-    def listeners = classOf[org.apache.spark.sql.util.ExecutionListenerManager]
-      .getMethod("listListeners").invoke(spark.listenerManager)
-      .asInstanceOf[Array[_]].length
-    val n = listeners
-    intercept[IllegalStateException](Qh.executedPlans(spark) {
-      assert(listeners == n + 1)
-      spark.range(3).collect()
-      throw new IllegalStateException("body failed")
-    })
-    assert(listeners == n)
   }
 
   test("q_topk fuses sort+limit into TakeOrderedAndProject (no global sort)") {
@@ -124,7 +111,7 @@ class PlanShapeSpec extends GraftSuite {
     // the pair pipeline runs only inside the LSH artifact build — capture
     // the timed rebuild (the bench's q_dedup_minhash_build row) and pin
     // its `pairs` write
-    val ps = Qh.executedPlans(spark)(graft.queries.PipelineQueries.rebuildLshIndex(spark, sf))
+    val ps = QueryTrace.of(spark)(graft.queries.PipelineQueries.rebuildLshIndex(spark, sf))._2.plans
     noneContains(ps, "CartesianProduct")
     val p = ps.map(_._2).find(_.contains("/pairs,"))
       .getOrElse(fail(s"no pairs write among ${ps.size} executions"))

@@ -24,7 +24,7 @@ class QhSpec extends GraftSuite {
   test("a materializedWith row runs exactly one localCheckpoint") {
     // a body's own localCheckpoint would add a second one scanning the first
     for (q <- Seq("q_agg_ks_bysource", "q_cur_quantile_norm")) {
-      val ps = Qh.executedPlans(spark)(SparkEntry.queries(q)(spark, sf))
+      val ps = QueryTrace.of(spark)(SparkEntry.queries(q)(spark, sf))._2.plans
       assert(ps.count(_._1 == "localCheckpoint") == 1, s"$q: ${ps.map(_._1)}")
     }
   }
@@ -47,8 +47,8 @@ class QhSpec extends GraftSuite {
   }
 
   test("Q.scala holds the only persist/cache/unpersist calls in src/main") {
-    // the Bench and Profile sweeps drop localCheckpoint blocks between
-    // rows; they free no Dataset cache
+    // the Bench sweep drops localCheckpoint blocks between rows; it
+    // frees no Dataset cache
     val call = """\.persist\(|\.cache\(\)|\.unpersist\(""".r
     val hits = SparkTestBase.mainSources
       .filter(_._1 != "graft/queries/Q.scala")
@@ -56,7 +56,6 @@ class QhSpec extends GraftSuite {
         src.linesIterator.filter(call.findFirstIn(_).nonEmpty).map(l => f -> l.trim)
       }
     val sweep = ".foreach(_.unpersist(blocking = false))"
-    assert(hits == Seq("graft/Bench.scala" -> sweep, "graft/Bench.scala" -> sweep,
-      "graft/Profile.scala" -> sweep), hits.mkString("\n"))
+    assert(hits == Seq("graft/Bench.scala" -> sweep), hits.mkString("\n"))
   }
 }

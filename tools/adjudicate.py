@@ -7,10 +7,11 @@ this automates it).
 Usage: tools/adjudicate.py BENCH_rNN.json SOLO_DUMP [--threshold 2.0]
 
 SOLO_DUMP is the bench_scratch.json dump of the flagged-queries-only run
-  SPARK_GRAFT_ONLY=<names> SPARK_GRAFT_SF_DIR=... \
+  SPARK_GRAFT_ONLY=<names> SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_BENCH_RUNS=1 \
       tools/run_verify.sh graft.Bench
-(a subset run writes its full record, per-query map included, there;
-its stdout carries only the contract scalars).
+(one timed run per query, as tools/round_close.sh runs it; a subset run
+writes its full record, per-query map included, there; its stdout
+carries only the contract scalars).
 
 Each flagged query's verdict, written into the bench JSON under
 "adjudication" and printed:

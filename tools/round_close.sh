@@ -57,7 +57,7 @@ if [ -n "$BENCH_LATEST" ] && [ -f "$BENCH_LATEST" ]; then
     rm -f bench_scratch.json
     SPARK_GRAFT_ONLY="$FLAGGED" \
       SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-      RUNS="${RUNS:-1}" tools/run_verify.sh graft.Bench \
+      SPARK_GRAFT_BENCH_RUNS="${SPARK_GRAFT_BENCH_RUNS:-1}" tools/run_verify.sh graft.Bench \
       > /tmp/graft_adjudicate.out 2>/tmp/graft_adjudicate.err
     if ! python3 tools/adjudicate.py "$BENCH_LATEST" bench_scratch.json; then
       echo "round-close: CONFIRMED regression(s) — fix or re-record before closing"
